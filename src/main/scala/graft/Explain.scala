@@ -1,30 +1,21 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: print the formatted physical plan of one query and time
-  * its execution. Usage: runMain graft.Explain <queryName> [sfDir] */
+  * its execution, in the session and with the timed action the benchmark
+  * uses: [[GraftSession.local]], and a write to the `noop` sink, which
+  * computes every output column (`count()` would prune unused ones).
+  * Usage: runMain graft.Explain <queryName> [sfDir] */
 object Explain {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftPlans.install(spark)
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     val df = SparkEntry.queries(name)(spark, sfDir)
     df.explain("formatted")
     (1 to 3).foreach { i =>
       val t0 = System.nanoTime()
-      val n = df.count()
-      println(f"[explain] run$i: ${(System.nanoTime() - t0) / 1e9}%.2fs rows=$n")
+      df.write.format("noop").mode("overwrite").save()
+      println(f"[explain] run$i: ${(System.nanoTime() - t0) / 1e9}%.2fs")
     }
     spark.stop()
   }

@@ -62,11 +62,13 @@ object Bloom {
       a
     }
     override def finish(b: Array[Long]): Array[Long] = b
-    override def bufferEncoder: Encoder[Array[Long]] =
-      ExpressionEncoder[Array[Long]]()
-    override def outputEncoder: Encoder[Array[Long]] =
-      ExpressionEncoder[Array[Long]]()
+    override def bufferEncoder: Encoder[Array[Long]] = WordsEncoder
+    override def outputEncoder: Encoder[Array[Long]] = WordsEncoder
   }
+
+  /** Derived by Scala reflection once per JVM, not per call: each task
+    * deserializes its own [[BloomAgg]] and asks it for both encoders. */
+  private val WordsEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
 
   /** Build the filter over `keys(keyCol)` in one distributed pass and
     * collect it (numBits/8 bytes — a driver artifact like the PQ

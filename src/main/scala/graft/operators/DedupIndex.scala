@@ -496,7 +496,10 @@ object DedupIndex {
       case Some(f) => bfp.where(Bloom.mightContain(col("fp"), f))
       case None => bfp
     }
-    val anyCandidate = bloomed.isEmpty || candFps.limit(1).count() > 0
+    // keep the limit at the plan root: below it (`limit(1).count()`) the
+    // generated code carries a per-plan limit counter, so the probe's
+    // stage would be compiled again on every call
+    val anyCandidate = bloomed.isEmpty || !candFps.isEmpty
     val exactHits =
       if (!anyCandidate)
         // optimizes to an empty LocalRelation — no fps scan in the plan

@@ -3,14 +3,17 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for specs (one per suite via lazy val). */
+/** Shared local SparkSession for specs (one per suite via lazy val). It
+  * takes the library's codegen settings ([[GraftSession.codegenReuse]]):
+  * the forked test JVM holds one SparkContext, and Spark fixes the codegen
+  * cache size the first time it compiles, so this builder decides it. */
 trait SparkSpec { self: AnyFunSuite =>
   lazy val spark: SparkSession = SparkSpec.session
 }
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
+    val s = GraftSession.codegenReuse(SparkSession.builder())
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
