@@ -73,8 +73,8 @@ object GraftSession {
     .config("spark.sql.artifact.isolation.enabled", "false")
     .config("spark.sql.codegen.cache.maxEntries", "256")
 
-  /** The harness session every main (Bench/Verify/PlanDump/MicroBench/
-    * ProbeJobs) runs: [[recommended]] plus the LOCAL-HARNESS bits that a
+  /** The harness session that `graft.Verify` and every `graft.Bench`
+    * subcommand run: [[recommended]] plus the LOCAL-HARNESS bits that a
     * production caller would own instead — `local[cpus]` master with
     * `shuffle.partitions = cpus` (the driver's scaling contract:
     * $SPARK_GRAFT_CPUS governs both), the legacy nanos flag for the

@@ -14,23 +14,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the dedup-regime near-dup stage: 2 000 vector groups × C(10,2)
   * verbatim cosine-1.0 pairs = exactly 90 000).
   *
-  * Run (tools/ is outside the compile path on purpose):
-  *   cp tools/ScaleSmoke.scala src/main/scala/graft/ &&
-  *   sbt "runMain graft.ScaleSmoke" ; rm src/main/scala/graft/ScaleSmoke.scala
+  * Run: `sbt "runMain graft.Bench smoke <mode>"` over
+  * `$SPARK_GRAFT_SF_DIR` (sf0.1 by default), where `10x` is the smoke
+  * above and the other [[Modes]] are described where they run.
   * Timings are recorded in COVERAGE.md ("Scale smoke" section).
   */
 object ScaleSmoke {
-  def main(args: Array[String]): Unit = {
-    val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
+  val Modes = Seq("10x", "100x", "bpe32k", "unigram32k", "bpe", "epochs", "epochs1k")
+
+  def run(spark: SparkSession, sfDir: String, mode: String): Unit = {
     val copies = 10
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     import graft.operators.Dedup
 
     // ---- 100× graduation (round 9): the persisted-index and strict-
@@ -39,8 +32,8 @@ object ScaleSmoke {
     // are quadratic in verbatim copies (C(100,2) pairs per base group);
     // these two paths are the ones whose scale story rests on pruning
     // and copy-collapse, so they graduate alone:
-    //   sbt "runMain graft.ScaleSmoke /root/testdata/sf0.1 100x"
-    if (args.contains("100x")) {
+    //   sbt "runMain graft.Bench smoke 100x"
+    if (mode == "100x") {
       val c100 = 100
       def timesN(df: DataFrame, idCol: String): DataFrame =
         (0 until c100).map(i => df.withColumn(idCol,
@@ -435,7 +428,6 @@ object ScaleSmoke {
         pairs.unpersist()
         n
       }
-      spark.stop()
       return
     }
 
@@ -445,8 +437,8 @@ object ScaleSmoke {
     // stay ≤ ~40; then the serve side: BpeEncode (the one-plan-node
     // rank-loop expression) encodes the 10× sf0.1 word stream with the
     // full 32 k vocabulary and the throughput is recorded.
-    //   sbt "runMain graft.ScaleSmoke /root/testdata/sf0.1 bpe32k"
-    if (args.contains("bpe32k")) {
+    //   sbt "runMain graft.Bench smoke bpe32k"
+    if (mode == "bpe32k") {
       import graft.operators.Bpe
       val k = 32000
       val corpus = spark.range(60000).select(
@@ -497,7 +489,6 @@ object ScaleSmoke {
       require(toks >= nWords, "token count can never shrink below words")
       require(rate > 100000,
         f"32k-vocab encode throughput collapsed: $rate%.0f words/s")
-      spark.stop()
       return
     }
 
@@ -510,8 +501,8 @@ object ScaleSmoke {
     // serve side (UnigramEncode, one reference-object plan node at any
     // vocabulary size) sustains real throughput on the 10× sf0.1 word
     // stream with the full 32 k vocabulary.
-    //   sbt "runMain graft.ScaleSmoke /root/testdata/sf0.1 unigram32k"
-    if (args.contains("unigram32k")) {
+    //   sbt "runMain graft.Bench smoke unigram32k"
+    if (mode == "unigram32k") {
       import graft.operators.Unigram
       val v = 32000
       val corpus = spark.range(60000).select(
@@ -552,7 +543,6 @@ object ScaleSmoke {
       require(pieces >= 1, "serve pass must produce pieces")
       require(rate > 100000,
         f"32k-vocab Viterbi throughput collapsed: $rate%.0f words/s")
-      spark.stop()
       return
     }
 
@@ -563,8 +553,8 @@ object ScaleSmoke {
     // 1..97 tie-heavy count profile). Asserts the judge target: 8000
     // merges in <= 20 driver rounds, each round ONE histogram aggregate
     // + one bounded collect.
-    //   sbt "runMain graft.ScaleSmoke /root/testdata/sf0.1 bpe"
-    if (args.contains("bpe")) {
+    //   sbt "runMain graft.Bench smoke bpe"
+    if (mode == "bpe") {
       import graft.operators.Bpe
       val corpus = spark.range(60000).select(
           substring(md5(col("id").cast("string")), 1, 8).as("w"),
@@ -586,7 +576,6 @@ object ScaleSmoke {
         f"$rounds rounds, $secs%.1f s")
       require(merges.size == 8000, s"expected 8000 merges: ${merges.size}")
       require(rounds <= 20, s"expected <= 20 driver rounds: $rounds")
-      spark.stop()
       return
     }
 
@@ -600,8 +589,8 @@ object ScaleSmoke {
     // near-flat as 200 epochs accrete, and (c) compact folds the
     // 200-epoch layout to row-sized files with check verdicts
     // byte-identical across the swap.
-    //   sbt "runMain graft.ScaleSmoke /root/testdata/sf0.1 epochs"
-    if (args.contains("epochs")) {
+    //   sbt "runMain graft.Bench smoke epochs"
+    if (mode == "epochs") {
       import graft.operators.DedupIndex
       import graft.streaming.StreamIndexDedup
       val nEpochs = 200
@@ -657,7 +646,6 @@ object ScaleSmoke {
       require(sh1 <= 3 && cn1 <= 3 && fp1 <= 3,
         s"compact must fold to row-sized files: $sh1/$cn1/$fp1")
       println(s"epoch smoke OK: ${before.length} probe verdicts stable")
-      spark.stop()
       return
     }
 
@@ -673,8 +661,8 @@ object ScaleSmoke {
     // documented non-transactional-sink tolerance). The unfolded-epoch
     // byte-identical replay is pinned at spec scale in DedupIndexSpec
     // (here every epoch is folded by the final boundary compact).
-    //   sbt "runMain graft.ScaleSmoke /root/testdata/sf0.1 epochs1k"
-    if (args.contains("epochs1k")) {
+    //   sbt "runMain graft.Bench smoke epochs1k"
+    if (mode == "epochs1k") {
       import graft.operators.DedupIndex
       import graft.streaming.StreamIndexDedup
       val nEpochs = 1000
@@ -753,7 +741,6 @@ object ScaleSmoke {
         "verdicts must be byte-identical across the straddling replay")
       println(s"epochs1k smoke OK: ${before.length} probe verdicts stable; " +
         s"epoch-57 straddle replay kept ${replay57.size}/${sinkKept(57).size}")
-      spark.stop()
       return
     }
 
@@ -1396,6 +1383,5 @@ object ScaleSmoke {
         s"probe must prune the codes scan: read $read of $total files")
       n
     }
-    spark.stop()
   }
 }

@@ -50,9 +50,10 @@ object Tables {
   def region(spark: SparkSession, d: String): DataFrame = table(spark, d, "region")
   /** `events.ts` arrives in one of two generations of the driver's
     * testdata: parquet TIMESTAMP(NANOS) (readable only with
-    * `spark.sql.legacy.parquet.nanosAsLong=true`, set in Verify/Bench/test
-    * sessions — converted ns→µs with integer `div`, since ns-since-epoch
-    * exceeds double's exact range), or plain naive `timestamp[us]`, which
+    * `spark.sql.legacy.parquet.nanosAsLong=true`, set by
+    * `GraftSession.local` and the test session — converted ns→µs with
+    * integer `div`, since ns-since-epoch exceeds double's exact range), or
+    * plain naive `timestamp[us]`, which
     * Spark 4 reads as TIMESTAMP_NTZ and which passes through untouched so
     * `ts` predicates stay plain column comparisons the parquet scan can
     * prune on. Sessions run with `spark.sql.session.timeZone=UTC`, so
