@@ -703,7 +703,7 @@ object PipelineQueries {
     // slice here too (un-checkpointed, every reference to the batch
     // inside the epoch plan — fingerprints, shingles, kept output —
     // re-ran the full Gopher scan: 3-4 regex passes per epoch)
-    // widenNarrow + checkpoint the RAW slice: the Gopher gate + scrub +
+    // widen + checkpoint the RAW slice: the Gopher gate + scrub +
     // token count are scan-side regexes, and the one-row-group test
     // corpus hands each eighth to ONE task (measured 2.9 s for the
     // first slice, serial). The checkpoint after the widen is the
@@ -714,7 +714,7 @@ object PipelineQueries {
     // MATERIALIZED with the source's partitioning. The operator under
     // test (curateStateless) is unchanged.
     def curated(m: Int): DataFrame = StreamCurate.curateStateless(
-        graft.operators.Dedup.widenNarrow(
+        graft.operators.Widen.widen(
           docs(s, d).where(col("doc_id") % 8 === m).select("doc_id", "text"))
           .localCheckpoint(),
         "text", gopher)

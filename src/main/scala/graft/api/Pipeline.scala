@@ -3,7 +3,7 @@ package graft.api
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, Sampling, TextStats}
+import graft.operators.{Dedup, Sampling, TextStats, Widen}
 
 /** Library facade for the training-data curation flow — the composition
   * a pipeline user actually runs, end to end:
@@ -41,9 +41,9 @@ object Pipeline {
       s"columns ${clash.mkString(", ")} collide with curate internals/outputs — alias them")
     // widen a narrow source ONCE at the chain's entry: the fingerprint,
     // quality and scrub regexes all evaluate scan-side, and a single-
-    // row-group corpus file would hand them all to one task (round-15,
-    // the Dedup.widenNarrow rationale; no-op at scale)
-    val docsW = Dedup.widenNarrow(docs)
+    // row-group corpus file would hand them all to one task (see
+    // Widen.widen; no-op at scale)
+    val docsW = Widen.widen(docs)
     val fp = TextStats.fingerprint(col(textCol))
     // exact dedup: keep the smallest id per fingerprint (one aggregate,
     // then a semi-join shaped as an inner join on (fp, id))
@@ -116,7 +116,7 @@ object Pipeline {
     require(clash.isEmpty,
       s"columns ${clash.mkString(", ")} collide with curate internals/outputs — alias them")
     // see curate: widen a narrow source once at the chain's entry
-    val docsW = Dedup.widenNarrow(docs)
+    val docsW = Widen.widen(docs)
     val fp = TextStats.fingerprint(col(textCol))
     val keepers = docsW.groupBy(fp.as("_fp")).agg(min(col(idCol)).as(idCol))
     val deduped = docsW.withColumn("_fp", fp)

@@ -109,53 +109,16 @@ object Dedup {
         (if (portable) Sampling.hash60(col("s")) else xxhash64(col("s"))).as("h"))
       .distinct()
 
-  /** Round-robin widen when the source is NARROWER than the session's
-    * parallelism — the [[Similarity.widen]] discipline generalized
-    * (round-15): per-row tokenize/regex work runs on the SCAN side, and
-    * a small or single-row-group parquet source hands the whole corpus
-    * to ONE task, serializing every expensive expression above it
-    * (measured: the full-corpus word-regex pass ran 1-task, ~2 s of a
-    * 6-9 s query at sf0.1). At scale the scan has natural parallelism
-    * (partitions ≥ cores) and this is a NO-OP — no exchange is added.
-    * Round-robin repartition is deterministic under task retries
-    * (sortBeforeRepartition, on by default), and every consumer in this
-    * package is partition-order independent, so results are unchanged. */
-  private[graft] def widenNarrow(df: DataFrame): DataFrame = {
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= par) df else df.repartition(par)
-  }
-
-  /** [[widenNarrow]] keyed: hash-repartition a NARROW source by the
-    * grouping key the next aggregate/window uses, with an EXPLICIT
-    * partition count so AQE cannot fold it back to one task — the
-    * downstream keyed operator then REUSES the partitioning (no second
-    * exchange), the exchange ships raw rows instead of the exploded
-    * rows the keyed operator's own exchange would ship, and the per-row
-    * regex above it runs parallel. No-op at scale, like widenNarrow. */
-  private[graft] def widenNarrowBy(df: DataFrame, key: Column): DataFrame = {
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= par) df else df.repartition(par, key)
-  }
-
   /** Shared tokenization: NON-distinct (id, shingle-string) rows — the
     * single source of truth for the posexplode + window-lead stitching
-    * that both the string and hashed shingle forms derive from.
-    *
-    * Round-15 widening: a NARROW source (fewer partitions than cores —
-    * the single-row-group test corpus, never a real table) is hash-
-    * repartitioned BY DOC ID before the explode, with an explicit
-    * partition count so AQE cannot fold it back to one task. This moves
-    * the word regex behind the exchange (parallel) and the exchange
-    * itself carries RAW text instead of the exploded word rows the
-    * window's own exchange otherwise ships — fewer shuffle bytes AND a
-    * parallel regex; the per-doc window then REUSES the id partitioning
-    * (no second exchange). A round-robin widen was measured WORSE
-    * (q_d10 7.9 → 8.5 s) precisely because it kept the window's own
-    * exploded-rows exchange on top of its own. */
+    * that both the string and hashed shingle forms derive from. A narrow
+    * source is widened BY DOC ID before the explode ([[Widen.widen]]):
+    * the word regex runs parallel and the per-doc window reuses the id
+    * partitioning. */
   private def rawShingleRows(df: DataFrame, idCol: String, textCol: String,
                              n: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val w = widenNarrowBy(df, col(idCol)).select(col(idCol).as("id"),
+    val w = Widen.widen(df, col(idCol)).select(col(idCol).as("id"),
       posexplode(words(col(textCol))).as(Seq("pos", "w0")))
     val byDoc = Window.partitionBy("id").orderBy("pos")
     val parts = (0 until n).map(j =>
@@ -655,10 +618,10 @@ object Dedup {
     * `portable = false` uses all 64 bits of xxhash64 (no SQL analog). */
   def simhash(df: DataFrame, idCol: String, textCol: String,
               portable: Boolean = true): DataFrame = {
-    // widenNarrowBy: the token regex + the 64-column partial aggregate
+    // keyed widen: the token regex + the 64-column partial aggregate
     // run above the scan; a narrow source serializes both, and the
-    // groupBy(id) below reuses the id partitioning (round-15)
-    val ex0 = widenNarrowBy(df, col(idCol))
+    // groupBy(id) below reuses the id partitioning
+    val ex0 = Widen.widen(df, col(idCol))
       .select(col(idCol).as("id"), explode(words(col(textCol))).as("t"))
     val ex =
       if (portable)
@@ -1260,12 +1223,11 @@ object Dedup {
     // Norms once per vector; widen spreads the pair loop across all
     // cores when the source is narrow (a single-file source would
     // otherwise make the nested-loop join one task).
-    val par = emb.sparkSession.sparkContext.defaultParallelism
     val e = emb.select(col(idCol).as("id"),
         col(vecCol).cast("array<double>").as("v"))
       .withColumn("nrm", Similarity.norm(col("v")))
       .where(col("nrm") > 0) // zero-norm: cosine = NaN sorts above minCosine
-    Similarity.widen(e, par).as("a").join(e.as("b"), col("a.id") < col("b.id"))
+    Widen.widen(e).as("a").join(e.as("b"), col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
         (Similarity.dot(col("a.v"), col("b.v")) /
           (col("a.nrm") * col("b.nrm"))).as("cosine"))

@@ -212,6 +212,10 @@ object DedupIndex {
             precomputedRows: Option[DataFrame] = None): Unit = {
     require(n > 0, s"shingle width must be positive: $n")
     val spark = corpus.sparkSession
+    // meta is the commit marker: drop the previous one first, so a build
+    // that fails below leaves no readable index over partial artifacts
+    IndexFiles.remove(spark, s"$path/meta")
+    sidecarMemo.remove(s"meta|$path")
     // a fresh build invalidates any previous index's optional sidecars
     IndexFiles.remove(spark, s"$path/tombstones")
     IndexFiles.remove(spark, s"$path/applied_epochs")
@@ -219,18 +223,15 @@ object DedupIndex {
     Seq("shingles", "counts", "fps")
       .foreach(p => IndexFiles.remove(spark, s"$path/$p"))
     import spark.implicits._
-    // the meta sidecar is independent of the three artifact writes —
-    // ride the same driver pool (round-15, guide §2.6)
     writeParts(corpus, idCol, textCol, path, n, portable, "overwrite",
-      BaseEpoch, precomputedRows,
-      extraJobs = Seq(() => {
-        Seq((n, portable)).toDF("n", "portable")
-          .write.mode("overwrite").parquet(s"$path/meta"); ()
-      }))
+      BaseEpoch, precomputedRows)
     // the Bloom build reads the JUST-WRITTEN fps table — sequenced after
     // the parallel batch by construction
     writeBloom(spark, path, Bloom.build(
       spark.read.parquet(s"$path/fps"), "fp", bloomBits, bloomHashes))
+    // meta LAST: it exists only over a complete build
+    Seq((n, portable)).toDF("n", "portable")
+      .write.mode("overwrite").parquet(s"$path/meta")
     memoPut(spark, s"meta|$path", (n, portable))
     // build reset applied_epochs above; reflect that in the memo
     memoPut(spark, s"hwm|$path", None)

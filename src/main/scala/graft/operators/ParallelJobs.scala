@@ -22,26 +22,39 @@ package graft.operators
 private[graft] object ParallelJobs { // graft-wide: operators + streaming
 
   /** Run every job, each on its own pool thread (pool sized to the job
-    * count, capped at 4 — "2-3 jobs in flight is plenty"); waits for ALL
-    * to finish, then rethrows the FIRST failure (by submission order)
-    * unwrapped. One job degenerates to a plain call. */
+    * count, capped at 4 — "2-3 jobs in flight is plenty") and rethrow the
+    * FIRST failure (by submission order) unwrapped. The first failure
+    * cancels the jobs still running (interrupting their threads): a
+    * failed batch is abandoned, so its siblings' work is waste. An
+    * interrupt of the caller cancels the jobs too, and is re-raised with
+    * the caller's interrupt flag restored. One job degenerates to a
+    * plain call. Spark jobs a cancelled thread already submitted are not
+    * cancelled here. */
   def run(jobs: Seq[() => Unit]): Unit = {
+    import java.util.concurrent.{CancellationException, ExecutionException,
+      ExecutorCompletionService, Executors, Future}
     if (jobs.sizeIs <= 1) { jobs.foreach(_.apply()); return }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(jobs.size, 4))
-    try {
-      val futs = jobs.map(j => pool.submit(
-        new java.util.concurrent.Callable[Unit] { def call(): Unit = j() }))
-      var firstFailure: Option[Throwable] = None
-      futs.foreach { f =>
-        try f.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            if (firstFailure.isEmpty)
-              firstFailure = Some(Option(e.getCause).getOrElse(e))
-        }
+    val pool = Executors.newFixedThreadPool(math.min(jobs.size, 4))
+    val done = new ExecutorCompletionService[Unit](pool)
+    def failure(f: Future[Unit]): Option[Throwable] =
+      try { f.get(); None } catch {
+        case e: ExecutionException => Some(Option(e.getCause).getOrElse(e))
+        case _: CancellationException => None
       }
-      firstFailure.foreach(throw _)
-    } finally { pool.shutdown(); () }
+    try {
+      val futs = jobs.map(j => done.submit(() => j()))
+      // wait in COMPLETION order, so a failure is seen while its siblings
+      // still run
+      try {
+        var pending = futs.size
+        while (pending > 0 && failure(done.take()).isEmpty) pending -= 1
+        if (pending > 0) futs.foreach(_.cancel(true))
+      } catch { case e: InterruptedException =>
+        futs.foreach(_.cancel(true))
+        Thread.currentThread().interrupt()
+        throw e
+      }
+      futs.iterator.flatMap(failure).nextOption().foreach(throw _)
+    } finally { pool.shutdownNow(); () }
   }
 }

@@ -117,9 +117,7 @@ object Pq {
   private[operators] def prepQueries(queries: DataFrame, idCol: String,
       vecCol: String, cbFlat: Array[Double], m: Int, codebookSize: Int,
       dsub: Int): DataFrame =
-    queries.select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("qv"))
-      .withColumn("qn", Similarity.norm(col("qv")))
-      .where(col("qn") > 0)
+    Similarity.queryVectors(queries, idCol, vecCol)
       .withColumn("nq", normalize(col("qv"), col("qn")))
       .withColumn("lut", PqCodec.lutCol(col("nq"), cbFlat, m, codebookSize, dsub))
 
@@ -158,9 +156,7 @@ object Pq {
     * set against raw vectors, then the k-bounded top-k. */
   private[operators] def exactRerank(cands: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, q: DataFrame, k: Int): DataFrame = {
-    val e = corpus.select(col(idCol).as("neighbor_id"), asDouble(col(vecCol)).as("cv"))
-      .withColumn("cn", Similarity.norm(col("cv")))
-      .where(col("cn") > 0)
+    val e = Similarity.corpusVectors(corpus, idCol, vecCol)
     val exact = cands
       .join(e, Seq("neighbor_id"))
       .join(broadcast(q.select(col("query_id"), col("qv"), col("qn"))), Seq("query_id"))
@@ -238,13 +234,9 @@ object Pq {
       return ivfPqResidualTopK(corpus, queries, idCol, vecCol, k, nCentroids,
         nProbe, m, dim, codebookSize, rerankDepth)
     val dsub = dim / m
-    val par = corpus.sparkSession.sparkContext.defaultParallelism
     val cb = codebook(corpus, idCol, vecCol, m, dim, codebookSize)
     val (cbFlat, halfFlat) = flatten(cb)
-    val c = Similarity.widen(
-      corpus.select(col(idCol).as("neighbor_id"), asDouble(col(vecCol)).as("cv"))
-        .withColumn("cn", Similarity.norm(col("cv")))
-        .where(col("cn") > 0), par)
+    val c = Widen.widen(Similarity.corpusVectors(corpus, idCol, vecCol))
     val cents = Similarity.sampleCentroids(corpus, idCol, vecCol, nCentroids)
     // inverted lists: (list id, PQ codes) per vector — at rest this is
     // the m-byte-code + centroid-id table a 100 TB index persists.
@@ -300,11 +292,7 @@ object Pq {
     require(rerankDepth >= k, "rerankDepth must be >= k")
     require(nCentroids > 0 && nProbe > 0, "nCentroids and nProbe must be positive")
     val dsub = dim / m
-    val par = corpus.sparkSession.sparkContext.defaultParallelism
-    val c = Similarity.widen(
-      corpus.select(col(idCol).as("neighbor_id"), asDouble(col(vecCol)).as("cv"))
-        .withColumn("cn", Similarity.norm(col("cv")))
-        .where(col("cn") > 0), par)
+    val c = Widen.widen(Similarity.corpusVectors(corpus, idCol, vecCol))
     val cents = Similarity.sampleCentroids(corpus, idCol, vecCol, nCentroids)
     val ar = assignedResiduals(c, cents)
     val (cbFlat, halfFlat, idxDf) =
@@ -327,9 +315,7 @@ object Pq {
     * residual path computes its LUTs per (query, probed list). */
   private[operators] def prepQueriesBase(queries: DataFrame, idCol: String,
                                          vecCol: String): DataFrame =
-    queries.select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("qv"))
-      .withColumn("qn", Similarity.norm(col("qv")))
-      .where(col("qn") > 0)
+    Similarity.queryVectors(queries, idCol, vecCol)
       .withColumn("nq", normalize(col("qv"), col("qn")))
 
   /** (centroid_id, neighbor_id, rv): each vector's residual against its
@@ -486,11 +472,7 @@ object Pq {
     val (mn, mx) = sq8Bounds(corpus, idCol, vecCol, dim)
     val mnL = typedlit(mn.toSeq)
     val mxL = typedlit(mx.toSeq)
-    val par = corpus.sparkSession.sparkContext.defaultParallelism
-    val c0 = corpus.select(col(idCol).as("neighbor_id"),
-        asDouble(col(vecCol)).as("cv"))
-      .withColumn("cn", Similarity.norm(col("cv")))
-      .where(col("cn") > 0)
+    val c0 = Similarity.corpusVectors(corpus, idCol, vecCol)
       .withColumn("nv", normalize(col("cv"), col("cn")))
     val codes = c0.select(col("neighbor_id"),
       transform(col("nv"), (x, i) => {
@@ -507,7 +489,7 @@ object Pq {
         mnI + cd.cast("double") * ((mxI - mnI) / lit(255.0))
       }).as("dq"))
     val q = prepQueriesBase(queries, idCol, vecCol)
-    val scored = Similarity.widen(dq, par).crossJoin(broadcast(q))
+    val scored = Widen.widen(dq).crossJoin(broadcast(q))
       .where(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
         round(Similarity.dot(col("nq"), col("dq")), 6).as("cosine"))
@@ -551,12 +533,11 @@ object Pq {
     val packSql = s"aggregate(sequence(0, ${dim - 1}), 0L, (acc, i) -> " +
       "acc | CASE WHEN element_at(_pv, i + 1) >= 0D " +
       "THEN shiftleft(1L, i) ELSE 0L END)"
-    val par = corpus.sparkSession.sparkContext.defaultParallelism
-    val c = Similarity.widen(
+    val c = Widen.widen(
       corpus.select(col(idCol).as("neighbor_id"),
           asDouble(col(vecCol)).as("_pv"))
         .where(Similarity.norm(col("_pv")) > 0)
-        .select(col("neighbor_id"), expr(packSql).as("_cw")), par)
+        .select(col("neighbor_id"), expr(packSql).as("_cw")))
     val q = prepQueriesBase(queries, idCol, vecCol)
     val qw = q.select(col("query_id"), col("qv").as("_pv"))
       .select(col("query_id"), expr(packSql).as("_qw"))

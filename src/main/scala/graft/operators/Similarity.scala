@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import Widen.widen
+
 /** Similarity search over an embedding column (`Array[Float]`).
   *
   * Three paths:
@@ -35,6 +37,21 @@ object Similarity {
   def dot(a: Column, b: Column): Column = graft.functions.VectorDot(a, b)
 
   def norm(a: Column): Column = sqrt(dot(a, a))
+
+  /** (neighbor_id, cv, cn): corpus vectors as doubles with their norms,
+    * zero-norm rows dropped — the corpus side of every scoring join. */
+  private[operators] def corpusVectors(corpus: DataFrame, idCol: String,
+                                       vecCol: String): DataFrame =
+    corpus.select(col(idCol).as("neighbor_id"), asDouble(col(vecCol)).as("cv"))
+      .withColumn("cn", norm(col("cv")))
+      .where(col("cn") > 0)
+
+  /** (query_id, qv, qn): the query side, shaped like [[corpusVectors]]. */
+  private[operators] def queryVectors(queries: DataFrame, idCol: String,
+                                      vecCol: String): DataFrame =
+    queries.select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("qv"))
+      .withColumn("qn", norm(col("qv")))
+      .where(col("qn") > 0)
 
   /** Cosine similarity of two array<double> columns. */
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
@@ -101,30 +118,14 @@ object Similarity {
         col("_it.cosine").as("cosine"), (col("_pos") + 1).cast("long").as("rank"))
   }
 
-  /** Widen a NARROW source to `target` partitions; pass an
-    * already-parallel one through untouched. The graded fixtures are
-    * single parquet files (1 split → the whole corpus stage runs
-    * one-task without this), but a real 100 TB corpus arrives in
-    * thousands of splits — an unconditional repartition there is a
-    * gratuitous full shuffle of the fattest data in the pipeline. The
-    * partition count comes from the physical plan (driver-side planning
-    * only, no job). */
-  private[operators] def widen(df: DataFrame, target: Int): DataFrame =
-    if (df.rdd.getNumPartitions >= target) df else df.repartition(target)
-
   /** Exact top-k neighbors for each query vector (cosine, self excluded).
     * Output: (query_id, neighbor_id, cosine, rank). Cosine is rounded to
     * 6 dp BEFORE ranking with an id tiebreak, so ranks are reproducible
     * across engines and run-to-run. */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                      vecCol: String, k: Int): DataFrame = {
-    val par = corpus.sparkSession.sparkContext.defaultParallelism
-    val c = widen(corpus.select(col(idCol).as("neighbor_id"), asDouble(col(vecCol)).as("cv"))
-      .withColumn("cn", norm(col("cv")))
-      .where(col("cn") > 0), par)
-    val q = queries.select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("qv"))
-      .withColumn("qn", norm(col("qv")))
-      .where(col("qn") > 0)
+    val c = widen(corpusVectors(corpus, idCol, vecCol))
+    val q = queryVectors(queries, idCol, vecCol)
     val scored = c.crossJoin(broadcast(q))
       .where(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
@@ -271,17 +272,13 @@ object Similarity {
                      rerankDepth: Int = 50): DataFrame = {
     require(rerankDepth >= k, "rerankDepth must be >= k")
     require(prefixDim >= 1, s"prefixDim must be positive: $prefixDim")
-    val par = corpus.sparkSession.sparkContext.defaultParallelism
     val c = widen(corpus.select(col(idCol).as("neighbor_id"),
         asDouble(col(vecCol)).as("cv"))
       .where(norm(col("cv")) > 0)
       .select(col("neighbor_id"), slice(col("cv"), 1, prefixDim).as("cp"))
       .withColumn("cpn", norm(col("cp")))
-      .where(col("cpn") > 0), par)
-    val q = queries.select(col(idCol).as("query_id"),
-        asDouble(col(vecCol)).as("qv"))
-      .withColumn("qn", norm(col("qv")))
-      .where(col("qn") > 0)
+      .where(col("cpn") > 0))
+    val q = queryVectors(queries, idCol, vecCol)
     val qp = q.select(col("query_id"), slice(col("qv"), 1, prefixDim).as("qp"))
       .withColumn("qpn", norm(col("qp")))
       .where(col("qpn") > 0)
@@ -318,11 +315,10 @@ object Similarity {
                     maxCosine: Double = 1.0): DataFrame = {
     require(minCosine <= maxCosine,
       s"minCosine ($minCosine) must be <= maxCosine ($maxCosine)")
-    val par = corpus.sparkSession.sparkContext.defaultParallelism
     val c = widen(corpus.select(col(idCol).as("neighbor_id"),
         asDouble(col(vecCol)).as("cv"), col(labelCol).as("clab"))
       .withColumn("cn", norm(col("cv")))
-      .where(col("cn") > 0), par)
+      .where(col("cn") > 0))
     val q = queries.select(col(idCol).as("query_id"),
         asDouble(col(vecCol)).as("qv"), col(labelCol).as("qlab"))
       .withColumn("qn", norm(col("qv")))
@@ -398,9 +394,7 @@ object Similarity {
     * so the DuckDB oracle replays the identical seed selection. */
   def sampleCentroids(corpus: DataFrame, idCol: String, vecCol: String,
                       nCentroids: Int): DataFrame =
-    corpus.select(col(idCol).as("neighbor_id"), asDouble(col(vecCol)).as("cv"))
-      .withColumn("cn", norm(col("cv")))
-      .where(col("cn") > 0)
+    corpusVectors(corpus, idCol, vecCol)
       .orderBy(Sampling.hash24(col("neighbor_id"), "ivf").asc,
         col("neighbor_id").asc)
       .limit(nCentroids)
@@ -545,10 +539,7 @@ object Similarity {
                             perCluster: Int,
                             salt: String = "bal"): DataFrame = {
     require(nCentroids > 0, s"nCentroids must be positive: $nCentroids")
-    val c = corpus.select(col(idCol).as("neighbor_id"),
-        asDouble(col(vecCol)).as("cv"))
-      .withColumn("cn", norm(col("cv")))
-      .where(col("cn") > 0)
+    val c = corpusVectors(corpus, idCol, vecCol)
     val cents = sampleCentroids(corpus, idCol, vecCol, nCentroids)
     val assigned = assignTo(c, cents)
       .select(col("centroid_id").as("cluster"),
@@ -571,10 +562,7 @@ object Similarity {
   def clusterStats(corpus: DataFrame, idCol: String, vecCol: String,
                    nCentroids: Int): DataFrame = {
     require(nCentroids > 0, s"nCentroids must be positive: $nCentroids")
-    val c = corpus.select(col(idCol).as("neighbor_id"),
-        asDouble(col(vecCol)).as("cv"))
-      .withColumn("cn", norm(col("cv")))
-      .where(col("cn") > 0)
+    val c = corpusVectors(corpus, idCol, vecCol)
     val cents = sampleCentroids(corpus, idCol, vecCol, nCentroids)
     assignToWithSim(c, cents)
       .select(col("centroid_id").as("cluster"),
@@ -593,12 +581,9 @@ object Similarity {
                       init: DataFrame, iters: Int,
                       orderedMeans: Boolean = false): DataFrame = {
     val spark = corpus.sparkSession
-    val par = spark.sparkContext.defaultParallelism
     // persist across iterations: each Lloyd pass re-reads the corpus, and
     // widen keeps single-file sources from running one-task
-    val c = widen(corpus.select(col(idCol).as("neighbor_id"), asDouble(col(vecCol)).as("cv"))
-      .withColumn("cn", norm(col("cv")))
-      .where(col("cn") > 0), par)
+    val c = widen(corpusVectors(corpus, idCol, vecCol))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       var cur = init
@@ -658,10 +643,7 @@ object Similarity {
               orderedMeans: Boolean = false,
               hierarchicalAssign: Boolean = false): DataFrame = {
     require(nCentroids > 0 && nProbe > 0, "nCentroids and nProbe must be positive")
-    val par = corpus.sparkSession.sparkContext.defaultParallelism
-    val c = widen(corpus.select(col(idCol).as("neighbor_id"), asDouble(col(vecCol)).as("cv"))
-      .withColumn("cn", norm(col("cv")))
-      .where(col("cn") > 0), par)
+    val c = widen(corpusVectors(corpus, idCol, vecCol))
     val sampled = sampleCentroids(corpus, idCol, vecCol, nCentroids)
     val cents =
       if (kmeansIters <= 0) sampled
@@ -679,9 +661,7 @@ object Similarity {
       else assignTo(c, cents)
     // queries probe their nProbe nearest lists (queries are small — the
     // slice aggregate and re-join are driver-cheap and window-free)
-    val q = queries.select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("qv"))
-      .withColumn("qn", norm(col("qv")))
-      .where(col("qn") > 0)
+    val q = queryVectors(queries, idCol, vecCol)
     val probes = q.crossJoin(broadcast(cents))
       .select(col("query_id"),
         struct(
@@ -710,15 +690,9 @@ object Similarity {
               probeBits: Int = 1): DataFrame = {
     require(probeBits >= 0 && probeBits <= planes, "probeBits out of range")
     val hp = hyperplanes(planes, dim)
-    val par = corpus.sparkSession.sparkContext.defaultParallelism
-    val c = widen(corpus.select(col(idCol).as("neighbor_id"),
-        asDouble(col(vecCol)).as("cv"))
-      .withColumn("cn", norm(col("cv")))
-      .where(col("cn") > 0)
-      .withColumn("bucket", signature(col("cv"), hp)), par)
-    val q0 = queries.select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("qv"))
-      .withColumn("qn", norm(col("qv")))
-      .where(col("qn") > 0)
+    val c = widen(corpusVectors(corpus, idCol, vecCol)
+      .withColumn("bucket", signature(col("cv"), hp)))
+    val q0 = queryVectors(queries, idCol, vecCol)
       .withColumn("bucket0", signature(col("qv"), hp))
     // multi-probe: every flip mask of ≤ probeBits bits (masks are pairwise
     // distinct and each corpus row has ONE bucket, so a (query, neighbor)

@@ -46,6 +46,31 @@ class DedupIndexSpec extends AnyFunSuite with SparkSpec {
     assert(rows(a) == rows(b))
   }
 
+  test("meta is the commit marker: a build whose artifact write fails " +
+    "leaves no readable index") {
+    val shingles = Dedup.shingleHashRows(corpus, "doc_id", "text", 3)
+    // the shingle and count writes succeed from the precomputed rows; the
+    // fps write evaluates the text column, which throws
+    val poisoned = corpus.withColumn("text",
+      when(col("doc_id") >= 0, raise_error(lit("injected fps failure")))
+        .otherwise(col("text")).cast("string"))
+    def failedBuild(dir: String): Unit = {
+      intercept[Exception] {
+        DedupIndex.build(poisoned, "doc_id", "text", dir, n = 3,
+          precomputedRows = Some(shingles))
+      }
+      assert(!new java.io.File(s"$dir/meta").exists(),
+        "meta written over a partial index")
+      intercept[Exception] { DedupIndex.append(batch, "doc_id", "text", dir) }
+    }
+    failedBuild(tmp("failed_fresh"))
+    // a failed REBUILD must not leave the previous meta over new partial
+    // artifacts either
+    val rebuilt = tmp("failed_rebuild")
+    DedupIndex.build(corpus, "doc_id", "text", rebuilt, n = 3)
+    failedBuild(rebuilt)
+  }
+
   test("broadcast check never shuffles the stored corpus tables") {
     val dir = tmp("plan")
     DedupIndex.build(corpus, "doc_id", "text", dir, n = 3)

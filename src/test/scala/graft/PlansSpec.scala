@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.operators.Widen
 import graft.sources.Tables
 
 class PlansSpec extends AnyFunSuite with SparkSpec {
@@ -167,6 +169,71 @@ class PlansSpec extends AnyFunSuite with SparkSpec {
       nCentroids = 4, nProbe = 2).queryExecution.optimizedPlan.toString
     assert(narrowPlan.contains("Repartition"),
       s"narrow corpus not widened:\n$narrowPlan")
+  }
+
+  private def docScan = spark.read.parquet(s"$sf/documents.parquet")
+
+  /** The old narrowness probe, kept here as the reference: it runs every
+    * upstream shuffle stage under AQE, which is why `widen` reads the
+    * plan instead. */
+  private def narrowByRdd(df: DataFrame): Boolean =
+    df.rdd.getNumPartitions < spark.sparkContext.defaultParallelism
+
+  private def widened(df: DataFrame): Boolean = Widen.widen(df) ne df
+
+  private def manyFiles(files: Int): DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_widen").toString
+    spark.read.parquet(s"$sf/embeddings.parquet").repartition(files)
+      .write.mode("overwrite").parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  test("widen: no Spark job over an aggregate, a join or a cache") {
+    val agg = docScan.groupBy("source").agg(count(lit(1)).as("n"))
+    val joined = spark.read.parquet(s"$sf/orders.parquet")
+      .join(spark.read.parquet(s"$sf/customer.parquet"),
+        col("o_custkey") === col("c_custkey"))
+    val cached = docScan.select("doc_id", "text").cache()
+    try {
+      for ((name, df) <- Seq("aggregate" -> agg, "join" -> joined,
+          "cache" -> cached)) {
+        assert(jobsSubmitted(Widen.widen(df, col(df.columns.head))) == 0,
+          s"widen over the $name ran a job")
+        assert(jobsSubmitted(Widen.widen(df)) == 0,
+          s"keyless widen over the $name ran a job")
+        // the 1-split sources stay narrow through the aggregate, the join
+        // and the cache, as the old probe judged them
+        assert(widened(df), s"$name over 1-split sources not widened")
+      }
+    } finally { cached.unpersist(); () }
+  }
+
+  test("widen: decides as the partition probe does on scans, checkpoints " +
+    "and unions") {
+    val cases = Seq(
+      "1-file scan" -> docScan,
+      "8-file scan" -> manyFiles(8),
+      "localCheckpoint" -> docScan.localCheckpoint(),
+      "union of two 1-file scans" -> docScan.union(docScan))
+    for ((name, df) <- cases)
+      assert(widened(df) == narrowByRdd(df), s"decision differs on the $name")
+    val byName = cases.toMap
+    assert(widened(byName("1-file scan")))
+    assert(!widened(byName("8-file scan")))
+    assert(widened(byName("localCheckpoint")))
+  }
+
+  test("widen: an already-widened input is left alone; keys hash-partition") {
+    val par = spark.sparkContext.defaultParallelism
+    val once = Widen.widen(docScan)
+    assert(once ne docScan)
+    assert(Widen.widen(once) eq once)
+    val keyed = Widen.widen(docScan, col("doc_id"))
+    assert(keyed.queryExecution.optimizedPlan.toString
+      .contains("RepartitionByExpression [doc_id"))
+    assert(keyed.rdd.getNumPartitions == par)
+    // a coalesce to one partition is narrow whatever sits below it
+    assert(widened(manyFiles(8).coalesce(1)))
   }
 
   test("round-9 additions stay window-free where promised") {

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.graftshim.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,6 +11,23 @@ import org.scalatest.funsuite.AnyFunSuite
   * cache size the first time it compiles, so this builder decides it. */
 trait SparkSpec { self: AnyFunSuite =>
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** The number of Spark jobs `block` submits, counted once the listener
+    * bus has delivered every job-start event (earlier jobs' events are
+    * drained before counting starts). */
+  def jobsSubmitted(block: => Any): Int = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        n.incrementAndGet(); ()
+      }
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(counter)
+    try { block; ListenerBusDrain(sc); n.get }
+    finally sc.removeSparkListener(counter)
+  }
 }
 
 object SparkSpec {
