@@ -813,6 +813,12 @@ object TextSimQueries {
     * the per-doc total exact in any partition order on both engines. */
   private def qT15lm(s: SparkSession, d: String): DataFrame =
     TextStats.bigramLm(docs(s, d), "doc_id", "text").orderBy("doc_id")
+  /** `TextStats.meanOnGrid6` over the oracles' `agg` CTE: the same
+    * exact half-up integer formula, so avg_nll is the same double in
+    * both engines. */
+  private val meanOnGrid6 =
+    "CAST((2 * CAST(agg.snll * 1000000 AS BIGINT) + agg.n) // (2 * agg.n)" +
+      " AS DOUBLE) / 1000000"
   /** oT15's model CTEs, shared verbatim with oT20 (the bucket oracle
     * replays the SAME lm score before cutting it into thirds). */
   private val lmCtes =
@@ -839,7 +845,7 @@ object TextSimQueries {
   private val oT15 =
     s"""WITH $lmCtes
       |SELECT d.doc_id, CAST(coalesce(agg.n, 0) AS BIGINT) AS n_bigrams,
-      |  round(CAST(agg.snll AS DOUBLE) / agg.n, 6) AS avg_nll
+      |  $meanOnGrid6 AS avg_nll
       |FROM documents d LEFT JOIN agg ON d.doc_id = agg.doc_id
       |ORDER BY 1""".stripMargin
 
@@ -862,7 +868,7 @@ object TextSimQueries {
   private val oT20 =
     s"""WITH $lmCtes,
       |sc AS (SELECT d.doc_id, d.lang,
-      |    round(CAST(agg.snll AS DOUBLE) / agg.n, 6) AS score
+      |    $meanOnGrid6 AS score
       |  FROM documents d LEFT JOIN agg ON d.doc_id = agg.doc_id),
       |hist AS (SELECT lang, score, count(*) AS c FROM sc
       |  WHERE score IS NOT NULL GROUP BY 1, 2),
@@ -1017,7 +1023,7 @@ object TextSimQueries {
     TextStats.bigramLmScore(all, "doc_id", "text", model).orderBy("doc_id")
   }
   private val oT23 =
-    """WITH ab AS (SELECT doc_id, list_filter(string_split_regex(trim(lower(
+    ("""WITH ab AS (SELECT doc_id, list_filter(string_split_regex(trim(lower(
       |    regexp_replace(text, '[^\p{L}\p{M}\p{N}]+|([\x{3005}\x{3040}-\x{30ff}\x{31f0}-\x{31ff}\x{3400}-\x{4dbf}\x{4e00}-\x{9fff}\x{ac00}-\x{d7a3}])', ' \1 ', 'g'))), ' +'),
       |    x -> x <> '') AS ws
       |  FROM documents),
@@ -1042,9 +1048,9 @@ object TextSimQueries {
       |  FROM sc GROUP BY 1)
       |SELECT d.doc_id, CAST(coalesce(agg.n, 0) AS BIGINT) AS n_bigrams,
       |  CAST(coalesce(agg.nu, 0) AS BIGINT) AS n_unk,
-      |  round(CAST(agg.snll AS DOUBLE) / agg.n, 6) AS avg_nll
+      |  """ + meanOnGrid6 + """ AS avg_nll
       |FROM documents d LEFT JOIN agg ON d.doc_id = agg.doc_id
-      |ORDER BY 1""".stripMargin
+      |ORDER BY 1""").stripMargin
 
   /** PMI collocations: the 50 strongest adjacent-word associations with
     * support ≥ 5 — counts exact BIGINT, the PMI double computed in ONE

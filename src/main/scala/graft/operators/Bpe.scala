@@ -3,30 +3,36 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import scala.collection.mutable
+
 /** In-engine BPE vocabulary trainer — byte-pair-encoding merge learning
-  * (Sennrich et al. 2016) run as Spark aggregates: iteratively merge
-  * the corpus's most frequent adjacent token pair, starting from
-  * characters. The tokenizer-construction counterpart to the trained
-  * classifier (X84): training state lives in the engine, every step is
-  * deterministic, and a SQL oracle replays the whole merge trajectory.
+  * (Sennrich et al. 2016): iteratively merge the corpus's most frequent
+  * adjacent token pair, starting from characters. The
+  * tokenizer-construction counterpart to the trained classifier (X84):
+  * every step is deterministic, and a SQL oracle replays the whole
+  * merge trajectory.
   *
   * Scale contract — the reason BPE fits 100 TB: training runs on the
   * WORD HISTOGRAM (distinct word, count), never the corpus. One
   * tokenize-and-count pass reduces 100 TB of text to a vocabulary-sized
-  * frame (millions of rows at web scale); each merge step is then ONE
-  * hash aggregate over that bounded frame plus a ONE-ROW collect (the
-  * argmax pair — the gradient-collect pattern), and the re-tokenization
+  * frame (millions of rows at web scale). [[train]] (exact greedy,
+  * k ≤ 1000) collects that histogram in that one pass and runs the
+  * merge loop on the driver, whose memory is the distinct-word
+  * histogram plus its pair counts. [[trainBatched]] stays the
+  * Spark-side path for large k: per round one hash aggregate over the
+  * histogram plus a bounded candidate collect, and the re-tokenization
   * is a map-only literal `replace` on the histogram rows. Nothing in
-  * the loop touches corpus-sized data.
+  * either loop touches corpus-sized data.
   *
   * Determinism contract: token sequences are represented as strings
   * with every token wrapped in U+001F separators ("␟a␟␟b␟" for [a,b]),
   * so one literal `replace("␟a␟␟b␟" → "␟ab␟")` performs the standard
   * greedy leftmost non-overlapping merge IDENTICALLY in any engine
   * ("aaa" + merge(a,a) → [aa, a]); the argmax pair breaks count ties
-  * on (left, right) ascending. Tokens are normalized word characters
-  * (Dedup.words — Unicode letters/marks/numbers), so they can never
-  * contain the U+001F separator (a control char the tokenizer strips).
+  * on (left, right) ascending in UTF-8 byte order. Tokens are
+  * normalized word characters (Dedup.words — Unicode
+  * letters/marks/numbers), so they can never contain the U+001F
+  * separator (a control char the tokenizer strips).
   */
 object Bpe {
 
@@ -49,46 +55,75 @@ object Bpe {
   }
 
   /** Learn `k` merges from the corpus. Returns them in training order.
-    * Cost: one corpus tokenize pass, then per merge ONE aggregate over
-    * the histogram + a one-row collect — exact greedy, one driver round
-    * per merge, so the cap keeps it to vocabulary-demo scale. Real
-    * tokenizer vocabularies (32k–100k merges) train with
-    * [[trainBatched]], which amortizes hundreds of merges per round. */
+    * Cost: ONE corpus pass — the histogram aggregate, collected as
+    * (sequence string, count) rows (two Spark jobs under AQE: the
+    * shuffle stage and the result) — then the exact greedy loop on the
+    * driver ([[greedyMerges]]), whose memory is the distinct-word
+    * histogram plus its pair counts, never the corpus. No Spark job per
+    * merge. The cap keeps that driver loop to vocabulary-demo scale;
+    * real tokenizer vocabularies (32k–100k merges) train Spark-side
+    * with [[trainBatched]]. */
   def train(df: DataFrame, textCol: String, k: Int): Seq[Merge] = {
     require(k >= 1 && k <= 1000, s"k out of range: $k")
     val hist = wordHistogram(df, textCol)
-      .select(col("cnt"), charSeq(col("w")).as("seq"))
-      .localCheckpoint()
-    var seqCol: Column = col("seq")
+      .select(charSeq(col("w")).as("seq"), col("cnt")).collect()
+    greedyMerges(hist.map(_.getString(0)), hist.map(_.getLong(1)), k)
+  }
+
+  /** The exact greedy merge loop over the histogram's sequence strings
+    * and counts (`seqs` is rewritten in place): each step merges the
+    * most frequent adjacent pair — count desc, then (l, r) in UTF-8 byte
+    * order, the engines' string order — with the same literal leftmost
+    * non-overlapping `replace` as [[mergeOnce]]. Incremental: a merge
+    * re-counts only the words whose sequence contains it, and the
+    * argmax comes off a heap whose stale entries (count no longer
+    * current) are skipped. */
+  private def greedyMerges(seqs: Array[String], cnts: Array[Long],
+                           k: Int): Seq[Merge] = {
+    type Pair = (String, String)
+    val counts = mutable.HashMap.empty[Pair, Long]
+    val heap = mutable.PriorityQueue.empty[(Long, String, String)](
+      Ordering.Tuple3(Ordering.Long,
+        Unigram.utf8Order.reverse, Unigram.utf8Order.reverse))
+    def tally(delta: mutable.HashMap[Pair, Long], seq: String, n: Long): Unit = {
+      val t = seq.substring(1, seq.length - 1).split(Sep + Sep, -1)
+      t.iterator.zip(t.iterator.drop(1))
+        .foreach(p => delta(p) = delta.getOrElse(p, 0L) + n)
+    }
+    def commit(delta: mutable.HashMap[Pair, Long]): Unit =
+      delta.foreach { case (p, d) =>
+        val c = counts.getOrElse(p, 0L) + d
+        if (c == 0) counts -= p
+        else if (d != 0) { counts(p) = c; heap.enqueue((c, p._1, p._2)) }
+      }
+    val init = mutable.HashMap.empty[Pair, Long]
+    seqs.indices.foreach(i => tally(init, seqs(i), cnts(i)))
+    commit(init)
     val out = Seq.newBuilder[Merge]
-    for (_ <- 1 to k) {
-      val cur = hist.select(col("cnt"), seqCol.as("seq"))
-      val toks = split(trim(col("seq"), Sep), Sep + Sep)
-      // single-token words carry no pairs (and sequence(1, 0) DESCENDS
-      // in Spark rather than being empty — it must never be built)
-      val top = cur
-        .where(size(toks) >= 2)
-        .select(col("cnt"), explode(transform(
-          sequence(lit(1), size(toks) - 1),
-          i => struct(element_at(toks, i).as("l"),
-            element_at(toks, i + 1).as("r")))).as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum(col("cnt")).as("c"))
-        .orderBy(col("c").desc, col("l"), col("r"))
-        .limit(1).collect()
-      if (top.isEmpty) return out.result()
-      val m = Merge(top(0).getAs[String]("l"), top(0).getAs[String]("r"),
-        top(0).getAs[Long]("c"))
-      out += m
-      seqCol = mergeOnce(seqCol, m)
+    var done = 0
+    while (done < k && heap.nonEmpty) {
+      val (c, l, r) = heap.dequeue()
+      if (counts.get((l, r)).contains(c)) {
+        val m = Merge(l, r, c)
+        out += m
+        done += 1
+        val from = Sep + l + Sep + Sep + r + Sep
+        val delta = mutable.HashMap.empty[Pair, Long]
+        for (i <- seqs.indices if seqs(i).contains(from)) {
+          tally(delta, seqs(i), -cnts(i))
+          seqs(i) = seqs(i).replace(from, Sep + m.merged + Sep)
+          tally(delta, seqs(i), cnts(i))
+        }
+        commit(delta)
+      }
     }
     out.result()
   }
 
   /** Learn `k` merges in BATCHED driver rounds — the path to real
-    * tokenizer vocabularies (32k–100k merges), where one-round-per-merge
-    * ([[train]]) is a scheduling wall (32k sequential Spark jobs), not a
-    * data wall. Per round: ONE pair-count aggregate over the histogram,
+    * tokenizer vocabularies (32k–100k merges), where [[train]]'s driver
+    * loop would hold the whole histogram on one JVM and re-scan it once
+    * per merge. Per round: ONE pair-count aggregate over the histogram,
     * ONE bounded collect of the top `4·batch` candidate pairs, then a
     * driver-side greedy selection that accepts candidates in
     * (count desc, l, r) order while their tokens are pairwise DISJOINT —

@@ -877,8 +877,19 @@ object TextStats {
       .join(agg, col(idCol) === col("_lm_id"), "left")
       .select(col(idCol),
         coalesce(col("_n"), lit(0L)).as("n_bigrams"),
-        round(col("_snll").cast("double") / col("_n"), 6).as("avg_nll"))
+        meanOnGrid6(col("_snll"), col("_n")).as("avg_nll"))
   }
+
+  /** A non-negative DECIMAL(·,6) sum's mean over `n`, rounded half-up
+    * onto the 6-decimal grid in exact integer arithmetic:
+    * m = (2·sum·10⁶ + n) div 2n, then m / 10⁶. The oracles replay the
+    * same integer formula, so both engines return the same double.
+    * Rounding the double quotient instead is not portable: Spark rounds
+    * its shortest decimal string, DuckDB the binary value, so an exact
+    * .5 tie at the 7th decimal (34.382895 / 10) splits them. */
+  private[graft] def meanOnGrid6(sum: Column, n: Column): Column =
+    call_function("div", (sum * 1000000).cast("long") * 2 + n, n * 2)
+      .cast("double") / 1e6
 
   /** (words-array rows, bigram-occurrence rows) behind a Generate
     * boundary (the Dedup.withWords trick): a plain projection would let
@@ -957,6 +968,6 @@ object TextStats {
       .select(col(idCol),
         coalesce(col("_n"), lit(0L)).as("n_bigrams"),
         coalesce(col("_nu"), lit(0L)).as("n_unk"),
-        round(col("_snll").cast("double") / col("_n"), 6).as("avg_nll"))
+        meanOnGrid6(col("_snll"), col("_n")).as("avg_nll"))
   }
 }

@@ -42,6 +42,29 @@ class BpeSpec extends AnyFunSuite with SparkSpec {
     val m = Bpe.train(df, "text", k = 2)
     assert(m.map(x => (x.l, x.r, x.count)) ==
       Seq(("u", "v", 2L), ("x", "y", 2L)), s"$m")
+    // the order is UTF-8 bytes, the engines' string order, not UTF-16
+    // code units: fullwidth a (U+FF41, EF BD 81) sorts BELOW bold a
+    // (U+1D41A, F0 9D 90 9A) in UTF-8 but above its surrogates in UTF-16;
+    // all four pairs tie at 2 and z (7A) sorts first in both orders
+    val fa = "\uff41"; val fb = "\uff42"
+    val ba = "\ud835\udc1a"; val bb = "\ud835\udc1b"
+    val wide = Seq((1L, Seq(fa + fb, fa + fb, ba + bb, ba + bb,
+      "z" + fa, "z" + fa, "z" + ba, "z" + ba).mkString(" ")))
+      .toDF("doc_id", "text")
+    val u = Bpe.train(wide, "text", k = 4)
+    assert(u.map(x => (x.l, x.r, x.count)) == Seq(("z", fa, 2L),
+      ("z", ba, 2L), (fa, fb, 2L), (ba, bb, 2L)), s"$u")
+  }
+
+  test("train submits the same Spark jobs at any k: one histogram " +
+    "collect, then the merge loop on the driver") {
+    val df = Seq("international internet nation intern rational net")
+      .map(t => (1L, t)).toDF("doc_id", "text")
+    val jobs3 = jobsSubmitted(Bpe.train(df, "text", k = 3))
+    var m12 = Seq.empty[Bpe.Merge]
+    val jobs12 = jobsSubmitted { m12 = Bpe.train(df, "text", k = 12) }
+    assert(m12.size == 12, s"$m12")
+    assert(jobs3 == jobs12, s"k=3: $jobs3 jobs, k=12: $jobs12 jobs")
   }
 
   test("encodeWord serves a STREAM with a frozen vocab == batch " +

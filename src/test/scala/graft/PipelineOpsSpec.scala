@@ -999,6 +999,19 @@ class PipelineOpsSpec extends AnyFunSuite with SparkSpec {
     assert(held.getAs[Double]("avg_nll") > 0)
   }
 
+  test("meanOnGrid6 rounds exact .5 ties half-up on the 6-decimal grid " +
+    "(the double quotient's round splits Spark from DuckDB there)") {
+    // 34.382895 / 10 = 3.4382895 exactly; the double quotient is
+    // 3.4382894999999998, which Spark's round takes down and DuckDB's up
+    val out = Seq(("34.382895", Option(10L)), ("101.933235", Option(30L)),
+        ("1.000000", Option(3L)), ("7.000000", Option.empty[Long]))
+      .toDF("s", "n")
+      .select(TextStats.meanOnGrid6(col("s").cast("decimal(38,6)"), col("n")))
+      .collect().map(r => Option(r.get(0))).toSeq
+    assert(out == Seq(Some(3.43829), Some(3.397775), Some(0.333333), None),
+      s"$out")
+  }
+
   test("bigramLm model is a servable artifact: parquet round trip " +
     "scores identically") {
     val docsDf = Seq(
