@@ -59,6 +59,13 @@ object GraftSession {
     *     segments; glider_analytics (115 classes) fits in 128. A static
     *     conf: only the builder that starts the JVM's first session sets
     *     it.
+    *   - `codegen.useIdInClassName=false`: by default a whole-stage class
+    *     is named after its codegen stage id, and adaptive execution
+    *     numbers stages in the order their inputs finish. The same
+    *     pipeline then compiles again whenever a run meets a new order:
+    *     `TextStats.repetitionStats` recompiled 6 classes in a new
+    *     session in 3 of 6 runs of CodegenReuseSpec, and in 0 of 9 with
+    *     the id left out of the name.
     *
     * Either alone is not enough: on curation_cold, isolation off with 100
     * entries still recompiled 99–140 classes per pass, and 4096 entries
@@ -72,6 +79,7 @@ object GraftSession {
   def codegenReuse(b: SparkSession.Builder): SparkSession.Builder = b
     .config("spark.sql.artifact.isolation.enabled", "false")
     .config("spark.sql.codegen.cache.maxEntries", "256")
+    .config("spark.sql.codegen.useIdInClassName", "false")
 
   /** The harness session that `graft.Verify` and every `graft.Bench`
     * subcommand run: [[recommended]] plus the LOCAL-HARNESS bits that a

@@ -1081,21 +1081,6 @@ object TextSimQueries {
       |WHERE c_ab >= 5
       |ORDER BY pmi DESC, w1, w2 LIMIT 50""".stripMargin
 
-  /** Build-once memo per (session, dir) for driver-side values (trained
-    * vocabularies, counts): a real pipeline trains or counts once, so the
-    * bench session does too. Entries of stopped sessions are purged on
-    * access. */
-  private type DirMemo[V] =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), V]
-  private def dirMemo[V]: DirMemo[V] = scala.collection.concurrent.TrieMap.empty
-  private def memoPerDir[V](memo: DirMemo[V], s: SparkSession, d: String)
-                           (build: => V): V = {
-    memo.keySet.foreach { case k @ (sess, _) =>
-      if (sess.sparkContext.isStopped) memo.remove(k)
-    }
-    memo.getOrElseUpdate((s, d), build)
-  }
-
   /** In-engine BPE vocabulary training under the FULL hash gate: 10
     * merge steps learned from the corpus word histogram (argmax
     * adjacent pair, count-desc / pair-asc tie break, greedy leftmost
@@ -1103,11 +1088,12 @@ object TextSimQueries {
     * replace). The oracle replays the ENTIRE trajectory — histogram,
     * per-step pair counts, argmax, and every re-tokenization — as 10
     * chained CTE blocks (the q_t25/q_d16 discipline). */
-  // q_t27 learns the merges, q_t28 applies them
-  private val bpeCache = dirMemo[Seq[graft.operators.Bpe.Merge]]
+  // q_t27 learns the merges, q_t28 applies them; trained vocabularies
+  // and counts are built once per (session, dir), as a real pipeline
+  // trains once
   private def sharedBpeMerges(s: SparkSession,
                               d: String): Seq[graft.operators.Bpe.Merge] =
-    memoPerDir(bpeCache, s, d)(
+    Memo.session(s, d, "bpe.merges")(
       graft.operators.Bpe.train(docs(s, d), "text", k = 10))
   private def qT27bpe(s: SparkSession, d: String): DataFrame =
     graft.operators.Bpe.mergesFrame(s, sharedBpeMerges(s, d))
@@ -1253,7 +1239,6 @@ object TextSimQueries {
 
   // ---- unigram-LM tokenizer (q_t40 trains, q_t41 serves) -----------------
 
-  private val unigramCache = dirMemo[Seq[graft.operators.Unigram.Piece]]
   private val UniP = 4     // max piece length
   private val UniR = 2     // EM rounds
   private val UniV = 45    // final vocabulary size
@@ -1261,7 +1246,7 @@ object TextSimQueries {
   private val UniW = 12    // oracle DP unroll (corpus max word len is 8)
   private def sharedUnigramVocab(s: SparkSession,
       d: String): Seq[graft.operators.Unigram.Piece] =
-    memoPerDir(unigramCache, s, d)(
+    Memo.session(s, d, "unigram.vocab")(
       graft.operators.Unigram.train(docs(s, d), "text", vocabSize = UniV,
         maxPieceLen = UniP, emRounds = UniR, minSeedCount = UniSeed))
 
@@ -1432,10 +1417,9 @@ object TextSimQueries {
 
   // ---- soft-EM unigram (q_t42): forward-backward expected counts ---------
 
-  private val softUnigramCache = dirMemo[Seq[graft.operators.Unigram.Piece]]
   private def sharedSoftVocab(s: SparkSession,
       d: String): Seq[graft.operators.Unigram.Piece] =
-    memoPerDir(softUnigramCache, s, d)(
+    Memo.session(s, d, "unigram.soft")(
       graft.operators.Unigram.trainSoft(docs(s, d), "text", vocabSize = UniV,
         maxPieceLen = UniP, emRounds = 1, minSeedCount = UniSeed))
 
@@ -1627,10 +1611,9 @@ object TextSimQueries {
         sharedKudoVocab(s, d))
       .select(col("piece"), col("count").as("ec_micro"), col("cost_micro"))
       .orderBy("piece")
-  private val kudoCache = dirMemo[Seq[graft.operators.Unigram.Piece]]
   private def sharedKudoVocab(s: SparkSession,
       d: String): Seq[graft.operators.Unigram.Piece] =
-    memoPerDir(kudoCache, s, d)(
+    Memo.session(s, d, "unigram.kudo")(
       graft.operators.Unigram.trainKudo(docs(s, d), "text",
         vocabSize = UniV, maxPieceLen = UniP, emRounds = 1,
         minSeedCount = UniSeed))
@@ -2260,69 +2243,48 @@ object TextSimQueries {
       |FROM sc LEFT JOIN gk ON gk.source = sc.source
       |ORDER BY sc.source""".stripMargin
 
+  /** Count-once memo for the ANN scale-rule preamble: every q_s* index
+    * query derives (nCentroids, nProbe) from the SAME nonzero-norm
+    * embedding count — one count job per (session, dir) instead of one
+    * per query (a real pipeline reads |corpus| from table stats once).
+    * A memoized Long, not cached data. */
+  private[graft] def nzEmbCount(s: SparkSession, d: String): Long =
+    Memo.session(s, d, "emb.nonzero")(
+      Tables.embeddings(s, d)
+        .where(Similarity.norm(col("embedding").cast("array<double>")) > 0)
+        .count())
   /** Tokenize-once cache: q_d2 (Jaccard) and q_d3 (MinHash) consume the
     * SAME distinct 3-shingle HASH rows — a real pipeline tokenizes once
     * and persists, so the bench session does too (the cache is per
     * (session, dir); correctness is unaffected, the rows are identical).
     * Hashed (id, int64) rows cache cheaply; persisting the string form
     * measurably costs more than recomputing it. */
-  // stopped sessions are purged on access (weak keys would not work here:
-  // the cached DataFrames strongly reference their session, so a
-  // WeakHashMap entry's value would pin its own key forever)
-  private val shingleCache = scala.collection.concurrent.TrieMap
-    .empty[SparkSession, scala.collection.concurrent.TrieMap[String, DataFrame]]
-
-  /** Count-once memo for the ANN scale-rule preamble: every q_s* index
-    * query derives (nCentroids, nProbe) from the SAME nonzero-norm
-    * embedding count — one count job per (session, dir) instead of one
-    * per query (a real pipeline reads |corpus| from table stats once).
-    * A memoized Long, not cached data; purged with stopped sessions. */
-  private val nzCountCache = dirMemo[Long]
-  private[graft] def nzEmbCount(s: SparkSession, d: String): Long =
-    memoPerDir(nzCountCache, s, d)(
-      Tables.embeddings(s, d)
-        .where(Similarity.norm(col("embedding").cast("array<double>")) > 0)
-        .count())
-  private def cachedPerDir(s: SparkSession, key: String,
+  private def cachedPerDir(s: SparkSession, d: String, name: String,
                            persist: Boolean = true)
-                          (build: => DataFrame): DataFrame = {
-    shingleCache.keySet.foreach { k =>
-      if (k.sparkContext.isStopped) shingleCache.remove(k)
-    }
-    shingleCache
-      .getOrElseUpdate(s,
-        scala.collection.concurrent.TrieMap.empty[String, DataFrame])
-      .getOrElseUpdate(key,
-        // persist=false for frames that are ALREADY materialized (e.g. a
-        // localCheckpointed labels frame) — the registry entry alone
-        // prevents rebuilding; unpersist on eviction is a no-op for them
-        // LAZY on purpose — re-litigated and re-rejected in round 15:
-        // the first consumer's plan races ~5 concurrent AQE stage-job
-        // copies of the build subtree against the empty cache, and
-        // round 14 measured that those duplicates (on otherwise-idle
-        // cores) beat an eager serializing count(). With the build
-        // widened (parallel) the trade looked flippable and a noisy
-        // interleaved A/B even said ×0.97 — but the decisive quiet
-        // 5-fork full-suite run said otherwise (q_d16 6.3 → 8.4 s,
-        // q_d6/q_d12/q_d3 +0.4–0.8 s each, untouched-query tide ×1.01):
-        // lazy lets the consumer's own DAG overlap the cache build with
-        // the rest of its stages, eager serializes two counts ahead of
-        // it. At 100 TB (saturated cores) eager wins — production
-        // callers should materialize explicitly; the bench keeps the
-        // measured-faster form.
-        if (persist)
-          build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        else build)
-  }
-  /** Drop (and unpersist) everything cached for `s`. Kept for long-lived
-    * sessions that want to reclaim the cache; the bench no longer needs
-    * it — repeat runs are isolated in fresh JVMs (round 5 showed repeat
-    * runs in ONE session accumulate enough persist/cleaner/GC state to
-    * inflate heavy queries 3–9×, even with this cleared between runs). */
-  private[graft] def clearSessionCache(s: SparkSession): Unit =
-    shingleCache.remove(s).foreach(_.values.foreach(_.unpersist()))
+                          (build: => DataFrame): DataFrame =
+    Memo.session(s, d, name)(
+      // persist=false for frames that are ALREADY materialized (e.g. a
+      // localCheckpointed labels frame) — the registry entry alone
+      // prevents rebuilding
+      // LAZY on purpose — re-litigated and re-rejected in round 15:
+      // the first consumer's plan races ~5 concurrent AQE stage-job
+      // copies of the build subtree against the empty cache, and
+      // round 14 measured that those duplicates (on otherwise-idle
+      // cores) beat an eager serializing count(). With the build
+      // widened (parallel) the trade looked flippable and a noisy
+      // interleaved A/B even said ×0.97 — but the decisive quiet
+      // 5-fork full-suite run said otherwise (q_d16 6.3 → 8.4 s,
+      // q_d6/q_d12/q_d3 +0.4–0.8 s each, untouched-query tide ×1.01):
+      // lazy lets the consumer's own DAG overlap the cache build with
+      // the rest of its stages, eager serializes two counts ahead of
+      // it. At 100 TB (saturated cores) eager wins — production
+      // callers should materialize explicitly; the bench keeps the
+      // measured-faster form.
+      if (persist)
+        build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      else build)
   private[graft] def sharedShingles(s: SparkSession, d: String): DataFrame =
-    cachedPerDir(s, s"shingles|$d") {
+    cachedPerDir(s, d, "shingles") {
       Dedup.shingleHashRows(docs(s, d), "doc_id", "text", n = 3)
     }
   /** Compute-on-raw-once battery shares (round-15, VERDICT r14 #2): the
@@ -2336,12 +2298,12 @@ object TextSimQueries {
     * persist cheaply (the shingle-cache lesson); every consumer stays
     * oracle-gated. */
   private[graft] def sharedDocQuality(s: SparkSession, d: String): DataFrame =
-    cachedPerDir(s, s"docquality|$d") {
+    cachedPerDir(s, d, "docquality") {
       Widen.widen(docs(s, d))
         .select(col("doc_id"), TextStats.qualityScore(col("text")).as("q"))
     }
   private[graft] def sharedGopherMetrics(s: SparkSession, d: String): DataFrame =
-    cachedPerDir(s, s"gophermetrics|$d") {
+    cachedPerDir(s, d, "gophermetrics") {
       TextStats.gopherMetrics(Widen.widen(docs(s, d)), "doc_id", "text")
     }
   /** q_d2 emits the pairs, q_d6 clusters THE SAME pairs — one pipeline,
@@ -2351,7 +2313,7 @@ object TextSimQueries {
     * grouped-count CTE, so the measured/oracled path is the scale path. */
   private[graft] val JaccardMaxBucket = 1000
   private def sharedJaccardPairs(s: SparkSession, d: String): DataFrame =
-    cachedPerDir(s, s"jacpairs|$d") {
+    cachedPerDir(s, d, "jacpairs") {
       Dedup.jaccardPairsFromHashes(sharedShingles(s, d),
         minJaccard = 0.05, maxBucketSize = JaccardMaxBucket)
     }
@@ -2586,7 +2548,7 @@ object TextSimQueries {
     * eagerly localCheckpointed frame (re-scanning it never re-runs the
     * passes); the registry entry is what stops a second build. */
   private def sharedLabels(s: SparkSession, d: String): DataFrame =
-    cachedPerDir(s, s"labels|$d", persist = false) {
+    cachedPerDir(s, d, "labels", persist = false) {
       Dedup.componentLabels(sharedJaccardPairs(s, d).select("id_a", "id_b"))
     }
 
@@ -2715,7 +2677,7 @@ object TextSimQueries {
     // persisted: lshCandidatePairs consumes sig in THREE subtrees (band
     // exchange + two signature joins) — without a cache the post-shuffle
     // final min-aggregates re-run per consumer (see its scaladoc)
-    val sig = cachedPerDir(s, s"minhashsig|$d") {
+    val sig = cachedPerDir(s, d, "minhashsig") {
       Dedup.minhashFromHashes(sharedShingles(s, d), k = 64)
     }
     Dedup.lshCandidatePairs(sig, bands = 16, rowsPerBand = 4)
@@ -3594,14 +3556,12 @@ object TextSimQueries {
     * float math. The recall CLAIM (OPQ beats plain PQ at equal code
     * bytes) is gated separately in DedupSimilaritySpec on the rank-8
     * low-rank table. */
-  private val opqRotCache = scala.collection.concurrent.TrieMap
-    .empty[String, Array[Array[Double]]]
   private val opqLastDir =
     new java.util.concurrent.atomic.AtomicReference[String]("")
   private def qS20annOpq(s: SparkSession, d: String): DataFrame = {
     val e16 = emb(s, d).select(col("vec_id"),
       slice(col("embedding"), 1, 16).as("e16"))
-    val r = opqRotCache.getOrElseUpdate(d,
+    val r = Memo.path(d, "opq.rotation")(
       graft.operators.Opq.rotationFromPca(e16, "e16", dim = 16, m = 4))
     opqLastDir.set(d)
     val rc = graft.operators.Opq.rotate(e16, "e16", r, "rot")
@@ -3612,7 +3572,7 @@ object TextSimQueries {
   private def oS20: String = {
     val m = 4; val dsub = 4; val cbk = 16; val k = 5; val rerank = 50
     val dim = 16
-    opqRotCache.get(opqLastDir.get) match {
+    Memo.peek[Array[Array[Double]]](opqLastDir.get, "opq.rotation") match {
       case None =>
         // the literals exist only after the query ran in this JVM —
         // Verify always runs queries before dumping oracle_sql.json, so

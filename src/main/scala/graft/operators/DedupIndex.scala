@@ -153,41 +153,20 @@ object DedupIndex {
     }
   }
 
-  /** Write-through session memos for the three tiny sidecars (meta,
-    * bloom, applied-epochs high-water mark). Every sidecar READ is a
-    * Spark job (`head()` over a one-row parquet); a streaming ingest
-    * loop pays meta+bloom+marker reads PER EPOCH — pure driver
-    * round-trip overhead at any scale, since the values are bounded
-    * driver artifacts to begin with. All sidecar mutations go through
-    * this object (the index's documented single-writer lane), so each
-    * write also updates the memo and the values cannot go stale for
-    * in-process readers; the first read of an index built by another
-    * process still comes from disk. Keyed by PATH alone, not by session:
-    * the values are plain driver data (no session tie), and streaming
-    * foreachBatch bodies run under CLONED sessions — a session-keyed
-    * memo would go stale for the parent session the moment a stream
-    * epoch appended (caught by DedupIndexSpec's stream-face test).
-    * Entry count is bounded by the number of index paths the process
-    * touches. Results are unchanged — the memo holds exactly what the
-    * sidecar file holds. */
-  private val sidecarMemo = scala.collection.concurrent.TrieMap
-    .empty[String, AnyRef]
-  private def memoGet[T <: AnyRef](spark: SparkSession, key: String)
-                                  (read: => T): T =
-    sidecarMemo.getOrElseUpdate(key, read).asInstanceOf[T]
-  private def memoPut(spark: SparkSession, key: String, v: AnyRef): Unit =
-    sidecarMemo.put(key, v)
+  // Every sidecar read is a Spark job (`head()` over a one-row parquet)
+  // that a streaming ingest loop would pay per epoch, so meta, bloom and
+  // the applied-epochs mark sit in graft.Memo's write-through path scope.
 
   private def writeBloom(spark: SparkSession, path: String,
                          f: Bloom.Filter): Unit = {
     import spark.implicits._
     Seq((f.words.toSeq, f.numHashes)).toDF("words", "num_hashes")
       .write.mode("overwrite").parquet(s"$path/bloom")
-    memoPut(spark, s"bloom|$path", Some(f))
+    graft.Memo.put(path, "bloom", Some(f))
   }
 
   private def readBloom(spark: SparkSession, path: String): Option[Bloom.Filter] =
-    memoGet[Option[Bloom.Filter]](spark, s"bloom|$path") {
+    graft.Memo.path[Option[Bloom.Filter]](path, "bloom") {
       IndexFiles.readIfExists(spark, s"$path/bloom").map { df =>
         val r = df.head()
         Bloom.Filter(r.getSeq[Long](r.fieldIndex("words")).toArray,
@@ -215,10 +194,10 @@ object DedupIndex {
     // meta is the commit marker: drop the previous one first, so a build
     // that fails below leaves no readable index over partial artifacts
     IndexFiles.remove(spark, s"$path/meta")
-    sidecarMemo.remove(s"meta|$path")
+    graft.Memo.invalidate(path)
     // a fresh build invalidates any previous index's optional sidecars
     IndexFiles.remove(spark, s"$path/tombstones")
-    IndexFiles.remove(spark, s"$path/applied_epochs")
+    AppliedEpochs.reset(spark, path)
     // a rebuild must clear EVERY epoch directory, not just the base one
     Seq("shingles", "counts", "fps")
       .foreach(p => IndexFiles.remove(spark, s"$path/$p"))
@@ -232,17 +211,14 @@ object DedupIndex {
     // meta LAST: it exists only over a complete build
     Seq((n, portable)).toDF("n", "portable")
       .write.mode("overwrite").parquet(s"$path/meta")
-    memoPut(spark, s"meta|$path", (n, portable))
-    // build reset applied_epochs above; reflect that in the memo
-    memoPut(spark, s"hwm|$path", None)
+    graft.Memo.put(path, "meta", (n, portable))
   }
 
   private def readMeta(spark: SparkSession, path: String): (Int, Boolean) =
-    memoGet[(Integer, java.lang.Boolean)](spark, s"meta|$path") {
+    graft.Memo.path(path, "meta") {
       val m = spark.read.parquet(s"$path/meta").head()
-      (Integer.valueOf(m.getAs[Int]("n")),
-        java.lang.Boolean.valueOf(m.getAs[Boolean]("portable")))
-    } match { case (n, p) => (n.intValue(), p.booleanValue()) }
+      (m.getAs[Int]("n"), m.getAs[Boolean]("portable"))
+    }
 
   /** Fold a new batch into the index — tokenized with the STORED shingle
     * width and hash flavor (never re-passed: a mismatched width would
@@ -307,7 +283,7 @@ object DedupIndex {
       // merge into a COPY: the memoized filter stays immutable, so a
       // failed write cannot leave the memo diverged from disk and
       // concurrent in-process readers never observe a half-mutated
-      // filter (ADVICE r14); memoPut happens inside writeBloom, after
+      // filter (ADVICE r14); the memo is updated inside writeBloom, after
       // the parquet write succeeded
       val merged = stored.words.clone()
       var i = 0
@@ -370,10 +346,7 @@ object DedupIndex {
   def compact(spark: SparkSession, path: String): Unit = {
     val shingles = spark.read.parquet(s"$path/shingles")
     if (shingles.columns.contains("epoch")) {
-      // partition-directory inference types epoch as int; widen to long
-      val pending = Option(
-          shingles.agg(max(col("epoch").cast("long"))).head().get(0))
-        .map(_.asInstanceOf[Long]).filter(_ > BaseEpoch)
+      val pending = AppliedEpochs.maxStamp(shingles, BaseEpoch)
       val marker = lastAppliedEpoch(spark, path)
       pending.filterNot(p => marker.exists(_ >= p)).foreach { p =>
         throw new IllegalStateException(
@@ -418,30 +391,16 @@ object DedupIndex {
   }
 
   /** Highest streaming epoch already folded into the index (None before
-    * the first), and its recorder — the replay guard
+    * the first), and its recorder — the [[AppliedEpochs]] replay guard
     * [[graft.streaming.StreamIndexDedup]] uses to make `appendKept`
-    * idempotent per epoch. Kept on the index (a parquet sidecar of
-    * applied epoch ids) so the guard survives driver restarts with the
-    * artifacts it protects. */
+    * idempotent per epoch. */
   private[graft] def lastAppliedEpoch(spark: SparkSession,
                                       path: String): Option[Long] =
-    memoGet[Option[Long]](spark, s"hwm|$path") {
-      IndexFiles.readIfExists(spark, s"$path/applied_epochs")
-        .flatMap(df => Option(df.agg(max("epoch")).head().get(0))
-          .map(_.asInstanceOf[Long]))
-    }
+    AppliedEpochs.applied(spark, path)
 
   private[graft] def recordAppliedEpoch(spark: SparkSession, path: String,
-                                        epoch: Long): Unit = {
-    import spark.implicits._
-    Seq(epoch).toDF("epoch").write.mode("append")
-      .parquet(s"$path/applied_epochs")
-    // high-water semantics: the marker read is max(epoch), so the memo
-    // folds the new stamp into whatever was known (disk state included —
-    // read through first so an older on-disk high water can't be lost)
-    val prev = lastAppliedEpoch(spark, path)
-    memoPut(spark, s"hwm|$path", Some(prev.fold(epoch)(math.max(_, epoch))))
-  }
+                                        epoch: Long): Unit =
+    AppliedEpochs.record(spark, path, epoch)
 
   /** Check a batch against the indexed corpus. Output per batch doc
     * (same frame as `Dedup.dedupAgainstCorpus`): `id`,

@@ -34,39 +34,18 @@ object IvfPqIndex {
 
   private def asDouble(c: org.apache.spark.sql.Column) = c.cast("array<double>")
 
-  /** Sidecar memos (round-15; the [[DedupIndex]] sidecar-memo
-    * discipline): every [[search]]/[[append]] re-ran a `head()` job over
-    * the one-row codebook parquet and re-listed/re-inferred the
-    * centroids and codes tables — pure driver round-trips, since the
-    * values are bounded driver artifacts (codebook row, codes schema)
-    * or immutable-between-builds plans (centroids — rewritten only by
-    * [[build]], which invalidates; codes FILES change on append, so
-    * only their schema — fixed at build — is memoized, never a plan).
-    * Single-writer lane: all sidecar mutations go through this object;
-    * the first read of a foreign index still comes from disk. */
-  private val codebookMemo = scala.collection.concurrent.TrieMap
-    .empty[String, org.apache.spark.sql.Row]
-  private val codesSchemaMemo = scala.collection.concurrent.TrieMap
-    .empty[String, org.apache.spark.sql.types.StructType]
-  private val centsMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  private def invalidate(path: String): Unit = {
-    codebookMemo.remove(path)
-    codesSchemaMemo.remove(path)
-    centsMemo.keySet.foreach { case k @ (_, p) =>
-      if (p == path) centsMemo.remove(k)
-    }
-  }
+  // Every [[search]]/[[append]] would re-run a `head()` job over the
+  // one-row codebook and re-list the centroids and codes tables, so the
+  // codebook row and codes schema sit in graft.Memo's path scope and the
+  // centroids plan in its session scope. All three change only at
+  // [[build]], which invalidates them; codes FILES change on append, so
+  // only their schema (fixed at build) is memoized, never a plan.
   private def readCodebook(spark: SparkSession, path: String): org.apache.spark.sql.Row =
-    codebookMemo.getOrElseUpdate(path,
+    graft.Memo.path(path, "codebook")(
       spark.read.parquet(s"$path/codebook").head())
-  private def readCents(spark: SparkSession, path: String): DataFrame = {
-    centsMemo.keySet.foreach { case k @ (sess, _) =>
-      if (sess.sparkContext.isStopped) centsMemo.remove(k)
-    }
-    centsMemo.getOrElseUpdate((spark, path),
+  private def readCents(spark: SparkSession, path: String): DataFrame =
+    graft.Memo.session(spark, path, "centroids")(
       spark.read.parquet(s"$path/centroids"))
-  }
   /** The codes read schema with `centroid_id` pinned to the centroids
     * sidecar's type (partition-directory inference doesn't round-trip
     * every id type — see [[search]]); column set is fixed at build, so
@@ -74,7 +53,7 @@ object IvfPqIndex {
   private def codesSchema(spark: SparkSession, path: String,
                           centType: org.apache.spark.sql.types.DataType)
       : org.apache.spark.sql.types.StructType =
-    codesSchemaMemo.getOrElseUpdate(path,
+    graft.Memo.path(path, "codes.schema")(
       org.apache.spark.sql.types.StructType(
         spark.read.parquet(s"$path/codes").schema.map(f =>
           if (f.name == "centroid_id") f.copy(dataType = centType) else f)))
@@ -139,7 +118,7 @@ object IvfPqIndex {
         "is unsupported (approximate residuals would poison the per-list " +
         "codebooks silently)")
     val spark = corpus.sparkSession
-    invalidate(path) // a rebuild replaces every sidecar the memos mirror
+    graft.Memo.invalidate(path) // a rebuild replaces every memoized sidecar
     // materialize the trained centroids ONCE: they are consumed by the
     // encode (broadcast) AND written as a sidecar — un-materialized, the
     // corpus-scanning sampling subtree executed twice (round-15)

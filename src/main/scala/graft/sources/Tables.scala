@@ -23,23 +23,10 @@ object Tables {
     * The memo returns the same analyzed DataFrame (an immutable plan —
     * no data is cached, scans still read the files every execution),
     * so path listing + schema inference happen once per (session, dir,
-    * table). Keyed by the SESSION INSTANCE (not identityHashCode, which
-    * can collide after a stopped session is GC'd — ADVICE r14), with
-    * stopped sessions purged on access, matching the
-    * TextSimQueries.shingleCache discipline. */
-  private val resolved = scala.collection.concurrent.TrieMap
-    .empty[SparkSession, scala.collection.concurrent.TrieMap[(String, String), DataFrame]]
-
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    resolved.keySet.foreach { s =>
-      if (s.sparkContext.isStopped) resolved.remove(s)
-    }
-    resolved
-      .getOrElseUpdate(spark,
-        scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])
-      .getOrElseUpdate((sfDir, name),
-        spark.read.parquet(s"$sfDir/$name.parquet"))
-  }
+    * table), in graft.Memo's session scope. */
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    graft.Memo.session(spark, sfDir, s"table.$name")(
+      spark.read.parquet(s"$sfDir/$name.parquet"))
 
   def lineitem(spark: SparkSession, d: String): DataFrame = table(spark, d, "lineitem")
   def orders(spark: SparkSession, d: String): DataFrame = table(spark, d, "orders")
@@ -69,19 +56,15 @@ object Tables {
   def documents(spark: SparkSession, d: String): DataFrame = table(spark, d, "documents")
   def embeddings(spark: SparkSession, d: String): DataFrame = table(spark, d, "embeddings")
 
-  private val lastRegistered = scala.collection.concurrent.TrieMap
-    .empty[SparkSession, String]
-
   /** Register all tables of a scale-factor dir as temp views, so
     * `spark.sql` queries (scalar subqueries, etc.) can reference them by
     * the same names the DuckDB oracle uses. Idempotent per (session, dir):
     * repeated calls with the same dir skip the re-registration; a dir
     * change re-registers everything. */
   def registerAll(spark: SparkSession, sfDir: String): Unit = {
-    lastRegistered.keySet.foreach { s =>
-      if (s.sparkContext.isStopped) lastRegistered.remove(s)
-    }
-    if (!lastRegistered.put(spark, sfDir).contains(sfDir)) {
+    val last = graft.Memo.session(spark, "", "tables.views")(
+      new java.util.concurrent.atomic.AtomicReference[String])
+    if (last.getAndSet(sfDir) != sfDir) {
       names.foreach { n =>
         val df = if (n == "events") events(spark, sfDir) else table(spark, sfDir, n)
         df.createOrReplaceTempView(n)

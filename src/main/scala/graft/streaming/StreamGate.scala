@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
-import graft.operators.{IndexFiles, TextStats}
+import graft.operators.{AppliedEpochs, IndexFiles, TextStats}
 
 /** Streaming twin of the rank-defined curation gates — the live face of
   * [[TextStats.percentileGate]] (X57) and [[TextStats.rankBuckets]]
@@ -87,17 +87,12 @@ object StreamGate {
                    compactEvery: Int = 0): DataFrame = {
     require(compactEvery >= 0, s"compactEvery must be >= 0: $compactEvery")
     val spark = batch.sparkSession
-    val applied = IndexFiles.readIfExists(spark, s"$path/applied_epochs")
-      .flatMap(df => Option(df.agg(max("epoch")).head().get(0))
-        .map(_.asInstanceOf[Long]))
-    if (!applied.exists(_ >= epoch)) {
+    if (!AppliedEpochs.applied(spark, path).exists(_ >= epoch)) {
       batch.select(col(groupCol).as("group"), scoreCol.as("score"))
         .groupBy("group", "score").agg(count(lit(1)).as("c"))
         .withColumn("epoch", lit(epoch))
         .write.mode("append").parquet(s"$path/hist")
-      import spark.implicits._
-      Seq(epoch).toDF("epoch").write.mode("append")
-        .parquet(s"$path/applied_epochs")
+      AppliedEpochs.record(spark, path, epoch)
       if (compactEvery > 0 && (epoch + 1) % compactEvery == 0)
         compact(spark, path)
     }
@@ -111,18 +106,8 @@ object StreamGate {
     * would re-append as a non-duplicate and double-count. */
   def compact(spark: SparkSession, path: String): Unit = {
     val hist = spark.read.parquet(s"$path/hist")
-    val pending = Option(
-        hist.where(col("epoch") > lit(CompactedEpoch))
-          .agg(max("epoch")).head().get(0))
-      .map(_.asInstanceOf[Long])
-    val applied = IndexFiles.readIfExists(spark, s"$path/applied_epochs")
-      .flatMap(df => Option(df.agg(max("epoch")).head().get(0))
-        .map(_.asInstanceOf[Long]))
-    pending.filterNot(p => applied.exists(_ >= p)).foreach { p =>
-      import spark.implicits._
-      Seq(p).toDF("epoch").write.mode("append")
-        .parquet(s"$path/applied_epochs")
-    }
+    AppliedEpochs.sealPending(spark, path,
+      AppliedEpochs.maxStamp(hist, CompactedEpoch))
     val staged = s"$path/hist_compacting"
     mergedHist(spark, path)
       .select(col("group"), col("score"), col("_c").as("c"),

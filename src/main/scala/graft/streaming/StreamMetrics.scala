@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
-import graft.operators.{IndexFiles, Metrics}
+import graft.operators.{AppliedEpochs, IndexFiles, Metrics}
 
 /** Streaming model-quality monitor — the live twin of the batch
   * grade lane ([[graft.operators.Metrics]]): a stream of scored
@@ -40,29 +40,6 @@ object StreamMetrics {
   /** The epoch stamp on rows produced by [[compact]] — never a real
     * foreachBatch epoch (those are ≥ 0). */
   val CompactedEpoch: Long = -1L
-
-  /** Write-through memo of the `applied_epochs` high-water mark, keyed
-    * by PATH (the [[graft.operators.DedupIndex]] sidecar-memo
-    * discipline: the value is plain driver data, all marker writes go
-    * through this object, and foreachBatch bodies run under cloned
-    * sessions so a session-keyed memo would go stale). Saves one
-    * aggregate job per epoch on the store's single-writer lane; the
-    * first read of a store written by another process comes from disk. */
-  private val hwmMemo = scala.collection.concurrent.TrieMap
-    .empty[String, Option[Long]]
-  private def appliedHwm(spark: SparkSession, path: String): Option[Long] =
-    hwmMemo.getOrElseUpdate(path,
-      IndexFiles.readIfExists(spark, s"$path/applied_epochs")
-        .flatMap(df => Option(df.agg(max("epoch")).head().get(0))
-          .map(_.asInstanceOf[Long])))
-  private def recordHwm(spark: SparkSession, path: String,
-                        epoch: Long): Unit = {
-    import spark.implicits._
-    Seq(epoch).toDF("epoch").write.mode("append")
-      .parquet(s"$path/applied_epochs")
-    val prev = appliedHwm(spark, path)
-    hwmMemo.put(path, Some(prev.fold(epoch)(math.max(_, epoch))))
-  }
 
   /** The store's merged histogram: epoch-replay duplicates dropped
     * (exact duplicates by the stamp contract), then counts summed.
@@ -119,16 +96,9 @@ object StreamMetrics {
     * swap instant — run in the store's write lane. */
   def compact(spark: SparkSession, path: String): Unit = {
     val hist = spark.read.parquet(s"$path/hist")
-    if (hist.columns.contains("epoch")) {
-      val pending = Option(
-          hist.where(col("epoch") > lit(CompactedEpoch))
-            .agg(max("epoch")).head().get(0))
-        .map(_.asInstanceOf[Long])
-      val applied = appliedHwm(spark, path)
-      pending.filterNot(p => applied.exists(_ >= p)).foreach { p =>
-        recordHwm(spark, path, p)
-      }
-    }
+    if (hist.columns.contains("epoch"))
+      AppliedEpochs.sealPending(spark, path,
+        AppliedEpochs.maxStamp(hist, CompactedEpoch))
     val staged = s"$path/hist_compacting"
     mergedHist(spark, path)
       .withColumn("epoch", lit(CompactedEpoch))
@@ -164,12 +134,11 @@ object StreamMetrics {
                    bins: Int = 10, compactEvery: Int = 0): DataFrame = {
     require(compactEvery >= 0, s"compactEvery must be >= 0: $compactEvery")
     val spark = batch.sparkSession
-    val applied = appliedHwm(spark, path)
-    if (!applied.exists(_ >= epoch)) {
+    if (!AppliedEpochs.applied(spark, path).exists(_ >= epoch)) {
       Metrics.scoreHistogram(batch, scoreCol, labelCol)
         .withColumn("epoch", lit(epoch))
         .write.mode("append").parquet(s"$path/hist")
-      recordHwm(spark, path, epoch)
+      AppliedEpochs.record(spark, path, epoch)
       if (compactEvery > 0 && (epoch + 1) % compactEvery == 0)
         compact(spark, path)
     }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
-import graft.operators.{IndexFiles, Sampling}
+import graft.operators.{AppliedEpochs, IndexFiles, Sampling}
 
 /** Streaming twin of DoReMi-lite domain reweighting
   * ([[Sampling.doremiWeights]], X125): a stream of scored examples
@@ -99,17 +99,12 @@ object StreamMixture {
     require(rounds >= 1, s"rounds must be positive: $rounds")
     require(compactEvery >= 0, s"compactEvery must be >= 0: $compactEvery")
     val spark = batch.sparkSession
-    val applied = IndexFiles.readIfExists(spark, s"$path/applied_epochs")
-      .flatMap(df => Option(df.agg(max("epoch")).head().get(0))
-        .map(_.asInstanceOf[Long]))
-    if (!applied.exists(_ >= epoch)) {
+    if (!AppliedEpochs.applied(spark, path).exists(_ >= epoch)) {
       epochStats(batch, domainCol, idCol, excessCol, rounds, sampleFrac,
         salt)
         .withColumn("epoch", lit(epoch))
         .write.mode("append").parquet(s"$path/stats")
-      import spark.implicits._
-      Seq(epoch).toDF("epoch").write.mode("append")
-        .parquet(s"$path/applied_epochs")
+      AppliedEpochs.record(spark, path, epoch)
       if (compactEvery > 0 && (epoch + 1) % compactEvery == 0)
         compact(spark, path)
     }
@@ -120,18 +115,8 @@ object StreamMixture {
     * discipline verbatim. */
   def compact(spark: SparkSession, path: String): Unit = {
     val stats = spark.read.parquet(s"$path/stats")
-    val pending = Option(
-        stats.where(col("epoch") > lit(CompactedEpoch))
-          .agg(max("epoch")).head().get(0))
-      .map(_.asInstanceOf[Long])
-    val applied = IndexFiles.readIfExists(spark, s"$path/applied_epochs")
-      .flatMap(df => Option(df.agg(max("epoch")).head().get(0))
-        .map(_.asInstanceOf[Long]))
-    pending.filterNot(p => applied.exists(_ >= p)).foreach { p =>
-      import spark.implicits._
-      Seq(p).toDF("epoch").write.mode("append")
-        .parquet(s"$path/applied_epochs")
-    }
+    AppliedEpochs.sealPending(spark, path,
+      AppliedEpochs.maxStamp(stats, CompactedEpoch))
     val staged = s"$path/stats_compacting"
     mergedStats(spark, path)
       .withColumn("epoch", lit(CompactedEpoch))

@@ -206,6 +206,25 @@ class DedupIndexSpec extends AnyFunSuite with SparkSpec {
     assert(gated == ungated, "bloom has no false negatives by contract")
   }
 
+  test("path aliases share the sidecar memos: a check through `dir/` sees " +
+    "an append through `dir`") {
+    import spark.implicits._
+    val dir = tmp("alias")
+    DedupIndex.build(corpus, "doc_id", "text", dir, n = 3)
+    val text = "zz yy xx ww vv uu tt ss rr qq pp oo"
+    // the first check through the alias reads meta and bloom into memo
+    DedupIndex.checkBatch(Seq((9_000_003L, text)).toDF("doc_id", "text"),
+      "doc_id", "text", dir + "/", 0.5).collect()
+    DedupIndex.append(Seq((9_000_004L, text)).toDF("doc_id", "text"),
+      "doc_id", "text", dir)
+    // an exact copy of the appended doc must pass the Bloom gate
+    val verdicts = rows(DedupIndex.checkBatch(
+      Seq((9_000_005L, text)).toDF("doc_id", "text"),
+      "doc_id", "text", dir + "/", 0.5))
+    assert(verdicts.map(_._2) == Set(true),
+      s"a stale Bloom filter hid the appended copy: $verdicts")
+  }
+
   test("streaming replay guard: re-delivered epoch leaves the index byte-identical") {
     import spark.implicits._
     val dir = tmp("replay")
