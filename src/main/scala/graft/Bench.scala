@@ -5,7 +5,6 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
-import org.apache.spark.sql.functions._
 
 /** The harness main (`graft.Verify`, the correctness dump, is the only
   * other one). Every subcommand runs on [[GraftSession.local]], reads
@@ -19,8 +18,8 @@ import org.apache.spark.sql.functions._
   * graft.Bench explain <query> [sfDir]           formatted plan, three noop-sink timings
   * graft.Bench plans <outDir> <suffix> <prefix,...>
   * graft.Bench probe <query>                     one line per Spark job of the query
-  * graft.Bench synth <baseDir> <outDir> <copies> see [[synth]]
-  * graft.Bench smoke <mode>                      see [[ScaleSmoke]]
+  * graft.Bench synth <baseDir> <outDir> <copies> see [[Scale.writeCopies]]
+  * graft.Bench scale <N> <prefix,...>            see [[scale]]
   * }}}
   *
   * `ab` runs `micro` in fresh child JVMs, in interleaved pairs that
@@ -58,7 +57,7 @@ object Bench {
   private val Usage =
     """usage: graft.Bench [micro <prefix,...> | ab <baseClasspathFile> <prefix,...> [rounds] |
       |  explain <query> [sfDir] | plans <outDir> <suffix> <prefix,...> | probe <query> |
-      |  synth <baseDir> <outDir> <copies> | smoke <mode>]""".stripMargin
+      |  synth <baseDir> <outDir> <copies> | scale <N> <prefix,...>]""".stripMargin
 
   /** The queries whose names start with one of the comma-separated
     * prefixes, by name. */
@@ -341,35 +340,23 @@ $ms
     println(f"[total] $sec%.2fs rows=$n")
   }
 
-  /** Writes a `copies`× copy of a testdata dir, for core-ratio timings
-    * (no oracle): documents, embeddings and events are unioned `copies`
-    * times with salted ids, document text gets a per-copy suffix so the
-    * exact-dup stages keep rows (copies stay near-dups), and each is
-    * written as 32 files, since every table of a generated dir is one
-    * row group that a scan cannot split. The other tables are copied
-    * once, so reference joins keep their semantics. */
-  private def synth(spark: SparkSession, base: String, out: String, copies: Int): Unit = {
-    val salt = 1000000000L
-    def scaled(name: String, idCol: String, perturb: Boolean): Unit = {
-      val df = spark.read.parquet(s"$base/$name.parquet")
-      val u = (0 until copies).map { i =>
-        val d = df.withColumn(idCol, col(idCol) + lit(i * salt))
-        if (perturb && i > 0)
-          d.withColumn("text", concat(col("text"), lit(s" c$i")))
-        else d
-      }.reduce(_ union _)
-      u.repartition(32).write.mode("overwrite").parquet(s"$out/$name.parquet")
-      println(s"[synth] $name x$copies")
+  /** The declared queries ([[Scale.Declared]]) among those the prefixes
+    * select. */
+  private def declared(prefixes: String): Seq[String] =
+    select(prefixes).map(_._1).filter(Scale.Declared.contains)
+
+  /** Checks each selected query's scale invariant at `n`× over the
+    * harness dir ([[Scale.check]]), prints its 1× and `n`× build-and-cache
+    * times, and fails if any invariant broke. */
+  private def scale(spark: SparkSession, n: Int, prefixes: String): Unit = {
+    val outcomes = Scale.check(spark, Env.sfDir, n,
+      declared(prefixes).map(q => q -> Scale.Declared(q)))
+    outcomes.foreach { o =>
+      println(f"[scale] ${o.name}%-28s 1x ${o.secs1}%7.2fs  ${n}x ${o.secsN}%8.2fs  " +
+        o.failure.fold("ok")("FAILED: " + _))
     }
-    scaled("documents", "doc_id", perturb = true)
-    scaled("embeddings", "vec_id", perturb = false)
-    scaled("events", "event_id", perturb = false)
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem").foreach { n =>
-      spark.read.parquet(s"$base/$n.parquet")
-        .write.mode("overwrite").parquet(s"$out/$n.parquet")
-      println(s"[synth] $n x1")
-    }
+    val failed = outcomes.filter(_.failure.isDefined).map(_.name)
+    require(failed.isEmpty, s"scale invariants broken: ${failed.mkString(", ")}")
   }
 
   /** The harness's environment knobs, each with its one default. */
@@ -407,11 +394,13 @@ $ms
       case Seq("explain", q, sf) if query(q) => Right(InSession(explain(_, q, sf)))
       case Seq("plans", out, suffix, ps) if some(ps) => Right(InSession(plans(_, Env.sfDir, out, suffix, ps)))
       case Seq("probe", q) if query(q) => Right(InSession(probe(_, q)))
-      case Seq("synth", base, out, n) if positive(n) => Right(InSession(synth(_, base, out, n.toInt)))
-      case Seq("smoke", mode) if ScaleSmoke.Modes.contains(mode) =>
-        Right(InSession(ScaleSmoke.run(_, Env.sfDir, mode)))
-      case _ => Left(s"$Usage\nsmoke modes: ${ScaleSmoke.Modes.mkString(", ")}; " +
-        s"got: ${args.mkString(" ")}")
+      // core-ratio inputs (no oracle): per-copy document text keeps the
+      // exact-dup stages' rows
+      case Seq("synth", base, out, n) if positive(n) =>
+        Right(InSession(Scale.writeCopies(_, base, out, n.toInt, perturb = true)))
+      case Seq("scale", n, ps) if n.toIntOption.exists(_ >= 2) && declared(ps).nonEmpty =>
+        Right(InSession(scale(_, n.toInt, ps)))
+      case _ => Left(s"$Usage\ngot: ${args.mkString(" ")}")
     }
   }
 

@@ -154,17 +154,14 @@ object Bpe {
     * row collect; lineage is cut per round (localCheckpoint) so the
     * chained replace expressions never nest past one round's batch. */
   def trainBatched(df: DataFrame, textCol: String, k: Int,
-                   batch: Int = 512,
-                   roundHook: (Int, Int) => Unit = (_, _) => ()): Seq[Merge] =
-    trainBatchedFromHistogram(wordHistogram(df, textCol), k, batch, roundHook)
+                   batch: Int = 512): Seq[Merge] =
+    trainBatchedFromHistogram(wordHistogram(df, textCol), k, batch)
 
   /** [[trainBatched]] on a prepared (w, cnt) histogram — the shared
     * core, so byte-level training can rep the words first without a
     * second corpus pass. */
   def trainBatchedFromHistogram(wordHist: DataFrame, k: Int,
-                                batch: Int = 512,
-                                roundHook: (Int, Int) => Unit = (_, _) => ())
-      : Seq[Merge] = {
+                                batch: Int = 512): Seq[Merge] = {
     require(k >= 1 && k <= 100000, s"k out of range: $k")
     require(batch >= 1, s"batch must be positive: $batch")
     var hist = wordHist
@@ -172,7 +169,6 @@ object Bpe {
       .localCheckpoint()
     val out = Seq.newBuilder[Merge]
     var done = 0
-    var rounds = 0
     while (done < k) {
       val toks = split(trim(col("seq"), Sep), Sep + Sep)
       val want = math.min(batch, k - done)
@@ -212,8 +208,6 @@ object Bpe {
       }
       out ++= acc
       done += acc.length
-      rounds += 1
-      roundHook(rounds, acc.length)
       // apply in chunks of <= 64 chained replaces per projection: one
       // projection with hundreds of nested replace nodes overflows the
       // analyzer's recursion and the generated method's 64 KB limit; the
@@ -265,12 +259,10 @@ object Bpe {
     * vocabulary serves [[encodeBytes]] directly. GPT-2's construction,
     * on the word-histogram scale discipline. */
   def trainBytesBatched(df: DataFrame, textCol: String, k: Int,
-                        batch: Int = 512,
-                        roundHook: (Int, Int) => Unit = (_, _) => ())
-      : Seq[Merge] = {
+                        batch: Int = 512): Seq[Merge] = {
     val repped = wordHistogram(df, textCol)
       .select(graft.functions.ByteRep(col("w")).as("w"), col("cnt"))
-    trainBatchedFromHistogram(repped, k, batch, roundHook)
+    trainBatchedFromHistogram(repped, k, batch)
   }
 
   /** Total byte-level encode: ANY string (punctuation, emoji, controls,

@@ -101,8 +101,7 @@ object Unigram {
     * re-normalized micro-nat costs. */
   def train(df: DataFrame, textCol: String, vocabSize: Int,
             maxPieceLen: Int = 4, emRounds: Int = 2,
-            minSeedCount: Long = 2L,
-            roundHook: Int => Unit = _ => ()): Seq[Piece] = {
+            minSeedCount: Long = 2L): Seq[Piece] = {
     require(vocabSize >= 1, s"vocabSize must be positive: $vocabSize")
     require(maxPieceLen >= 1, s"maxPieceLen must be positive: $maxPieceLen")
     require(emRounds >= 1, s"emRounds must be positive: $emRounds")
@@ -113,7 +112,7 @@ object Unigram {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
     require(seed.nonEmpty, "unigram training needs a non-empty corpus")
     var vocab = normalized(seed)
-    for (r <- 1 to emRounds) {
+    for (_ <- 1 to emRounds) {
       // E-step: ONE aggregate over the histogram — Viterbi pieces per
       // distinct word (reference-object kernel), weighted by word count
       val costs = vocab.map(p => p.piece -> p.costMicro).toMap
@@ -130,7 +129,6 @@ object Unigram {
         else eCounts.get(p.piece).filter(_ > 0).map(p.piece -> _)
       }
       vocab = normalized(next)
-      roundHook(r)
     }
     pruneTo(vocab, vocabSize)
   }
@@ -174,18 +172,16 @@ object Unigram {
     * fixture). */
   def trainSoft(df: DataFrame, textCol: String, vocabSize: Int,
                 maxPieceLen: Int = 4, emRounds: Int = 1,
-                minSeedCount: Long = 2L,
-                roundHook: Int => Unit = _ => ()): Seq[Piece] =
-    pruneTo(softRounds(df, textCol, maxPieceLen, emRounds, minSeedCount,
-      roundHook)._2, vocabSize)
+                minSeedCount: Long = 2L): Seq[Piece] =
+    pruneTo(softRounds(df, textCol, maxPieceLen, emRounds, minSeedCount)._2,
+      vocabSize)
 
   /** Seed + `emRounds` soft-EM rounds — the shared core of [[trainSoft]]
     * (frequency prune) and [[trainKudo]] (likelihood-loss prune).
     * Returns the checkpointed word histogram (the prune's loss aggregate
     * re-reads it) and the post-EM vocabulary. */
   private def softRounds(df: DataFrame, textCol: String, maxPieceLen: Int,
-                         emRounds: Int, minSeedCount: Long,
-                         roundHook: Int => Unit): (DataFrame, Seq[Piece]) = {
+                         emRounds: Int, minSeedCount: Long): (DataFrame, Seq[Piece]) = {
     require(maxPieceLen >= 1, s"maxPieceLen must be positive: $maxPieceLen")
     require(emRounds >= 1, s"emRounds must be positive: $emRounds")
     val hist = Bpe.wordHistogram(df, textCol).localCheckpoint()
@@ -194,7 +190,7 @@ object Unigram {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
     require(seed.nonEmpty, "unigram training needs a non-empty corpus")
     var vocab = normalized(seed)
-    for (r <- 1 to emRounds) {
+    for (_ <- 1 to emRounds) {
       // E-step: expected counts over ALL segmentations, edge posteriors
       // pre-gridded so the corpus-wide sum is exact integer arithmetic
       val probs = pieceProbs(vocab)
@@ -212,7 +208,6 @@ object Unigram {
         else eCounts.get(p.piece).filter(_ > 0).map(p.piece -> _)
       }
       vocab = normalized(next)
-      roundHook(r)
     }
     (hist, vocab)
   }
@@ -240,11 +235,10 @@ object Unigram {
     * extra histogram aggregate + one vocabulary-sized collect. */
   def trainKudo(df: DataFrame, textCol: String, vocabSize: Int,
                 maxPieceLen: Int = 4, emRounds: Int = 1,
-                minSeedCount: Long = 2L,
-                roundHook: Int => Unit = _ => ()): Seq[Piece] = {
+                minSeedCount: Long = 2L): Seq[Piece] = {
     require(vocabSize >= 1, s"vocabSize must be positive: $vocabSize")
     val (hist, vocab) = softRounds(df, textCol, maxPieceLen, emRounds,
-      minSeedCount, roundHook)
+      minSeedCount)
     val probs = pieceProbs(vocab)
     val loss = hist.select(col("cnt"),
         explode(graft.functions.UnigramPruneLoss(col("w"), probs,

@@ -134,6 +134,32 @@ class BpeSpec extends AnyFunSuite with SparkSpec {
       .map(m => (m.l, m.r)) == Seq(("a", "b")))
   }
 
+  test("trainBatched: 1,000 merges at batch 64 take at most 20 driver rounds") {
+    // a wide tie-heavy histogram: 6,000 distinct 8-hex-char words with
+    // counts 1..97 (the corpus tables' ~30-word vocabulary runs out of
+    // pairs after a few hundred merges)
+    val hist = spark.range(6000).select(
+        substring(md5(col("id").cast("string")), 1, 8).as("w"),
+        (lit(1L) + col("id") % 97).as("cnt"))
+      .localCheckpoint()
+    def jobs(k: Int, batch: Int): Int = {
+      var m = Seq.empty[Bpe.Merge]
+      val n = jobsSubmitted { m = Bpe.trainBatchedFromHistogram(hist, k, batch) }
+      assert(m.size == k, s"k=$k batch=$batch: ${m.size} merges")
+      n
+    }
+    // A run submits a fixed setup, then the same jobs every round: the
+    // pair-count aggregate with its bounded collect, and one
+    // localCheckpoint per 64 accepted merges, so exactly one at
+    // batch <= 64. batch = 1 accepts one merge per round, so k merges at
+    // batch 1 submit exactly the jobs of k rounds.
+    // k / batch = 15.6, as for 8,000 merges at batch 512: 16 rounds if
+    // every round accepted its whole batch; 20 leaves room for the
+    // candidates that defer on a shared token (mean acceptance >= 78%)
+    val (j, j16, j20) = (jobs(1000, 64), jobs(16, 1), jobs(20, 1))
+    assert(j16 < j20 && j >= j16 && j <= j20, s"$j jobs; 16 rounds: $j16, 20 rounds: $j20")
+  }
+
   test("BpeEncode expression == encodeWord on a trained vocab, and " +
     "serves a MULTI-THOUSAND-merge vocab the chained form cannot build") {
     import graft.functions.BpeEncode

@@ -338,6 +338,13 @@ class DedupIndexSpec extends AnyFunSuite with SparkSpec {
         .filter(_.isDirectory).map(_.getName).toSet
     run(0L)
     assert(epochDirs("shingles").contains("epoch=0"))
+    // a batch-sized epoch lands as one file per table, not one per
+    // shuffle partition
+    Seq("shingles", "counts", "fps").foreach { part =>
+      val files = new java.io.File(dir, s"$part/epoch=0").listFiles()
+        .count(_.getName.endsWith(".parquet"))
+      assert(files == 1, s"$part: $files files for one epoch")
+    }
     run(1L) // boundary: (1+1) % 2 == 0 → compact folds everything to base
     assert(epochDirs("shingles") == Set("epoch=-1"),
       s"boundary compact must fold the epoch partitions: ${epochDirs("shingles")}")

@@ -455,6 +455,22 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSpec {
     assert("""PartitionFilters: \[[^\]]*centroid_id""".r
       .findFirstIn(plan).isDefined,
       s"codes scan must push a non-empty probed-list partition filter:\n$plan")
+    // and the filter skips most files: one query probes 4 of the 16 lists
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p.collect {
+      case f: FileSourceScanExec => Seq(f)
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case q: QueryStageExec => scans(q.plan)
+    }.flatten
+    val single = IvfPqIndex.search(spark, dir, sfEmb.where(col("vec_id") === 0),
+      "vec_id", "embedding", k = 5, nProbe = 4, rerankDepth = 50, rerank = Some(sfEmb))
+    val codes = scans(single.queryExecution.executedPlan)
+      .filter(_.relation.location.rootPaths.exists(_.toString.contains("/codes"))).head
+    val read = codes.relation.location.listFiles(codes.partitionFilters, Nil)
+      .map(_.files.size).sum
+    val total = codes.relation.location.listFiles(Nil, Nil).map(_.files.size).sum
+    assert(read > 0 && read * 2 < total, s"read $read of $total codes files")
     // ADC-only mode (no raw-vector refetch): all 10 queries, 5 rows each
     // (a size assertion too — an empty result must not pass vacuously)
     val adcOnly = IvfPqIndex.search(spark, dir, q, "vec_id", "embedding",
@@ -785,6 +801,22 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSpec {
     info(s"dropped: exact ${dExact.size}, two-level ${dHier.size}, " +
       s"symmetric diff ${(dHier diff dExact).size + (dExact diff dHier).size}")
     clustered.unpersist()
+  }
+
+  test("hierarchical assignment sends the 3 verbatim copies of every " +
+    "sf0.001 vector to one centroid") {
+    import graft.operators.Similarity
+    val emb3 = Scale.copies(graft.sources.Tables.embeddings(spark, Sf0001)
+      .select("vec_id", "embedding"), "vec_id", 3)
+    val c = emb3.select(col("vec_id").as("neighbor_id"),
+        col("embedding").cast("array<double>").as("cv"))
+      .withColumn("cn", Similarity.norm(col("cv"))).where(col("cn") > 0)
+    val cents = Similarity.sampleCentroids(emb3, "vec_id", "embedding",
+      Similarity.suggestedCentroids(1500L))
+    val assigned = Similarity.assignToHierarchical(c, cents, probeSupers = 2)
+      .select((col("neighbor_id") % Scale.Salt).as("base"), col("centroid_id"))
+    assert(assigned.count() == c.count())
+    assert(assigned.distinct().groupBy("base").count().where(col("count") > 1).isEmpty)
   }
 
   test("suggestedAssignMode: flat below the FLOP break-even, hierarchical beyond") {
@@ -1215,6 +1247,51 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSpec {
     val s2 = Graph.pageRankRun(star, iters = 6, checkEvery = 99)
     assert(s1.ranks.orderBy("id").collect().map(_.toSeq).toSeq ==
       s2.ranks.orderBy("id").collect().map(_.toSeq).toSeq)
+  }
+
+  test("shingles, minhash LSH and closure over 3 verbatim copies of " +
+    "sf0.001: copies add no shingles, every copy pair is a certain " +
+    "candidate, each 1x pair appears once per copy pair, and the " +
+    "components are the 1x ones plus one per 1x-isolated doc") {
+    import Scale.{Replicated, Salt, holds}
+    val docs1 = graft.sources.Tables.documents(spark, Sf0001)
+      .select("doc_id", "text")
+    val rows1 = Dedup.shingleHashRows(docs1, "doc_id", "text", n = 3)
+    val rows3 = Dedup.shingleHashRows(Scale.copies(docs1, "doc_id", 3),
+      "doc_id", "text", n = 3)
+    assert(rows3.count() == 3 * rows1.count())
+    assert(rows3.select("h").distinct().count() == rows1.select("h").distinct().count())
+    def pairs(rows: org.apache.spark.sql.DataFrame) = Dedup.lshCandidatePairs(
+        Dedup.minhashFromHashes(rows, k = 64), bands = 16, rowsPerBand = 4)
+      .where(col("est_jaccard") >= 0.2).select("id_a", "id_b", "est_jaccard")
+    val (p1, p3) = (pairs(rows1).localCheckpoint(), pairs(rows3).localCheckpoint())
+    val shingled = rows1.select("id").distinct().count()
+    val same = col("id_a") % Salt === col("id_b") % Salt
+    assert(p3.where(same).count() == 3 * shingled, "C(3,2) copy pairs per shingled doc")
+    assert(p3.where(same && col("est_jaccard") =!= 1.0).isEmpty)
+    // copy i of a with copy j of b, for all 9 (i, j), in either id order
+    val across = p3.where(!same)
+      .select(least(col("id_a") % Salt, col("id_b") % Salt).as("id_a"),
+        greatest(col("id_a") % Salt, col("id_b") % Salt).as("id_b"), col("est_jaccard"))
+    val broke = holds(Replicated("id_a", "id_b"), 9, p1, across)
+    assert(broke.isEmpty, broke)
+    val labels1 = Dedup.componentLabels(p1.select("id_a", "id_b"))
+    val labels3 = Dedup.componentLabels(p3.select("id_a", "id_b"))
+    val (v1, c1) = (labels1.count(), labels1.select("label").distinct().count())
+    assert(labels3.count() == 3 * shingled, "every shingled doc pairs with its copies")
+    assert(labels3.select("label").distinct().count() == c1 + (shingled - v1))
+  }
+
+  test("pageRank: the checkpoint cadence keeps every job's lineage flat " +
+    "as the iterations grow") {
+    import graft.operators.Graph
+    // a path never reaches a grid fixed point, so every round runs
+    val path = Seq((0L, 1L), (1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
+    val s5 = maxStagesPerJob(Graph.pageRank(path, iters = 5).count())
+    val s20 = maxStagesPerJob(Graph.pageRank(path, iters = 20).count())
+    // each round adds at least one shuffle, so an uncut lineage would be
+    // >= 15 stages deeper at 20 rounds than at 5
+    assert(s20 <= s5 + 4, s"5 rounds: $s5 stages, 20 rounds: $s20")
   }
 
   test("componentLabels on STRING ids: collation-exact min labels, " +

@@ -15,7 +15,10 @@ class HarnessSpec extends AnyFunSuite with SparkSpec {
       Seq("explain"), Seq("explain", "no_such_query"), Seq("plans", "out", "before"),
       Seq("plans", "out", "before", "no_such_prefix"),
       Seq("probe"), Seq("synth", "base", "out"), Seq("synth", "base", "out", "0"),
-      Seq("ab", "cp.txt"), Seq("ab", "cp.txt", "q_a", "x"), Seq("smoke"), Seq("smoke", "7x"))
+      Seq("ab", "cp.txt"), Seq("ab", "cp.txt", "q_a", "x"), Seq("scale"), Seq("scale", "3"),
+      Seq("scale", "x", "q_d"), Seq("scale", "3", "q_d", "extra"),
+      // scale needs N >= 2 and a prefix that selects a declared query
+      Seq("scale", "0", "q_d"), Seq("scale", "1", "q_d"), Seq("scale", "3", "q_a1_"))
     bad.foreach { args =>
       assert(Bench.parse(args).left.exists(_.startsWith("usage: graft.Bench")), args)
       assert(Bench.run(args, () => fail(s"session built for $args")) == 2, args)
@@ -24,7 +27,9 @@ class HarnessSpec extends AnyFunSuite with SparkSpec {
     assert(Bench.parse(Seq("ab", cp, "q_a", "2")).isRight)
     assert(Bench.parse(Seq("ab", cp + ".missing", "q_a")).isLeft)
     assert(Bench.parse(Seq("plans", "out", "before", "q_a")).isRight)
-    assert(Bench.parse(Seq("smoke", "epochs1k")).isRight)
+    // q_a1_ selects queries, none of them declared
+    assert(Bench.parse(Seq("micro", "q_a1_")).isRight && !Scale.Declared.keys.exists(_.startsWith("q_a1_")))
+    assert(Bench.parse(Seq("scale", "3", "q_d")).isRight)
   }
 
   test("per_query line: 40 slowest of 173 queries, whole in a 2,000-byte stdout tail") {

@@ -38,6 +38,23 @@ class HllSpec extends AnyFunSuite with SparkSpec {
     assert(math.abs(declEst - 5000.0) / 5000.0 < 0.05, s"est $declEst")
   }
 
+  test("distinctEstimate stays within 5% past the small-range correction: " +
+    "sf0.001's shingle vocabulary and its (doc, shingle) pairs") {
+    // both key sets exceed 2.5 m = 10,240 distinct keys at p = 12, so the
+    // raw harmonic-mean estimate answers, not linear counting
+    val rows = graft.operators.Dedup.shingleHashRows(
+      graft.sources.Tables.documents(spark, Sf0001),
+      "doc_id", "text", n = 3)
+    Seq("vocabulary" -> col("h"),
+      "pairs" -> Sampling.hash60(concat_ws("|", col("id"), col("h")))).foreach {
+      case (what, key) =>
+        val r = Hll.distinctEstimate(rows, key, 12).collect()(0)
+        val (n, est) = (r.getAs[Long]("n_exact"), r.getAs[Double]("estimate"))
+        assert(n > 10240L, s"$what: only $n keys")
+        assert(math.abs(est - n) / n < 0.05, s"$what: $n keys, estimate $est")
+    }
+  }
+
   test("registers merge by max: partial sketches union to the full sketch") {
     val a = (0L until 800L).map(i => s"k$i").toDF("k")
       .select(Sampling.hash60(col("k")).as("h"))

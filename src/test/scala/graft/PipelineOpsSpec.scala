@@ -413,6 +413,12 @@ class PipelineOpsSpec extends AnyFunSuite with SparkSpec {
     val fills = out.groupBy(_._3).view.mapValues(_.map(_._2).sum).toMap
     assert(fills.values.forall(_ <= maxLen),
       s"no bin may exceed maxLen: $fills")
+    // the driver-side manifest is bounded by bins x length classes,
+    // never by the doc count
+    val hist = rows.groupBy(_._3).view.mapValues(_.size.toLong).toSeq
+    val manifest = Sampling.bestFitManifest("g", hist, maxLen)
+    assert(manifest.size <= fills.size * hist.size,
+      s"${manifest.size} manifest rows for ${fills.size} bins x ${hist.size} classes")
     val waste = fills.values.map(maxLen - _).sum
     // baseline: sequential first-fit in the SAME (hash, id) doc order
     // without splitting — open a new bin when the next doc overflows
@@ -569,15 +575,18 @@ class PipelineOpsSpec extends AnyFunSuite with SparkSpec {
       (1L, s"the first document keeps $passage and other fine prose with the usual words", "en", 70L),
       (2L, s"THE FIRST DOCUMENT KEEPS $passage and other fine prose with the usual words", "en", 70L), // exact dup of 1
       (3L, "- the alpha item one\n- the beta item two\n- the gamma item three", "en", 60L), // all bullet lines
-      (4L, s"seven eight nine $passage write to admin@example.com about the deal", "en", 60L)
+      (4L, s"seven eight nine $passage write to admin@example.com about the deal", "en", 60L),
+      // 9 tokens, under gramLen: only the exact-dup stage can drop 6
+      (5L, "the cat sat with the dog to be there", "en", 36L),
+      (6L, "The cat sat with the dog, to be there!", "en", 38L) // exact dup of 5
     ).toDF("doc_id", "text", "lang", "n_chars")
     val out = graft.api.Pipeline.curateStrict(docs, "doc_id", "text", "lang",
       "n_chars", gramLen = 10,
       gopher = graft.operators.TextStats.GopherParams(
         minWords = 8, minStopwordHits = 1))
     val rows = out.collect().map(r => r.getAs[Long]("doc_id") -> r).toMap
-    // 2 exact-deduped (keeper = 1), 3 gopher-dropped (bullet lines)
-    assert(rows.keySet == Set(1L, 4L), s"got ${rows.keySet}")
+    // 2 and 6 exact-deduped (keepers 1 and 5), 3 gopher-dropped (bullet lines)
+    assert(rows.keySet == Set(1L, 4L, 5L), s"got ${rows.keySet}")
     val t1 = rows(1L).getAs[String]("text")
     val t4 = rows(4L).getAs[String]("text")
     // doc 1 holds the first occurrence of the passage; doc 4 loses it
@@ -825,6 +834,72 @@ class PipelineOpsSpec extends AnyFunSuite with SparkSpec {
       s"boundary fill must partition by score:\n$plan")
   }
 
+  test("tokenBudgetSelect over 3 verbatim copies of sf0.001: the boundary " +
+    "bin is copy-invariant, whole-bin keeps triple, the fill stays tight") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.expressions.Window
+    val slim1 = Tables.documents(spark, Sf0001)
+      .select(col("doc_id"), TextStats.qualityScore(col("text")).as("s"),
+        TextStats.wordCount(col("text")).as("t"))
+      .localCheckpoint()
+    val slim3 = Scale.copies(slim1, "doc_id", 3).localCheckpoint()
+    def budget(df: DataFrame): Long = df.agg(sum("t")).head().getLong(0) * 37L / 100L
+    // the boundary rule from its definition (histogram, strictly-better
+    // prefix), not from the operator under test
+    def boundary(df: DataFrame, b: Long): Double =
+      df.groupBy("s").agg(sum("t").as("bt"))
+        .withColumn("pfx", sum(col("bt")).over(Window.orderBy(col("s").desc)
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)) - col("bt"))
+        .where(col("pfx") <= b && col("pfx") + col("bt") > b)
+        .select("s").head().getDouble(0)
+    val (b1, b3) = (budget(slim1), budget(slim3))
+    // every bin's mass triples and the budget is within 3 of triple, so
+    // 3·pfx <= b3 < 3·(pfx + bt) holds exactly when pfx <= b1 < pfx + bt
+    assert(b3 - 3 * b1 < 3L, s"budget $b1 -> $b3")
+    val bs = boundary(slim1, b1)
+    assert(boundary(slim3, b3) == bs)
+    val sel3 = Sampling.tokenBudgetSelect(slim3, "doc_id", col("s"), col("t"), b3)
+      .persist()
+    assert(sel3.where(col("score") > bs).count() == 3 * slim1.where(col("s") > bs).count())
+    val total = sel3.agg(sum("tokens")).head().getLong(0)
+    val maxInBin = slim3.where(col("s") === bs).agg(max("t")).head().getLong(0)
+    assert(total <= b3 && b3 - total < maxInBin, s"$total of $b3, bin max $maxInBin")
+    sel3.unpersist()
+  }
+
+  test("doremiWeights with the full sample is duplication-invariant: 3 " +
+    "verbatim copies of sf0.001 give the 1x trajectory row for row") {
+    // each round's lambda is a per-domain mean, and 3·sum / 3·n rounds
+    // to the same double as sum / n
+    val d1 = Tables.documents(spark, Sf0001)
+      .select(col("doc_id"), col("lang"),
+        (lit(1.0) - TextStats.qualityScore(col("text"))).as("_x"))
+      .localCheckpoint()
+    def trajectory(df: org.apache.spark.sql.DataFrame) = Sampling.doremiWeights(df,
+        "lang", "doc_id", col("_x"), rounds = 4, sampleFrac = 1.0)
+      .orderBy("round", "domain").collect().map(_.toSeq).toSeq
+    val t1 = trajectory(d1)
+    assert(t1.nonEmpty)
+    assert(trajectory(Scale.copies(d1, "doc_id", 3)) == t1)
+  }
+
+  test("exactSubstringDedup over 3 verbatim copies of sf0.001: every copy " +
+    "of a doc with >= gramLen tokens is hollowed out, and the base docs' " +
+    "verdicts equal a 1x run") {
+    val d1 = Tables.documents(spark, Sf0001).select("doc_id", "text")
+    val out3 = Dedup.exactSubstringDedup(Scale.copies(d1, "doc_id", 3), "doc_id", "text",
+      gramLen = 10).persist()
+    // the first occurrence of every gram lies in the base copy (min id)
+    assert(out3.where(col("id") >= Scale.Salt && col("n_tokens") >= 10 &&
+      col("n_removed") =!= col("n_tokens")).isEmpty)
+    val base3 = out3.where(col("id") < Scale.Salt).select("id", "n_removed", "text_clean")
+    val base1 = Dedup.exactSubstringDedup(d1, "doc_id", "text", gramLen = 10)
+      .select("id", "n_removed", "text_clean")
+    val broke = Scale.holds(Scale.Same, 3, base1, base3)
+    assert(broke.isEmpty, broke)
+    out3.unpersist()
+  }
+
   test("dsirWeights: target-like raw docs outscore off-domain ones") {
     val target = Seq((100L, "data selection importance resampling"),
       (101L, "importance resampling for data selection"))
@@ -935,6 +1010,17 @@ class PipelineOpsSpec extends AnyFunSuite with SparkSpec {
     val acc = scored.count { case (y, p) => (p >= 0.5) == (y == 1L) }
       .toDouble / scored.length
     assert(acc >= 0.95, s"sampled training must still separate: acc=$acc")
+  }
+
+  test("Classifier.train: every epoch reads the one checkpointed feature " +
+    "frame, so no job's lineage grows with the epoch count") {
+    import graft.operators.Classifier
+    val labeled = Tables.documents(spark, Sf0001)
+      .select(col("doc_id"), col("text"), (col("doc_id") % 2).as("y"))
+    def stages(iters: Int) = maxStagesPerJob(
+      Classifier.train(labeled, "doc_id", "text", "y", dim = 64, iters = iters))
+    val (s5, s15) = (stages(5), stages(15))
+    assert(s15 <= s5 + 1, s"5 epochs: $s5 stages, 15 epochs: $s15")
   }
 
   test("Classifier.score serves a STREAM with frozen weights == batch") {

@@ -72,6 +72,36 @@ class SinksStreamSpec extends AnyFunSuite with SparkSpec {
       s"inverse gradient must not pair: $pairs")
   }
 
+  test("image near-dups over 3 verbatim copies of 40 constructed images: " +
+    "exactly the 40 * C(3,2) copy pairs, all at Hamming 0") {
+    // 8x8 uniform blocks of a 64-bit pattern make the aHash the pattern
+    // itself; patterns pairwise more than 6 bits apart cannot pair at 3
+    val rnd = new scala.util.Random(14)
+    val patterns = Iterator.continually(rnd.nextLong())
+      .filter(p => java.lang.Long.bitCount(p) > 4 && java.lang.Long.bitCount(p) < 60)
+      .distinct.take(40).toSeq
+    for (i <- patterns.indices; j <- 0 until i)
+      assert(java.lang.Long.bitCount(patterns(i) ^ patterns(j)) > 6, s"patterns $i, $j")
+    def png(pattern: Long): Array[Byte] = {
+      val img = new java.awt.image.BufferedImage(64, 64,
+        java.awt.image.BufferedImage.TYPE_INT_RGB)
+      for (y <- 0 until 64; x <- 0 until 64) {
+        val v = if ((pattern & (1L << ((y / 8) * 8 + x / 8))) != 0L) 255 else 0
+        img.setRGB(x, y, (v << 16) | (v << 8) | v)
+      }
+      val bos = new java.io.ByteArrayOutputStream()
+      javax.imageio.ImageIO.write(img, "png", bos)
+      bos.toByteArray
+    }
+    val media = Scale.copies(patterns.zipWithIndex
+      .map { case (p, i) => (i.toLong, png(p)) }.toDF("media_id", "media"), "media_id", 3)
+    val pairs = Multimodal.imageNearDups(media, maxHamming = 3)
+      .select("id_a", "id_b", "hamming").as[(Long, Long, Long)].collect()
+    assert(pairs.length == 40 * 3, s"${pairs.length} pairs")
+    val stray = pairs.filterNot { case (a, b, h) => a % Scale.Salt == b % Scale.Salt && h == 0L }
+    assert(stray.isEmpty, stray.take(3).toSeq)
+  }
+
   test("multimodal decode: real PNG decoded to pixel features; fallback intact") {
     val white = pngBytes(4, 3, 0xFFFFFF)
     val black = pngBytes(2, 2, 0x000000)
@@ -533,6 +563,23 @@ class SinksStreamSpec extends AnyFunSuite with SparkSpec {
     assert(r.map(_.getAs[Double]("score")).sliding(2).forall(p => p(0) >= p(1)))
     val top1 = Ranking.bm25(df, "doc_id", "text", Seq("spark"), topK = 1)
     assert(top1.count() == 1 && top1.collect()(0).getLong(0) == 1L)
+  }
+
+  test("BM25 over 3 verbatim copies of sf0.001: the top 15 are the 1x top " +
+    "5's docs, each as 3 copies tied at one score") {
+    import graft.operators.Ranking
+    val d1 = graft.sources.Tables.documents(spark, Sf0001)
+      .select("doc_id", "text")
+    val terms = Seq("spark", "join", "window")
+    val top5 = Ranking.bm25(d1, "doc_id", "text", terms, topK = 5)
+      .select("doc_id").as[Long].collect().toSet
+    // tf and avgdl stay, N and every df triple: idf keeps its order
+    val byBase = Ranking.bm25(Scale.copies(d1, "doc_id", 3), "doc_id", "text", terms,
+        topK = 15)
+      .select((col("doc_id") % Scale.Salt).as("base"), col("score")).as[(Long, Double)]
+      .collect().groupBy(_._1)
+    assert(top5.size == 5 && byBase.keySet == top5, s"${byBase.keySet} vs $top5")
+    assert(byBase.values.forall(rs => rs.length == 3 && rs.map(_._2).distinct.length == 1))
   }
 
   test("PII scrub replaces emails and phones, counts match") {

@@ -244,6 +244,40 @@ class StreamContaminationSpec extends AnyFunSuite with SparkSpec {
       s"LSH pre-prune must plan as an equi-join:\n$plan")
   }
 
+  test("decontamination over 3 verbatim copies of sf0.001's embeddings: " +
+    "the kept set is 3 salted copies of the 1x kept set, exact and LSH; " +
+    "the LSH bucket guard keeps a planted hot bucket whole") {
+    import graft.operators.Similarity
+    import org.apache.spark.sql.DataFrame
+    val emb1 = graft.sources.Tables.embeddings(spark, Sf0001)
+      .select("vec_id", "embedding")
+    val emb3 = Scale.copies(emb1, "vec_id", 3)
+    // the eval side is a fixed benchmark: it does not grow with the corpus
+    val eval = emb1.where(col("vec_id") % 97 === 0)
+      .select((col("vec_id") + lit(900 * Scale.Salt)).as("vec_id"), col("embedding"))
+    def exact(c: DataFrame): DataFrame = Similarity.semanticDecontaminate(c, eval,
+      "vec_id", "embedding", minCosine = 0.95).select("vec_id")
+    def lsh(c: DataFrame, ev: DataFrame, cap: Int): DataFrame =
+      Similarity.semanticDecontaminateLsh(c, ev, "vec_id", "embedding",
+        minCosine = 0.99, maxBucketSize = cap).select("vec_id")
+    Seq[DataFrame => DataFrame](exact, lsh(_, eval, Int.MaxValue)).foreach { op =>
+      val (k1, k3) = (op(emb1), op(emb3))
+      assert(k1.count() < emb1.count(), "the eval rows must drop")
+      val broke = Scale.holds(Scale.Replicated("vec_id"), 3, k1, k3)
+      assert(broke.isEmpty, broke)
+    }
+    // 2,000 verbatim copies of one eval vector share every band bucket
+    val hot = emb1.where(col("vec_id") === 97)
+    val planted = spark.range(2000).crossJoin(hot.drop("vec_id"))
+      .select((col("id") + lit(800 * Scale.Salt)).as("vec_id"), col("embedding"))
+    val corpus = emb3.unionByName(planted)
+    val isPlanted = col("vec_id") >= 800 * Scale.Salt && col("vec_id") < 900 * Scale.Salt
+    assert(lsh(corpus, eval, Int.MaxValue).where(isPlanted).count() == 0L,
+      "guard off: every planted copy of an eval vector drops")
+    assert(lsh(corpus, eval, 1000).where(isPlanted).count() == 2000L,
+      "guard at 1,000: the hot bucket is pruned in every band, so all planted rows stay")
+  }
+
   test("StreamCurate.curateStateless: stream == batch, gate + scrub + cost") {
     import graft.streaming.StreamCurate
     implicit val sqlCtx = spark.sqlContext
