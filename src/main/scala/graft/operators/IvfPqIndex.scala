@@ -3,23 +3,26 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.{Memo, Store}
 import graft.functions.PqCodec
 
 /** Persisted IVF-PQ index — the build-once / query-many serving shape of
   * `Pq.ivfPqTopK`. That operator trains, encodes, and searches in one
   * plan; at 100 TB the index is built ONCE (one shuffle write) and every
   * later query batch must touch only its probed inverted lists. This
-  * object persists exactly the artifacts the search needs:
+  * object persists exactly the artifacts the search needs, as the
+  * tables of a [[graft.Store]] (every mutation is one store commit, so a
+  * crash leaves the previous version or the new one):
   *
-  *   path/codes/      (neighbor_id, codes) parquet PARTITIONED BY
-  *                    centroid_id — probing nProbe lists becomes parquet
-  *                    PARTITION PRUNING: the scan reads nProbe/nCentroids
-  *                    of the index files, nothing else
-  *   path/centroids/  the coarse quantizer (nCentroids slim rows)
-  *   path/codebook/   one row: flattened PQ codebook + dims
-  *   path/tombstones/ (neighbor_id) — optional; rows [[delete]]d but not
-  *                    yet physically dropped (search excludes them,
-  *                    compact drops them)
+  *   codes       (neighbor_id, codes) parquet PARTITIONED BY centroid_id
+  *               — probing nProbe lists becomes parquet PARTITION
+  *               PRUNING: the scan reads nProbe/nCentroids of the index
+  *               files, nothing else
+  *   centroids   the coarse quantizer (nCentroids slim rows)
+  *   codebook    one row: flattened PQ codebook + dims
+  *   tombstones  (neighbor_id) — optional; rows [[delete]]d but not yet
+  *               physically dropped (search excludes them, compact drops
+  *               them)
   *
   * Raw vectors are deliberately NOT duplicated into the index (the
   * m-byte codes are the point); exact re-rank refetches originals from
@@ -32,55 +35,72 @@ import graft.functions.PqCodec
   * parameters (asserted in DedupSimilaritySpec). */
 object IvfPqIndex {
 
-  private def asDouble(c: org.apache.spark.sql.Column) = c.cast("array<double>")
+  /** The frozen quantizer: the codebook table's one row. */
+  private final case class Codebook(m: Int, k: Int, dim: Int,
+                                    cbFlat: Array[Double],
+                                    halfFlat: Array[Double],
+                                    residual: Boolean)
 
   // Every [[search]]/[[append]] would re-run a `head()` job over the
   // one-row codebook and re-list the centroids and codes tables, so the
-  // codebook row and codes schema sit in graft.Memo's path scope and the
-  // centroids plan in its session scope. All three change only at
-  // [[build]], which invalidates them; codes FILES change on append, so
-  // only their schema (fixed at build) is memoized, never a plan.
-  private def readCodebook(spark: SparkSession, path: String): org.apache.spark.sql.Row =
-    graft.Memo.path(path, "codebook")(
-      spark.read.parquet(s"$path/codebook").head())
-  private def readCents(spark: SparkSession, path: String): DataFrame =
-    graft.Memo.session(spark, path, "centroids")(
-      spark.read.parquet(s"$path/centroids"))
-  /** The codes read schema with `centroid_id` pinned to the centroids
-    * sidecar's type (partition-directory inference doesn't round-trip
-    * every id type — see [[search]]); column set is fixed at build, so
-    * the schema memoizes even though the FILES change on append. */
-  private def codesSchema(spark: SparkSession, path: String,
-                          centType: org.apache.spark.sql.types.DataType)
-      : org.apache.spark.sql.types.StructType =
-    graft.Memo.path(path, "codes.schema")(
-      org.apache.spark.sql.types.StructType(
-        spark.read.parquet(s"$path/codes").schema.map(f =>
-          if (f.name == "centroid_id") f.copy(dataType = centType) else f)))
+  // codebook and codes schema sit in graft.Memo's path scope and the
+  // centroids plan in its session scope, each under the directory of the
+  // artifact it mirrors: an append (new codes artifacts only) keeps all
+  // three, a rebuild or compaction moves them on.
+  private def readCodebook(spark: SparkSession, ix: Store.Manifest): Codebook =
+    Memo.path(ix.root, "codebook", ix.versionOf("codebook")) {
+      val r = ix.read(spark, "codebook").head()
+      Codebook(r.getAs[Int]("m"), r.getAs[Int]("k"), r.getAs[Int]("dim"),
+        r.getSeq[Double](r.fieldIndex("cb_flat")).toArray,
+        r.getSeq[Double](r.fieldIndex("half_flat")).toArray,
+        r.getAs[Boolean]("residual"))
+    }
+  private def readCents(spark: SparkSession, ix: Store.Manifest): DataFrame =
+    Memo.session(spark, ix.root, "centroids", ix.versionOf("centroids"))(
+      ix.read(spark, "centroids"))
 
-  /** Assign + PQ-encode `rows` against a FIXED quantizer (centroids +
-    * flattened codebook) and write them into `path/codes` partitioned by
-    * inverted list — the one encode stage `build` and `append` share, so
-    * the incremental path cannot drift from the full build. Map-side
-    * behind one broadcast of the centroids; the partitioned write is the
-    * only fan-out, one directory per list. Assignment can only land on
-    * the STORED centroid ids, so an append never mints a partition the
-    * probe pruning doesn't know. */
-  private def encodeInto(rows: DataFrame, idCol: String, vecCol: String,
-                         cents: DataFrame, cbFlat: Array[Double],
-                         halfFlat: Array[Double], m: Int, codebookSize: Int,
-                         dsub: Int, path: String, mode: String,
-                         hierarchicalAssign: Boolean = false): Unit = {
-    val c = rows.select(col(idCol).as("neighbor_id"),
-        asDouble(col(vecCol)).as("cv"))
+  /** The codes table with `centroid_id` pinned to the centroids table's
+    * type (see [[search]]), one scan per artifact since Spark infers
+    * partitions under ONE base directory per scan; a filter on
+    * `centroid_id` prunes every scan of the union. The column set is
+    * fixed at build, so the first artifact's schema serves them all. */
+  private def readCodes(spark: SparkSession, ix: Store.Manifest): DataFrame = {
+    val centType = readCents(spark, ix).schema("centroid_id").dataType
+    val cs = Memo.path(ix.root, "codes.schema", ix.versionOf("codes"))(
+      org.apache.spark.sql.types.StructType(
+        spark.read.parquet(ix.dirs("codes").head).schema.map(f =>
+          if (f.name == "centroid_id") f.copy(dataType = centType) else f)))
+    ix.dirs("codes").map(spark.read.schema(cs).parquet(_)).reduce(_ union _)
+  }
+
+  /** (neighbor_id, cv, cn): the rows' vectors as doubles with their
+    * norms; zero vectors have no direction and are skipped. */
+  private def normed(rows: DataFrame, idCol: String, vecCol: String): DataFrame =
+    rows.select(col(idCol).as("neighbor_id"), col(vecCol).cast("array<double>").as("cv"))
       .withColumn("cn", Similarity.norm(col("cv")))
       .where(col("cn") > 0)
-    writeCodes((if (hierarchicalAssign) Similarity.assignToHierarchical(c, cents)
-      else Similarity.assignTo(c, cents))
-      .select(col("centroid_id"), col("neighbor_id"),
-        PqCodec.encodeCol(transform(col("cv"), x => x / col("cn")),
-          cbFlat, halfFlat, m, codebookSize, dsub).as("codes")),
-      path, mode)
+
+  /** Assign + PQ-encode `rows` against a FIXED quantizer (centroids +
+    * codebook) — the one encode stage `build` and `append` share, so the
+    * incremental path cannot drift from the full build. Map-side behind
+    * one broadcast of the centroids. Assignment can only land on the
+    * STORED centroid ids, so an append never mints a partition the probe
+    * pruning doesn't know. The residual variant's codes layout is
+    * IDENTICAL (the slab mapping is a pure function of the centroid
+    * table — `Pq.listIndexFrame`). */
+  private def encode(rows: DataFrame, idCol: String, vecCol: String,
+                     cents: DataFrame, cb: Codebook,
+                     hierarchicalAssign: Boolean = false): DataFrame = {
+    val v = normed(rows, idCol, vecCol)
+    if (cb.residual)
+      Pq.residualEncode(Pq.assignedResiduals(v, cents), Pq.listIndexFrame(cents),
+        cb.cbFlat, cb.halfFlat, cb.m, cb.k, cb.dim / cb.m)
+    else
+      (if (hierarchicalAssign) Similarity.assignToHierarchical(v, cents)
+        else Similarity.assignTo(v, cents))
+        .select(col("centroid_id"), col("neighbor_id"),
+          PqCodec.encodeCol(transform(col("cv"), x => x / col("cn")),
+            cb.cbFlat, cb.halfFlat, cb.m, cb.k, cb.dim / cb.m).as("codes"))
   }
 
   /** Partitioned codes write with the small-files problem designed out:
@@ -92,11 +112,9 @@ object IvfPqIndex {
     * shuffle moves only the codes, a ~16× reduction of the corpus; a
     * hot list becomes one large file, which the parquet reader splits
     * by maxPartitionBytes anyway. */
-  private def writeCodes(codes: DataFrame, path: String,
-                         mode: String): Unit =
+  private def writeCodes(codes: DataFrame, dir: String): Unit =
     codes.repartition(col("centroid_id"))
-      .write.mode(mode).partitionBy("centroid_id")
-      .parquet(s"$path/codes")
+      .write.partitionBy("centroid_id").parquet(dir)
 
   /** Train + encode + write the index under `path`. One pass over the
     * corpus (assignment + encode are map-side behind one broadcast of
@@ -104,10 +122,8 @@ object IvfPqIndex {
     * fan-out to one directory per inverted list.
     *
     * `residual = true` persists the per-list-residual-codebook variant
-    * (`Pq.ivfPqResidualTopK`): the codes layout is IDENTICAL (the slab
-    * mapping is a pure function of the centroid table —
-    * `Pq.listIndexFrame`), only the codebook sidecar carries the stacked
-    * per-list arrays and the flag `search`/`append` branch on. */
+    * (`Pq.ivfPqResidualTopK`): only the codebook table carries the
+    * stacked per-list arrays and the flag `search`/`append` branch on. */
   def build(corpus: DataFrame, idCol: String, vecCol: String, path: String,
             nCentroids: Int = 16, m: Int = 16, dim: Int = 64,
             codebookSize: Int = 16, residual: Boolean = false,
@@ -118,9 +134,8 @@ object IvfPqIndex {
         "is unsupported (approximate residuals would poison the per-list " +
         "codebooks silently)")
     val spark = corpus.sparkSession
-    graft.Memo.invalidate(path) // a rebuild replaces every memoized sidecar
     // materialize the trained centroids ONCE: they are consumed by the
-    // encode (broadcast) AND written as a sidecar — un-materialized, the
+    // encode (broadcast) AND written as a table — un-materialized, the
     // corpus-scanning sampling subtree executed twice (round-15)
     val cents = Similarity.sampleCentroids(corpus, idCol, vecCol, nCentroids)
       .localCheckpoint(true)
@@ -128,51 +143,38 @@ object IvfPqIndex {
       if (!residual) {
         Pq.flatten(Pq.codebook(corpus, idCol, vecCol, m, dim, codebookSize))
       } else {
-        val c = corpus.select(col(idCol).as("neighbor_id"),
-            asDouble(col(vecCol)).as("cv"))
-          .withColumn("cn", Similarity.norm(col("cv")))
-          .where(col("cn") > 0)
-        val ar = Pq.assignedResiduals(c, cents)
-        val (cf, hf, _) = Pq.residualTrain(ar, cents, m, codebookSize, dim / m)
+        val (cf, hf, _) = Pq.residualTrain(
+          Pq.assignedResiduals(normed(corpus, idCol, vecCol), cents), cents, m,
+          codebookSize, dim / m)
         (cf, hf)
       }
+    val cb = Codebook(m, codebookSize, dim, cbFlat, halfFlat, residual)
     import spark.implicits._
-    // the codes write, the centroids sidecar and the codebook sidecar
-    // are independent jobs over materialized/driver-local inputs —
-    // overlap them on a driver pool (round-15, guide §2.6); the s-family
-    // lifecycles were many such writes back to back
-    ParallelJobs.run(Seq(
-      () =>
-        if (!residual)
-          encodeInto(corpus, idCol, vecCol, cents, cbFlat, halfFlat, m,
-            codebookSize, dim / m, path, "overwrite", hierarchicalAssign)
-        else {
-          val c = corpus.select(col(idCol).as("neighbor_id"),
-              asDouble(col(vecCol)).as("cv"))
-            .withColumn("cn", Similarity.norm(col("cv")))
-            .where(col("cn") > 0)
-          writeCodes(
-            Pq.residualEncode(Pq.assignedResiduals(c, cents),
-              Pq.listIndexFrame(cents), cbFlat, halfFlat, m, codebookSize,
-              dim / m),
-            path, "overwrite")
-        },
-      () => cents.write.mode("overwrite").parquet(s"$path/centroids"),
-      () => {
-        Seq((m, codebookSize, dim, cbFlat.toSeq, halfFlat.toSeq, residual))
+    Store.commit(spark, path, fresh = true) { c =>
+      val Seq(codes, centroids, codebook) =
+        Seq("codes", "centroids", "codebook").map(c.replace)
+      // the codes write, the centroids table and the codebook table are
+      // independent jobs over materialized/driver-local inputs — overlap
+      // them on a driver pool (round-15, guide §2.6); the s-family
+      // lifecycles were many such writes back to back
+      ParallelJobs.run(Seq(
+        () => writeCodes(encode(corpus, idCol, vecCol, cents, cb,
+          hierarchicalAssign), codes),
+        () => cents.write.parquet(centroids),
+        () => Seq((m, codebookSize, dim, cbFlat.toSeq, halfFlat.toSeq, residual))
           .toDF("m", "k", "dim", "cb_flat", "half_flat", "residual")
-          .write.mode("overwrite").parquet(s"$path/codebook"); ()
-      }))
+          .write.parquet(codebook)))
+      c.prime("codebook", cb)
+    }
   }
 
   /** Append a new batch into an existing index — the incremental-arrival
     * path a daily 100 TB pipeline needs (build once, append per batch,
     * never re-encode the corpus). The batch is assigned + encoded with
-    * the STORED centroids and codebook (read from the sidecars, never
-    * retrained — retraining would silently re-key every existing list)
-    * and lands as new files inside the existing centroid_id partition
-    * directories, so probe-time partition pruning covers old and new
-    * rows alike.
+    * the STORED centroids and codebook (never retrained — retraining
+    * would silently re-key every existing list) and lands as one more
+    * codes artifact, partitioned by centroid_id like the others, so
+    * probe-time partition pruning covers old and new rows alike.
     *
     * Semantics: if the batch lies outside the seed-selection sets,
     * `build(corpus); append(batch)` is row-identical to
@@ -185,72 +187,42 @@ object IvfPqIndex {
     * coarser codes — is the standard IVF trade; rebuild when recall
     * decays. */
   def append(batch: DataFrame, idCol: String, vecCol: String,
-             path: String): Unit = {
-    val spark = batch.sparkSession
-    val meta = readCodebook(spark, path)
-    val m = meta.getAs[Int]("m")
-    val cbSize = meta.getAs[Int]("k")
-    val dim = meta.getAs[Int]("dim")
-    val cbFlat = meta.getSeq[Double](meta.fieldIndex("cb_flat")).toArray
-    val halfFlat = meta.getSeq[Double](meta.fieldIndex("half_flat")).toArray
-    val cents = readCents(spark, path)
-    if (!meta.getAs[Boolean]("residual"))
-      encodeInto(batch, idCol, vecCol, cents, cbFlat, halfFlat, m, cbSize,
-        dim / m, path, "append")
-    else {
-      val c = batch.select(col(idCol).as("neighbor_id"),
-          asDouble(col(vecCol)).as("cv"))
-        .withColumn("cn", Similarity.norm(col("cv")))
-        .where(col("cn") > 0)
-      writeCodes(Pq.residualEncode(Pq.assignedResiduals(c, cents),
-          Pq.listIndexFrame(cents), cbFlat, halfFlat, m, cbSize, dim / m),
-        path, "append")
+             path: String): Unit =
+    Store.commit(batch.sparkSession, path) { c =>
+      val spark = batch.sparkSession
+      writeCodes(encode(batch, idCol, vecCol, readCents(spark, c.existing),
+        readCodebook(spark, c.existing)), c.add("codes"))
     }
-  }
 
   /** Mark index entries deleted (takedowns, re-curation — the daily
     * 100 TB pipeline's legal reality). Logical and cheap: the ids land
-    * in a tombstones sidecar, every subsequent [[search]] excludes them
+    * in the tombstones table, every subsequent [[search]] excludes them
     * before scoring, and [[compact]] physically drops their code rows
     * (and clears the tombstones). `ids` is any frame carrying `idCol`
     * with the indexed id type. */
   def delete(ids: DataFrame, idCol: String, path: String): Unit =
-    ids.select(col(idCol).as("neighbor_id")).distinct()
-      .write.mode("append").parquet(s"$path/tombstones")
+    Store.add(path, "tombstones")(
+      ids.select(col(idCol).as("neighbor_id")).distinct())
 
-  private def tombstones(spark: SparkSession, path: String): Option[DataFrame] =
-    IndexFiles.readIfExists(spark, s"$path/tombstones")
-      .map(t => broadcast(t.select("neighbor_id").distinct()))
+  /** Drops the tombstoned entries of index `ix` from `codes` (a
+    * broadcast anti-join — the codes scan is never shuffled for it). */
+  private def live(spark: SparkSession, ix: Store.Manifest,
+                   codes: DataFrame): DataFrame =
+    ix.readIfAny(spark, "tombstones").fold(codes)(t => codes.join(
+      broadcast(t.select("neighbor_id").distinct()), Seq("neighbor_id"), "left_anti"))
 
   /** Rewrite the codes table through [[writeCodes]] — the maintenance
     * pass a long-lived index needs after many appends (each append adds
     * ≥ 1 file per touched list; compaction folds them back to ~one file
     * per list), MINUS any tombstoned rows (physically dropped here; the
-    * tombstones sidecar is then cleared). For an index with no pending
-    * deletes the codes rows are the same rows — only the file layout
-    * changes. The rewrite stages through a sibling directory and swaps
-    * by rename through the Hadoop FileSystem of the index's path (works
-    * on any Hadoop-compatible store, not just local disk; a stale
-    * `codes_compacting_root` leftover is overwritten by the next
-    * attempt). Not safe against a CONCURRENT reader of the same path
-    * across the swap instant — run it in the index's write lane, like
-    * the appends themselves. */
-  def compact(spark: SparkSession, path: String): Unit = {
-    val cents = readCents(spark, path)
-    val centType = cents.schema("centroid_id").dataType
-    val cs = codesSchema(spark, path, centType)
-    val tombs = tombstones(spark, path)
-    val survivors = tombs.fold(
-        spark.read.schema(cs).parquet(s"$path/codes"))(t =>
-      spark.read.schema(cs).parquet(s"$path/codes")
-        .join(t, Seq("neighbor_id"), "left_anti"))
-    // writeCodes appends "/codes" itself — stage under a sibling root
-    writeCodes(survivors, s"$path/codes_compacting_root", "overwrite")
-    IndexFiles.swapIn(spark, s"$path/codes",
-      s"$path/codes_compacting_root/codes")
-    IndexFiles.remove(spark, s"$path/codes_compacting_root")
-    IndexFiles.remove(spark, s"$path/tombstones")
-  }
+    * tombstones are then cleared). For an index with no pending deletes
+    * the codes rows are the same rows — only the file layout changes. */
+  def compact(spark: SparkSession, path: String): Unit =
+    Store.commit(spark, path) { c =>
+      writeCodes(live(spark, c.existing, readCodes(spark, c.existing)),
+        c.replace("codes"))
+      c.drop("tombstones")
+    }
 
   /** Search a built index. Per query: probe the `nProbe` nearest
     * inverted lists (broadcast centroid table), ADC-score ONLY those
@@ -281,13 +253,9 @@ object IvfPqIndex {
              rerank: Option[DataFrame] = None): DataFrame = {
     require(k > 0 && nProbe > 0, "k and nProbe must be positive")
     require(rerankDepth >= k, "rerankDepth must be >= k")
-    val meta = readCodebook(spark, path)
-    val m = meta.getAs[Int]("m")
-    val cbSize = meta.getAs[Int]("k")
-    val dim = meta.getAs[Int]("dim")
-    val residual = meta.getAs[Boolean]("residual")
-    val cbFlat = meta.getSeq[Double](meta.fieldIndex("cb_flat")).toArray
-    val cents = readCents(spark, path)
+    val index = Store.latest(spark, path)
+    val Codebook(m, cbSize, dim, cbFlat, _, residual) = readCodebook(spark, index)
+    val cents = readCents(spark, index)
     val q =
       if (residual) Pq.prepQueriesBase(queries, idCol, vecCol)
       else Pq.prepQueries(queries, idCol, vecCol, cbFlat, m, cbSize, dim / m)
@@ -307,18 +275,14 @@ object IvfPqIndex {
     // partition type inference doesn't round-trip every id type (a
     // zero-padded string "0012" infers as int 12) — which would silently
     // break both the isin filter and the adcScored join. The centroids
-    // sidecar holds the authoritative type, so pin the partition column
-    // to it with an explicit read schema (the first read is a
+    // table holds the authoritative type, so readCodes pins the partition
+    // column to it with an explicit read schema (the first read is a
     // footer-metadata peek for the data columns, no data scan).
-    val centType = cents.schema("centroid_id").dataType
-    val pruned = spark.read.schema(codesSchema(spark, path, centType))
-      .parquet(s"$path/codes")
+    val pruned = readCodes(spark, index)
       .where(col("centroid_id").isin(probedLists: _*))
     // tombstoned entries drop BEFORE scoring/top-k, so a delete can
-    // never occupy a result slot; broadcast anti-join — the pruned codes
-    // scan is never shuffled for it
-    val codes = tombstones(spark, path).fold(pruned)(t =>
-      pruned.join(t, Seq("neighbor_id"), "left_anti"))
+    // never occupy a result slot
+    val codes = live(spark, index, pruned)
     val scored =
       if (residual) Pq.residualAdcScored(codes, probes, cbSize)
       else Pq.adcScored(codes, probes, cbSize)

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
-import graft.operators.{AppliedEpochs, IndexFiles, TextStats}
+import graft.Store
+import graft.operators.TextStats
 
 /** Streaming twin of the rank-defined curation gates — the live face of
   * [[TextStats.percentileGate]] (X57) and [[TextStats.rankBuckets]]
@@ -24,24 +25,20 @@ import graft.operators.{AppliedEpochs, IndexFiles, TextStats}
   * broadcast join + map-side compare. Pass a GRID-ALIGNED score
   * (rounded 6 dp), exactly like the batch gates.
   *
-  * Delivery contract: identical to [[StreamMetrics]] — appends are
-  * guarded by the `applied_epochs` high-water mark AND every hist row
-  * carries its epoch stamp, so a crash-replayed epoch re-appends exact
-  * duplicates that the merged read drops; [[compact]] seals pending
-  * epochs first and folds the shards to one. */
+  * Delivery contract: identical to [[StreamMetrics]] — one `hist` table
+  * in a [[graft.Store]], fed through [[graft.Store.appendHistogram]], so
+  * each epoch applies exactly once; [[compact]] folds the artifacts to
+  * one. */
 object StreamGate {
 
-  /** The epoch stamp on rows produced by [[compact]] — never a real
-    * foreachBatch epoch (those are ≥ 0). */
-  val CompactedEpoch: Long = -1L
+  /** Histogram shards merged: counts just add. */
+  private def merge(hist: DataFrame): DataFrame =
+    hist.groupBy("group", "score").agg(sum(col("c")).as("c"))
 
-  /** The store merged to one (group, score, _c) histogram:
-    * epoch-replay duplicates dropped (exact duplicates by the stamp
-    * contract), then counts summed. */
+  /** The store merged to one (group, score, _c) histogram. */
   private def mergedHist(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/hist")
-      .dropDuplicates("epoch", "group", "score")
-      .groupBy("group", "score").agg(sum(col("c")).as("_c"))
+    merge(Store.latest(spark, path).read(spark, "hist"))
+      .withColumnRenamed("c", "_c")
 
   /** Cumulative per-group percentile cut from the store: one row per
     * group, (group, threshold) — [[TextStats.percentileGate]]'s exact
@@ -80,42 +77,22 @@ object StreamGate {
     * store unless this epoch already applied, then return the batch
     * GATED at the cumulative thresholds (threshold/kept computed over
     * all epochs seen so far, this one included). `compactEvery` folds
-    * the store every that-many epochs at the marker-written boundary
-    * (the [[StreamMetrics.processEpoch]] lifecycle); 0 = never. */
+    * the store every that-many epochs (the [[StreamMetrics.processEpoch]]
+    * lifecycle); 0 = never. */
   def processEpoch(batch: DataFrame, epoch: Long, groupCol: String,
                    scoreCol: Column, keepFraction: Double, path: String,
                    compactEvery: Int = 0): DataFrame = {
-    require(compactEvery >= 0, s"compactEvery must be >= 0: $compactEvery")
-    val spark = batch.sparkSession
-    if (!AppliedEpochs.applied(spark, path).exists(_ >= epoch)) {
+    Store.appendHistogram(batch.sparkSession, path, "hist", epoch,
+      compactEvery)(
       batch.select(col(groupCol).as("group"), scoreCol.as("score"))
-        .groupBy("group", "score").agg(count(lit(1)).as("c"))
-        .withColumn("epoch", lit(epoch))
-        .write.mode("append").parquet(s"$path/hist")
-      AppliedEpochs.record(spark, path, epoch)
-      if (compactEvery > 0 && (epoch + 1) % compactEvery == 0)
-        compact(spark, path)
-    }
-    gate(batch, groupCol, scoreCol, thresholds(spark, path, keepFraction))
+        .groupBy("group", "score").agg(count(lit(1)).as("c")))(merge)
+    gate(batch, groupCol, scoreCol,
+      thresholds(batch.sparkSession, path, keepFraction))
   }
 
-  /** Fold the per-epoch shards into ONE merged shard (epoch stamp
-    * [[CompactedEpoch]]), sealing any pending epoch's marker first —
-    * the [[StreamMetrics.compact]] crash discipline, verbatim: without
-    * the seal, a replay of an epoch folded into the compacted stamp
-    * would re-append as a non-duplicate and double-count. */
-  def compact(spark: SparkSession, path: String): Unit = {
-    val hist = spark.read.parquet(s"$path/hist")
-    AppliedEpochs.sealPending(spark, path,
-      AppliedEpochs.maxStamp(hist, CompactedEpoch))
-    val staged = s"$path/hist_compacting"
-    mergedHist(spark, path)
-      .select(col("group"), col("score"), col("_c").as("c"),
-        lit(CompactedEpoch).as("epoch"))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(staged)
-    IndexFiles.swapIn(spark, s"$path/hist", staged)
-  }
+  /** Fold the per-epoch artifacts into ONE; thresholds are unchanged. */
+  def compact(spark: SparkSession, path: String): Unit =
+    Store.compact(spark, path, "hist")(merge)
 
   /** Wire a streaming frame of scored rows into a `foreachBatch` writer
     * that accumulates the histogram at `path` and hands each epoch's

@@ -23,25 +23,22 @@ import graft.operators.DedupIndex
   * batch `checkBatch` contract; run `StreamDedup.dedupByFingerprint`
   * upstream for intra-stream exact dups inside the watermark horizon).
   *
-  * Delivery contract: the append path is IDEMPOTENT per epoch wherever
-  * a crash lands — no crash window, no compact needed. Three layers
-  * (the StreamMetrics X112 discipline lifted to the multi-table index):
-  * (1) every check masks the in-flight epoch's own partitions
-  * (`checkBatch(excludeEpoch)`), so a replay whose crashed first
-  * attempt already appended recomputes the SAME kept set against the
-  * same pre-epoch state — the sink sees byte-identical rows, not a
-  * doc-matches-its-own-crashed-copy empty set; (2) the append is a
-  * dynamic partition OVERWRITE of the epoch's own partitions
-  * (`DedupIndex.appendEpoch`) — a replayed append REWRITES the crashed
-  * attempt instead of duplicating it (a double-appended batch is NOT
-  * harmless: duplicated shingle rows overcount later intersections,
-  * j = 2·inter / (na + nb − 2·inter) > j_true); (3) the
-  * `applied_epochs` high-water marker skips the rewrite entirely once
-  * the epoch fully landed. One caveat survives, inherent to
-  * foreachBatch: after `DedupIndex.compact` folds a marked epoch's
-  * stamps away, a replay of THAT epoch still no-ops at the marker (the
-  * index stays correct) but the sink callback sees a reduced kept set —
-  * the standard non-transactional-sink replay tolerance. */
+  * Delivery contract: the append path applies each epoch exactly once
+  * wherever a crash lands. Two layers: (1) every check leaves out the
+  * in-flight epoch's own artifacts (`checkBatch(excludeEpoch)`), so a
+  * replay of an epoch the index already applied recomputes the SAME kept
+  * set against the same pre-epoch state — the sink sees byte-identical
+  * rows, not a doc-matches-its-own-copy empty set; (2) the append and
+  * the applied epoch publish in one store commit
+  * (`DedupIndex.appendEpoch`), so a replay either finds the epoch
+  * applied and skips the append, or finds nothing of it and applies it
+  * (a double-appended batch is NOT harmless: duplicated shingle rows
+  * overcount later intersections, j = 2·inter / (na + nb − 2·inter) >
+  * j_true). One caveat survives, inherent to foreachBatch: after
+  * `DedupIndex.compact` folds an applied epoch's artifacts into untagged
+  * ones, a replay of THAT epoch still skips the append (the index stays
+  * correct) but the sink callback sees a reduced kept set — the standard
+  * non-transactional-sink replay tolerance. */
 object StreamIndexDedup {
 
   /** Wire a streaming `docs` frame into a `foreachBatch` writer that
@@ -51,18 +48,14 @@ object StreamIndexDedup {
     * returned writer.
     *
     * `compactEvery` (with `appendKept`) folds the accumulated per-epoch
-    * partitions with [[DedupIndex.compact]] every that-many epochs, AT
-    * the epoch boundary where the `applied_epochs` marker is guaranteed
-    * current — so compact's pending-epoch refuse guard cannot fire in
-    * normal operation, and a 10k-epoch monitor's file count stays
-    * bounded without a manual maintenance lane. Timing: the compact runs
-    * after epochs compactEvery−1, 2·compactEvery−1, … have fully landed
-    * (marker written). A crash between the marker and the compact just
-    * defers the fold to the next boundary (the replay no-ops at the
-    * marker and skips the compact — file count stays ≤ 2× the interval's
-    * accretion). The one semantic it trades is the documented compact
-    * caveat: a replay of an epoch whose stamps were already folded away
-    * sees a reduced kept set at the sink (the index itself stays
+    * artifacts with [[DedupIndex.compact]] every that-many epochs, right
+    * after epochs compactEvery−1, 2·compactEvery−1, … applied, so a
+    * 10k-epoch monitor's file count stays bounded without a manual
+    * maintenance lane. A crash between the append and the compact just
+    * defers the fold to the next boundary (the replay skips the append
+    * and the compact). The one semantic it trades is the documented
+    * compact caveat: a replay of an epoch whose artifacts were already
+    * folded sees a reduced kept set at the sink (the index itself stays
     * correct). 0 = never compact (the default). */
   def writer(docs: DataFrame, idCol: String, textCol: String, path: String,
              minJaccard: Double, appendKept: Boolean = false,
@@ -85,8 +78,8 @@ object StreamIndexDedup {
                                  (sink: (DataFrame, Long) => Unit): Unit = {
     require(compactEvery >= 0, s"compactEvery must be >= 0: $compactEvery")
     val spark = batch.sparkSession
-    // mask this epoch's own partitions: on a replay after a crashed
-    // append, the check must see the PRE-epoch state (scaladoc layer 1)
+    // leave out this epoch's own artifacts: on a replay of an applied
+    // epoch, the check must see the PRE-epoch state (scaladoc layer 1)
     val verdicts = DedupIndex.checkBatch(batch, idCol, textCol, path,
       minJaccard, excludeEpoch = Some(epoch))
     val kept = batch.join(
@@ -103,20 +96,16 @@ object StreamIndexDedup {
       else {
         // materialize the kept cache FIRST (one count), then overlap the
         // sink write with the index append (round-15, guide §2.6): the
-        // two lanes are independent consumers of the cached verdicts.
-        // Crash-semantics unchanged — the marker still lands only after
-        // BOTH (a crash in either lane leaves the marker unwritten, the
-        // replay's excludeEpoch mask re-delivers the identical kept set,
-        // and appendEpoch's partition overwrite rewrites its attempt).
+        // two lanes are independent consumers of the cached verdicts. A
+        // crash in either lane before the append's commit leaves the
+        // epoch unapplied, and the replay re-delivers the identical kept
+        // set.
         kept.count()
         graft.operators.ParallelJobs.run(Seq(
           () => sink(kept, epoch),
           () => DedupIndex.appendEpoch(kept, idCol, textCol, path, epoch)))
-        DedupIndex.recordAppliedEpoch(spark, path, epoch)
-        // boundary compact: the marker above covers THIS epoch and every
-        // earlier one landed the same way, so the pending-epoch refuse
-        // guard cannot fire here; a replayed epoch skips this whole
-        // branch (the compact is deferred, never duplicated)
+        // boundary compact; a replayed epoch skips this whole branch (the
+        // compact is deferred, never duplicated)
         if (compactEvery > 0 && (epoch + 1) % compactEvery == 0)
           DedupIndex.compact(spark, path)
       }

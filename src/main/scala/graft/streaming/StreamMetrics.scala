@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
-import graft.operators.{AppliedEpochs, IndexFiles, Metrics}
+import graft.Store
+import graft.operators.Metrics
 
 /** Streaming model-quality monitor — the live twin of the batch
   * grade lane ([[graft.operators.Metrics]]): a stream of scored
@@ -25,45 +26,17 @@ import graft.operators.{AppliedEpochs, IndexFiles, Metrics}
   * ever streamed. The store is shared with batch callers —
   * [[grade]] works on any session, no stream running.
   *
-  * Delivery contract: appends are guarded by the `applied_epochs`
-  * high-water mark (the [[StreamIndexDedup]] replay discipline, same
-  * sidecar layout) AND every hist row carries its epoch stamp: a crash
-  * BETWEEN the hist append and its marker write followed by a
-  * foreachBatch replay re-appends that epoch's rows (the guard only
-  * sees the missing marker), and the stamp makes those replays exact
-  * duplicates that [[grade]] drops at read — idempotent wherever the
-  * crash lands. [[compact]] folds the per-epoch shards into one merged
-  * shard so a long-lived monitor's grade never becomes a 10k-file
-  * scan. */
+  * Delivery contract: the store is a [[graft.Store]] with one table,
+  * `hist`; each epoch's rows publish together with the epoch as applied
+  * ([[graft.Store.appendHistogram]], the lane all three histogram stores
+  * share), so a foreachBatch replay of an applied epoch is a no-op and a
+  * crash leaves the epoch applied wholly or not at all. [[compact]]
+  * folds the per-epoch artifacts into one, so a long-lived monitor's
+  * grade never becomes a 10k-file scan. */
 object StreamMetrics {
 
-  /** The epoch stamp on rows produced by [[compact]] — never a real
-    * foreachBatch epoch (those are ≥ 0). */
-  val CompactedEpoch: Long = -1L
-
-  /** The store's merged histogram: epoch-replay duplicates dropped
-    * (exact duplicates by the stamp contract), then counts summed.
-    *
-    * Pre-stamp stores (written before the epoch column existed) read
-    * fine: rows with no stamp get a UNIQUE negative placeholder (below
-    * [[CompactedEpoch]], so it can never collide with a real epoch or a
-    * compacted shard) — every legacy row is kept, exactly the old
-    * merge-everything behavior, because a constant backfill would
-    * wrongly collapse two legacy epochs that happened to share a score
-    * row. The same placeholder covers a MIXED store (legacy files plus
-    * stamped appends), where the legacy rows surface as nulls. Legacy
-    * rows gain no replay protection retroactively — the old format
-    * never had any to reconstruct. */
-  private def mergedHist(spark: SparkSession, path: String): DataFrame = {
-    val raw = spark.read.parquet(s"$path/hist")
-    val legacyStamp = lit(CompactedEpoch - 1L) - monotonically_increasing_id()
-    val stamped =
-      if (!raw.columns.contains("epoch")) raw.withColumn("epoch", legacyStamp)
-      else raw.withColumn("epoch", coalesce(col("epoch"), legacyStamp))
-    Metrics.mergeHistograms(
-      stamped.dropDuplicates("epoch", "score")
-        .select(col("score"), col("n_pos"), col("n_neg")))
-  }
+  private def mergedHist(spark: SparkSession, path: String): DataFrame =
+    Metrics.mergeHistograms(Store.latest(spark, path).read(spark, "hist"))
 
   /** Cumulative grade from the persisted histogram at `path`: ONE row
     * (n_pos, n_neg, auc, n, ece, mce) — the q_e5 grade shape. */
@@ -73,39 +46,13 @@ object StreamMetrics {
       .crossJoin(broadcast(Metrics.eceFromHistogram(hist, bins)))
   }
 
-  /** Fold the accumulated per-epoch histogram shards into ONE merged
-    * shard (epoch stamp [[CompactedEpoch]]) via the staging-swap
-    * discipline of [[graft.operators.DedupIndex.compact]] — the
+  /** Fold the accumulated per-epoch histogram artifacts into ONE — the
     * lifecycle pass a long-lived monitor needs: after 10k epochs the
     * store is 10k small files and every [[grade]] re-merges them all;
-    * after compact it is O(1) files bounded by the score grid.
-    *
-    * Pending epochs are SEALED first: any epoch stamped in the store but
-    * above the `applied_epochs` high-water mark (a crash landed between
-    * its hist append and its marker — the rows ARE in the store, the
-    * hist append is one atomic write) is written to the marker sidecar
-    * BEFORE the fold. Without the seal, folding that epoch's stamp into
-    * [[CompactedEpoch]] would let its later foreachBatch replay
-    * re-append under the real stamp — no longer a duplicate the read
-    * can drop — and the epoch would double-count. Sealing first is
-    * truthful and crash-safe: if compact dies after the seal, the store
-    * is unchanged, the marker says the epoch applied (it did), and the
-    * replay no-ops. With the seal, a replayed epoch after compaction
-    * always no-ops at the marker guard. Same-grade before and after
-    * (spec-pinned); not safe against a concurrent reader across the
-    * swap instant — run in the store's write lane. */
-  def compact(spark: SparkSession, path: String): Unit = {
-    val hist = spark.read.parquet(s"$path/hist")
-    if (hist.columns.contains("epoch"))
-      AppliedEpochs.sealPending(spark, path,
-        AppliedEpochs.maxStamp(hist, CompactedEpoch))
-    val staged = s"$path/hist_compacting"
-    mergedHist(spark, path)
-      .withColumn("epoch", lit(CompactedEpoch))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(staged)
-    IndexFiles.swapIn(spark, s"$path/hist", staged)
-  }
+    * after compact it is one file bounded by the score grid. Same grade
+    * before and after (spec-pinned). */
+  def compact(spark: SparkSession, path: String): Unit =
+    Store.compact(spark, path, "hist")(Metrics.mergeHistograms)
 
   /** PSI drift of the store at `path` against a FROZEN baseline store —
     * the X107 monitoring leg run entirely off persisted histograms: no
@@ -121,27 +68,16 @@ object StreamMetrics {
   /** One epoch of the monitor, callable directly (the
     * [[StreamIndexDedup.processEpoch]] convention): merge the batch's
     * histogram into the store unless this epoch already applied, then
-    * return the cumulative grade.
-    *
-    * `compactEvery` folds the store with [[compact]] every that-many
-    * epochs at the boundary where this epoch's marker is already
-    * written (so the seal step finds nothing pending in normal
-    * operation) — the in-loop lifecycle a 10k-epoch monitor needs; a
-    * crash between the marker and the compact defers the fold to the
-    * next boundary. 0 = never (the default). */
+    * return the cumulative grade. `compactEvery` folds the store with
+    * [[compact]] every that-many epochs, right after the boundary epoch
+    * applied — the in-loop lifecycle a 10k-epoch monitor needs. 0 =
+    * never (the default). */
   def processEpoch(batch: DataFrame, epoch: Long, scoreCol: Column,
                    labelCol: Column, path: String,
                    bins: Int = 10, compactEvery: Int = 0): DataFrame = {
-    require(compactEvery >= 0, s"compactEvery must be >= 0: $compactEvery")
     val spark = batch.sparkSession
-    if (!AppliedEpochs.applied(spark, path).exists(_ >= epoch)) {
-      Metrics.scoreHistogram(batch, scoreCol, labelCol)
-        .withColumn("epoch", lit(epoch))
-        .write.mode("append").parquet(s"$path/hist")
-      AppliedEpochs.record(spark, path, epoch)
-      if (compactEvery > 0 && (epoch + 1) % compactEvery == 0)
-        compact(spark, path)
-    }
+    Store.appendHistogram(spark, path, "hist", epoch, compactEvery)(
+      Metrics.scoreHistogram(batch, scoreCol, labelCol))(Metrics.mergeHistograms)
     grade(spark, path, bins)
   }
 

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
-import graft.operators.{AppliedEpochs, IndexFiles, Sampling}
+import graft.Store
+import graft.operators.Sampling
 
 /** Streaming twin of DoReMi-lite domain reweighting
   * ([[Sampling.doremiWeights]], X125): a stream of scored examples
@@ -27,13 +28,10 @@ import graft.operators.{AppliedEpochs, IndexFiles, Sampling}
   * from the full corpus, not the samples).
   *
   * Delivery contract: the [[StreamMetrics]] store discipline verbatim —
-  * epoch-stamped idempotent appends behind the `applied_epochs`
-  * high-water marker, exact-duplicate drops on read, seal-then-fold
-  * [[compact]]. */
+  * one `stats` table in a [[graft.Store]], fed through
+  * [[graft.Store.appendHistogram]], so each epoch applies exactly once;
+  * [[compact]] folds the artifacts to one. */
 object StreamMixture {
-
-  /** The epoch stamp on rows produced by [[compact]]. */
-  val CompactedEpoch: Long = -1L
 
   /** One epoch's per-(round, domain) statistics: ONE aggregate over the
     * batch (the round dimension is a ≤ `rounds`-way explode under the
@@ -66,12 +64,14 @@ object StreamMixture {
       .unionByName(universe)
   }
 
+  /** Statistics shards merged: sums just add. */
+  private def merge(stats: DataFrame): DataFrame =
+    stats.groupBy("round", "domain")
+      .agg(sum(col("sm")).as("sm"), sum(col("n")).as("n"))
+
   /** The store merged to one (round, domain, sm, n) frame. */
   private def mergedStats(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/stats")
-      .dropDuplicates("epoch", "round", "domain")
-      .groupBy("round", "domain")
-      .agg(sum(col("sm")).as("sm"), sum(col("n")).as("n"))
+    merge(Store.latest(spark, path).read(spark, "stats"))
 
   /** The cumulative trajectory from the store: (round, domain,
     * lambda_micro, weight_micro) for rounds 1..`rounds` — bit-identical
@@ -97,33 +97,17 @@ object StreamMixture {
                    sampleFrac: Double = 0.3, salt: String = "doremi",
                    compactEvery: Int = 0): DataFrame = {
     require(rounds >= 1, s"rounds must be positive: $rounds")
-    require(compactEvery >= 0, s"compactEvery must be >= 0: $compactEvery")
     val spark = batch.sparkSession
-    if (!AppliedEpochs.applied(spark, path).exists(_ >= epoch)) {
+    Store.appendHistogram(spark, path, "stats", epoch, compactEvery)(
       epochStats(batch, domainCol, idCol, excessCol, rounds, sampleFrac,
-        salt)
-        .withColumn("epoch", lit(epoch))
-        .write.mode("append").parquet(s"$path/stats")
-      AppliedEpochs.record(spark, path, epoch)
-      if (compactEvery > 0 && (epoch + 1) % compactEvery == 0)
-        compact(spark, path)
-    }
+        salt))(merge)
     weights(spark, path, rounds, eta, smoothing)
   }
 
-  /** Seal-then-fold compaction, the [[StreamMetrics.compact]] crash
-    * discipline verbatim. */
-  def compact(spark: SparkSession, path: String): Unit = {
-    val stats = spark.read.parquet(s"$path/stats")
-    AppliedEpochs.sealPending(spark, path,
-      AppliedEpochs.maxStamp(stats, CompactedEpoch))
-    val staged = s"$path/stats_compacting"
-    mergedStats(spark, path)
-      .withColumn("epoch", lit(CompactedEpoch))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(staged)
-    IndexFiles.swapIn(spark, s"$path/stats", staged)
-  }
+  /** Fold the per-epoch artifacts into ONE; the trajectory is
+    * unchanged. */
+  def compact(spark: SparkSession, path: String): Unit =
+    Store.compact(spark, path, "stats")(merge)
 
   /** Wire a streaming frame into a `foreachBatch` writer that
     * accumulates the store at `path` and hands each epoch's cumulative

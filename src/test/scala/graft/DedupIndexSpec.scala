@@ -17,6 +17,10 @@ class DedupIndexSpec extends AnyFunSuite with SparkSpec {
   private def tmp(tag: String): String =
     java.nio.file.Files.createTempDirectory(s"graft_dedupidx_$tag").toString
 
+  /** The rows of a table of the index, read through its manifest. */
+  private def table(dir: String, name: String): DataFrame =
+    Store.latest(spark, dir).read(spark, name)
+
   private def rows(df: DataFrame): Set[(Long, Boolean, Option[Double], Boolean)] =
     df.collect().map { r =>
       (r.getLong(0), r.getBoolean(1),
@@ -46,29 +50,34 @@ class DedupIndexSpec extends AnyFunSuite with SparkSpec {
     assert(rows(a) == rows(b))
   }
 
-  test("meta is the commit marker: a build whose artifact write fails " +
-    "leaves no readable index") {
+  test("a build whose artifact write fails publishes nothing: a fresh path " +
+    "stays unreadable, a rebuild keeps the previous index") {
     val shingles = Dedup.shingleHashRows(corpus, "doc_id", "text", 3)
     // the shingle and count writes succeed from the precomputed rows; the
     // fps write evaluates the text column, which throws
     val poisoned = corpus.withColumn("text",
       when(col("doc_id") >= 0, raise_error(lit("injected fps failure")))
         .otherwise(col("text")).cast("string"))
-    def failedBuild(dir: String): Unit = {
+    def failedBuild(dir: String): Unit =
       intercept[Exception] {
         DedupIndex.build(poisoned, "doc_id", "text", dir, n = 3,
           precomputedRows = Some(shingles))
       }
-      assert(!new java.io.File(s"$dir/meta").exists(),
-        "meta written over a partial index")
-      intercept[Exception] { DedupIndex.append(batch, "doc_id", "text", dir) }
+    val fresh = tmp("failed_fresh")
+    failedBuild(fresh)
+    assert(Store.current(spark, fresh).isEmpty, "a manifest over a partial index")
+    intercept[IllegalArgumentException] {
+      DedupIndex.append(batch, "doc_id", "text", fresh)
     }
-    failedBuild(tmp("failed_fresh"))
-    // a failed REBUILD must not leave the previous meta over new partial
-    // artifacts either
+    // a failed REBUILD leaves the previous version in force, untouched
     val rebuilt = tmp("failed_rebuild")
     DedupIndex.build(corpus, "doc_id", "text", rebuilt, n = 3)
+    val before = Store.latest(spark, rebuilt)
+    val verdicts = rows(DedupIndex.checkBatch(batch, "doc_id", "text", rebuilt, 0.5))
     failedBuild(rebuilt)
+    assert(Store.latest(spark, rebuilt) == before)
+    assert(rows(DedupIndex.checkBatch(batch, "doc_id", "text", rebuilt, 0.5)) ==
+      verdicts)
   }
 
   test("broadcast check never shuffles the stored corpus tables") {
@@ -102,12 +111,8 @@ class DedupIndexSpec extends AnyFunSuite with SparkSpec {
     val parts = (0 until 4).map(i => corpus.where(col("doc_id") % 8 === i * 2))
     DedupIndex.build(parts.head, "doc_id", "text", dir, n = 3)
     parts.tail.foreach(p => DedupIndex.append(p, "doc_id", "text", dir))
-    def files(part: String): Int = {
-      def walk(f: java.io.File): Int =
-        if (f.isDirectory) f.listFiles().map(walk).sum
-        else if (f.getName.endsWith(".parquet")) 1 else 0
-      walk(new java.io.File(dir, part))
-    }
+    def files(part: String): Int =
+      StoreFiles.parquetFiles(Store.latest(spark, dir).dirs(part))
     val before = rows(DedupIndex.checkBatch(batch, "doc_id", "text", dir, 0.5))
     val shinglesBefore = files("shingles")
     DedupIndex.compact(spark, dir)
@@ -115,8 +120,7 @@ class DedupIndexSpec extends AnyFunSuite with SparkSpec {
       == before, "verdicts must be byte-identical across the swap")
     assert(files("shingles") <= 4 && files("shingles") < shinglesBefore,
       s"layout must shrink: ${files("shingles")} vs $shinglesBefore")
-    assert(!new java.io.File(dir).listFiles()
-      .exists(_.getName.contains("compacting")), "no staging leftovers")
+    assert(StoreFiles.unreferenced(spark, dir).isEmpty, "replaced artifacts left")
   }
 
   test("compact REPAIRS a double-appended index (shingle duplication is not harmless)") {
@@ -176,12 +180,12 @@ class DedupIndexSpec extends AnyFunSuite with SparkSpec {
     val after = rows(DedupIndex.checkBatch(batch2, "doc_id", "text", dir, 0.5))
     assert(after == Set((10L, false, None, true)),
       s"the deleted twin must stop matching: $after")
-    val shinglesBefore = spark.read.parquet(s"$dir/shingles").count()
+    val shinglesBefore = table(dir, "shingles").count()
     DedupIndex.compact(spark, dir)
-    assert(spark.read.parquet(s"$dir/shingles").count() < shinglesBefore,
+    assert(table(dir, "shingles").count() < shinglesBefore,
       "compact must physically drop tombstoned shingle rows")
-    assert(spark.read.parquet(s"$dir/fps").where(col("id") === 1L).count() == 0)
-    assert(!new java.io.File(dir, "tombstones").exists,
+    assert(table(dir, "fps").where(col("id") === 1L).count() == 0)
+    assert(!Store.latest(spark, dir).tables.contains("tombstones"),
       "tombstones must clear after compact")
     assert(rows(DedupIndex.checkBatch(batch2, "doc_id", "text", dir, 0.5))
       == after, "verdicts must be stable across the physical drop")
@@ -194,10 +198,13 @@ class DedupIndexSpec extends AnyFunSuite with SparkSpec {
     val novel = Seq((9_000_002L, "zz yy xx ww vv uu tt ss rr qq pp"))
       .toDF("doc_id", "text")
     val novelCheck = DedupIndex.checkBatch(novel, "doc_id", "text", dir, 0.5)
-    val plan = novelCheck.queryExecution.executedPlan.toString
-    assert(!plan.contains("/fps"),
-      s"novel batch must not scan the stored fps table:\n$plan")
-    assert(plan.contains("/shingles"), "sanity: the jaccard side still scans")
+    // the stored tables the plan scans, by artifact directory name
+    val scanned = novelCheck.queryExecution.sparkPlan.collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+        f.relation.location.rootPaths.map(_.getName)
+    }.flatten.toSet
+    assert(!scanned("fps"), s"novel batch must not scan the stored fps table: $scanned")
+    assert(scanned("shingles"), "sanity: the jaccard side still scans")
     assert(rows(novelCheck) == Set((9_000_002L, false, None, true)))
     // overlapping batch: bloom restricts but never changes the verdicts
     val gated = rows(DedupIndex.checkBatch(batch, "doc_id", "text", dir, 0.5))
@@ -233,9 +240,9 @@ class DedupIndexSpec extends AnyFunSuite with SparkSpec {
     val epochDocs = Seq((10L, "fresh words about spark shuffles and joins"))
       .toDF("doc_id", "text")
     def snapshot(): (Set[String], Set[String], Set[String]) = (
-      spark.read.parquet(s"$dir/shingles").collect().map(_.toString).toSet,
-      spark.read.parquet(s"$dir/counts").collect().map(_.toString).toSet,
-      spark.read.parquet(s"$dir/fps").collect().map(_.toString).toSet)
+      table(dir, "shingles").collect().map(_.toString).toSet,
+      table(dir, "counts").collect().map(_.toString).toSet,
+      table(dir, "fps").collect().map(_.toString).toSet)
     graft.streaming.StreamIndexDedup.processEpoch(epochDocs, 0L, "doc_id",
       "text", dir, 0.5, appendKept = true)((_, _) => ())
     val once = snapshot()
@@ -262,7 +269,7 @@ class DedupIndexSpec extends AnyFunSuite with SparkSpec {
 
     def contents(dir: String): (Set[String], Set[String], Set[String]) = {
       def part(p: String): Set[String] =
-        spark.read.parquet(s"$dir/$p").collect().map(_.toString).toSet
+        table(dir, p).collect().map(_.toString).toSet
       (part("shingles"), part("counts"), part("fps"))
     }
     def build(dir: String): Unit =
@@ -279,18 +286,22 @@ class DedupIndexSpec extends AnyFunSuite with SparkSpec {
     }
     assert(refSink == Set(11L), s"sanity: $refSink")
 
-    // crashed run: the append lands, the marker does NOT (the old weak
-    // window) — simulated by driving the append directly
-    val dir = tmp("replay_crash")
+    // crashed run: every artifact of the epoch lands, the manifest that
+    // would publish them and the applied epoch does NOT
+    FaultyFs.register(spark)
+    val dir = FaultyFs.path(tmp("replay_crash"))
     build(dir)
     val kept0 = epochDocs.join(
       DedupIndex.checkBatch(epochDocs, "doc_id", "text", dir, 0.5,
           excludeEpoch = Some(0L))
         .where(col("keep")).select(col("id").as("doc_id"), col("best_jaccard")),
       Seq("doc_id"))
-    DedupIndex.appendEpoch(kept0, "doc_id", "text", dir, 0L)
+    intercept[java.io.IOException] {
+      FaultyFs.run(Some(FaultyFs.ManifestRename -> 1))(
+        DedupIndex.appendEpoch(kept0, "doc_id", "text", dir, 0L))
+    }
     assert(DedupIndex.lastAppliedEpoch(spark, dir).isEmpty,
-      "sanity: the crash left no marker")
+      "sanity: the crash applied nothing")
 
     // the at-least-once replay of the SAME epoch through the real loop
     var replaySink: Set[Long] = null
@@ -333,71 +344,46 @@ class DedupIndexSpec extends AnyFunSuite with SparkSpec {
         sinks += ep -> kept.select("doc_id").collect().map(_.getLong(0)).toSet
         ()
       }
-    def epochDirs(part: String): Set[String] =
-      new java.io.File(dir, part).listFiles()
-        .filter(_.isDirectory).map(_.getName).toSet
+    // the epoch tags of a table's artifacts in the manifest (None: a
+    // build or compaction)
+    def epochs(part: String): Seq[Option[Long]] =
+      Store.latest(spark, dir).tables(part).map(_.epoch)
     run(0L)
-    assert(epochDirs("shingles").contains("epoch=0"))
+    assert(epochs("shingles") == Seq(None, Some(0L)))
     // a batch-sized epoch lands as one file per table, not one per
     // shuffle partition
     Seq("shingles", "counts", "fps").foreach { part =>
-      val files = new java.io.File(dir, s"$part/epoch=0").listFiles()
-        .count(_.getName.endsWith(".parquet"))
+      val files = StoreFiles.parquetFiles(
+        Store.latest(spark, dir).dirs(part).takeRight(1))
       assert(files == 1, s"$part: $files files for one epoch")
     }
-    run(1L) // boundary: (1+1) % 2 == 0 → compact folds everything to base
-    assert(epochDirs("shingles") == Set("epoch=-1"),
-      s"boundary compact must fold the epoch partitions: ${epochDirs("shingles")}")
-    run(2L) // accretes its own partition again
-    assert(epochDirs("shingles") == Set("epoch=-1", "epoch=2"))
+    run(1L) // boundary: (1+1) % 2 == 0 → compact folds every artifact
+    assert(epochs("shingles") == Seq(None),
+      s"boundary compact must fold the epoch artifacts: ${epochs("shingles")}")
+    run(2L) // accretes its own artifact again
+    assert(epochs("shingles") == Seq(None, Some(2L)))
     assert(sinks(0L) == Set(10L) && sinks(1L) == Set(11L) &&
       sinks(2L) == Set(12L), s"sanity: $sinks")
     val probe = Seq((20L, "entirely fresh words about spark shuffles and joins"),
       (21L, "wholly new probe text rows")).toDF("doc_id", "text")
     val verdicts = rows(DedupIndex.checkBatch(probe, "doc_id", "text", dir, 0.5))
-    // replay epoch 0 — STRADDLES the compact: its stamps are folded away,
-    // so the mask can no longer hide its rows; the kept set shrinks (doc
-    // 10 exact-matches its own folded copy) but the INDEX no-ops at the
-    // marker and every later verdict is unchanged — the documented
+    // replay epoch 0 — STRADDLES the compact: its artifacts are folded
+    // away, so the mask can no longer hide its rows; the kept set shrinks
+    // (doc 10 exact-matches its own folded copy) but the INDEX skips the
+    // applied epoch and every later verdict is unchanged — the documented
     // non-transactional-sink replay tolerance
     run(0L)
     assert(sinks(0L).isEmpty,
       s"straddling replay must see its own folded rows: ${sinks(0L)}")
     assert(rows(DedupIndex.checkBatch(probe, "doc_id", "text", dir, 0.5)) ==
       verdicts, "index must be untouched by the straddling replay")
-    assert(epochDirs("shingles") == Set("epoch=-1", "epoch=2"))
+    assert(epochs("shingles") == Seq(None, Some(2L)))
     // replay epoch 2 — NOT folded: the mask sees the pre-epoch state, the
     // sink rows are byte-identical and the index still no-ops
     run(2L)
     assert(sinks(2L) == Set(12L), s"unfolded replay must be byte-identical: ${sinks(2L)}")
     assert(rows(DedupIndex.checkBatch(probe, "doc_id", "text", dir, 0.5)) ==
       verdicts)
-  }
-
-  test("compact refuses while an unmarked epoch is pending; proceeds once " +
-    "the replay (or a manual record) seals it") {
-    import spark.implicits._
-    val dir = tmp("pending")
-    DedupIndex.build(Seq((1L, "the quick brown fox jumps over the lazy dog"))
-      .toDF("doc_id", "text"), "doc_id", "text", dir, n = 3)
-    val batch = Seq((10L, "fresh words about spark shuffles and joins"))
-      .toDF("doc_id", "text")
-    // epoch 3 appended, marker missing (the crash window)
-    DedupIndex.appendEpoch(batch, "doc_id", "text", dir, 3L)
-    val boom = intercept[IllegalStateException] {
-      DedupIndex.compact(spark, dir)
-    }
-    assert(boom.getMessage.contains("epoch 3") &&
-      boom.getMessage.contains("compact refused"), boom.getMessage)
-    // sealing the epoch (what the stream's replay does) unblocks compact
-    DedupIndex.recordAppliedEpoch(spark, dir, 3L)
-    val before = rows(DedupIndex.checkBatch(
-      Seq((20L, "fresh words about spark shuffles and joins"))
-        .toDF("doc_id", "text"), "doc_id", "text", dir, 0.5))
-    DedupIndex.compact(spark, dir)
-    assert(rows(DedupIndex.checkBatch(
-      Seq((20L, "fresh words about spark shuffles and joins"))
-        .toDF("doc_id", "text"), "doc_id", "text", dir, 0.5)) == before)
   }
 
   test("streaming ingest with appendKept: later epochs dedupe against earlier") {

@@ -509,7 +509,7 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSpec {
       m = 16, dim = 64, codebookSize = 16)
     // storage-level equality: the whole codes table matches row for row
     // (implies every possible search over the two indexes matches)
-    def codes(dir: String) = spark.read.parquet(s"$dir/codes")
+    def codes(dir: String) = StoreFiles.rows(spark, Store.latest(spark, dir), "codes")
       .collect().map(r => (r.getAs[Long]("neighbor_id"),
         r.getAs[Long]("centroid_id"), r.getSeq[Int](r.fieldIndex("codes"))))
       .toSet
@@ -545,14 +545,7 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSpec {
       IvfPqIndex.append(
         sfEmb.where(col("vec_id") >= b * 30 && col("vec_id") < (b + 1) * 30),
         "vec_id", "embedding", dir)
-    def files() = {
-      def walk(f: java.io.File): Seq[java.io.File] = {
-        val kids = Option(f.listFiles()).map(_.toSeq).getOrElse(Nil)
-        kids.filter(_.isFile) ++ kids.filter(_.isDirectory).flatMap(walk)
-      }
-      walk(new java.io.File(dir, "codes"))
-        .count(_.getName.endsWith(".parquet"))
-    }
+    def files() = StoreFiles.parquetFiles(Store.latest(spark, dir).dirs("codes"))
     val q = sfEmb.where(col("vec_id") < 10)
     def rows() = IvfPqIndex.search(spark, dir, q, "vec_id", "embedding",
         k = 5, nProbe = 4, rerankDepth = 50, rerank = Some(sfEmb))
@@ -566,8 +559,8 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSpec {
       s"compact must shrink the layout: $filesBefore -> $filesAfter")
     assert(filesAfter <= 16, s"expected ~one file per list, got $filesAfter")
     assert(rows() == before, "compaction changed search results")
-    assert(!new java.io.File(dir, "codes_compacting_root").exists() &&
-      !new java.io.File(dir, "codes_old").exists(), "staging dirs left behind")
+    assert(StoreFiles.unreferenced(spark, dir).isEmpty,
+      "replaced codes artifacts left behind")
   }
 
   test("IvfPqIndex.delete: tombstoned ids never surface; compact drops their rows") {
@@ -592,11 +585,12 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSpec {
     // the freed slots refill: still k rows per query (tombstones drop
     // BEFORE top-k, not after)
     assert(after.groupBy(_._1).forall(_._2.size == 5))
-    val codesBefore = spark.read.parquet(s"$dir/codes").count()
+    def codes() = StoreFiles.rows(spark, Store.latest(spark, dir), "codes")
+    val codesBefore = codes().count()
     IvfPqIndex.compact(spark, dir)
-    assert(spark.read.parquet(s"$dir/codes").count() == codesBefore - 2,
+    assert(codes().count() == codesBefore - 2,
       "compact must physically drop exactly the tombstoned code rows")
-    assert(!new java.io.File(dir, "tombstones").exists(),
+    assert(!Store.latest(spark, dir).tables.contains("tombstones"),
       "tombstones must clear after compact")
     assert(rows() == after, "physical drop must not change served results")
   }
@@ -686,7 +680,7 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSpec {
       k = 5, nProbe = 16, rerank = None)
     assert(after.groupBy("query_id").count().collect()
       .forall(_.getLong(1) == 5L))
-    val codeIds = spark.read.parquet(s"$incDir/codes")
+    val codeIds = StoreFiles.rows(spark, Store.latest(spark, incDir), "codes")
       .select("neighbor_id").collect().map(_.getLong(0)).toSet
     assert(batchIds.subsetOf(codeIds), "appended rows missing from residual index")
   }

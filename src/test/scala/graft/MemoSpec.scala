@@ -4,7 +4,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.CloneSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.AppliedEpochs
 import graft.streaming.{StreamGate, StreamMixture}
 
 class MemoSpec extends AnyFunSuite with SparkSpec {
@@ -35,12 +34,13 @@ class MemoSpec extends AnyFunSuite with SparkSpec {
     def read(s: org.apache.spark.sql.SparkSession): Long =
       Memo.path(p, "v")(s.read.parquet(s"$p/v").head().getLong(0))
     assert(read(spark) == 7L)
-    AppliedEpochs.record(spark, p, 3L)
+    val store = s"$p/store"
+    Store.commit(spark, store)(_.setEpoch(3L))
     for (s <- Seq(spark.newSession(), CloneSession(spark))) {
       var v = 0L
       var applied: Option[Long] = None
       assert(jobsSubmitted {
-        v = read(s); applied = AppliedEpochs.applied(s, p + "/")
+        v = read(s); applied = Store.current(s, store + "/").flatMap(_.epoch)
       } == 0)
       assert(v == 7L && applied == Some(3L))
     }
@@ -61,6 +61,18 @@ class MemoSpec extends AnyFunSuite with SparkSpec {
     assert(builds == 6, "only p's two entries are rebuilt")
   }
 
+  test("invalidate(path) unpersists the persisted frames it drops") {
+    val p = tmp("unpersist")
+    Seq((1L, "a b c d e"), (2L, "f g h i j")).toDF("doc_id", "text")
+      .write.parquet(s"$p/documents.parquet")
+    // the shared shingle frame: a persisted cachedPerDir entry
+    TextSimQueries.sharedShingles(spark, p).count()
+    val before = spark.sparkContext.getPersistentRDDs.size
+    Memo.invalidate(p)
+    assert(spark.sparkContext.getPersistentRDDs.size == before - 1,
+      "the dropped frame is still cached")
+  }
+
   test("applied after record submits no job in StreamGate's and " +
     "StreamMixture's lanes") {
     val batch = Seq((1L, "a", 0.5), (2L, "b", 0.25)).toDF("id", "grp", "q")
@@ -73,7 +85,7 @@ class MemoSpec extends AnyFunSuite with SparkSpec {
     for ((path, last) <- Seq(gate -> 0L, mix -> 1L)) {
       var applied: Option[Long] = None
       assert(jobsSubmitted {
-        applied = AppliedEpochs.applied(CloneSession(spark), path)
+        applied = Store.current(CloneSession(spark), path).flatMap(_.epoch)
       } == 0, path)
       assert(applied == Some(last), path)
     }

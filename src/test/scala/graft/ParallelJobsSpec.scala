@@ -2,12 +2,16 @@ package graft
 
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 
+import org.apache.spark.graftshim.ListenerBusDrain
+import org.apache.spark.scheduler.{JobSucceeded, SparkListener, SparkListenerJobEnd}
+import org.apache.spark.sql.functions.{col, udf}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.ParallelJobs
 
-/** Plain (non-Spark) jobs: the pool's cancel and interrupt contract. */
-class ParallelJobsSpec extends AnyFunSuite {
+/** The pool's cancel and interrupt contract, for plain jobs and for the
+  * Spark jobs a sibling already submitted. */
+class ParallelJobsSpec extends AnyFunSuite with SparkSpec {
 
   /** A job that blocks (bounded, so a regression fails instead of
     * hanging) until interrupted, counting the interrupt down. */
@@ -57,4 +61,50 @@ class ParallelJobsSpec extends AnyFunSuite {
     assert(interrupted.await(10, TimeUnit.SECONDS),
       "the running job was never interrupted")
   }
+
+  test("the first failure cancels the Spark job a sibling already " +
+    "submitted, and that job has ended before run returns") {
+    val sc = spark.sparkContext
+    val ends = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobEnd]
+    val listener = new SparkListener {
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = { ends.add(e); () }
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    SlowRows.started = new CountDownLatch(1)
+    val slow = udf { (x: Long) =>
+      SlowRows.started.countDown(); Thread.sleep(SlowRows.SleepMs); x }
+    val t0 = System.nanoTime()
+    var returnedAt = 0L
+    try {
+      val e = intercept[IllegalStateException] {
+        try ParallelJobs.run(Seq(
+          () => { spark.range(0, 4, 1, 4).select(slow(col("id"))).collect(); () },
+          () => {
+            SlowRows.started.await()
+            throw new IllegalStateException("boom")
+          }))
+        finally returnedAt = System.currentTimeMillis()
+      }
+      assert(e.getMessage == "boom")
+      // Each of the sibling's 4 tasks sleeps 30 s; cancelling it takes
+      // the scheduler milliseconds. A run that waited for the tasks would
+      // take >= 30 s, so half of that tells the two apart on a loaded host.
+      val waitedS = (System.nanoTime() - t0) / 1e9
+      assert(waitedS < SlowRows.SleepMs / 2000.0, s"run took ${waitedS}s")
+      ListenerBusDrain(sc)
+      val sibling = ends.toArray(Array.empty[SparkListenerJobEnd])
+      assert(sibling.length == 1, sibling.toSeq)
+      assert(sibling.head.jobResult != JobSucceeded)
+      assert(sibling.head.time <= returnedAt,
+        s"the sibling's job ended ${sibling.head.time - returnedAt} ms after run returned")
+    } finally sc.removeSparkListener(listener)
+  }
+}
+
+/** The slow UDF's shared state: executor tasks run in this JVM, so they
+  * count down the latch the driver-side job waits on. */
+object SlowRows {
+  val SleepMs = 30000L
+  @volatile var started: CountDownLatch = new CountDownLatch(1)
 }

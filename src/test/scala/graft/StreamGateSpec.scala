@@ -71,11 +71,10 @@ class StreamGateSpec extends AnyFunSuite with SparkSpec {
       TextStats.rankBuckets(all, "grp", col("q"), fracs))
     assert(fromStore == fromBatch, s"$fromStore vs $fromBatch")
     val thrBefore = StreamGate.thresholds(spark, path, 0.5).collect().toSet
-    val filesBefore = new java.io.File(s"$path/hist")
-      .listFiles().count(_.getName.endsWith(".parquet"))
+    def files() = StoreFiles.parquetFiles(Store.latest(spark, path).dirs("hist"))
+    val filesBefore = files()
     StreamGate.compact(spark, path)
-    val filesAfter = new java.io.File(s"$path/hist")
-      .listFiles().count(_.getName.endsWith(".parquet"))
+    val filesAfter = files()
     assert(filesAfter < filesBefore && filesAfter == 1,
       s"compact must fold shards: $filesBefore -> $filesAfter")
     assert(StreamGate.thresholds(spark, path, 0.5).collect().toSet ==

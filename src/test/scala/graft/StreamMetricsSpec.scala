@@ -73,89 +73,70 @@ class StreamMetricsSpec extends AnyFunSuite with SparkSpec {
       batchGrade(epochs.flatten))
     // boundary compact ran after epochs 1 and 3 → the store is ONE
     // compacted shard (epoch 3 was the last boundary)
-    val files = new java.io.File(s"$dir/hist").listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    assert(files == 1, s"store must be folded at the boundary: $files files")
-    // a replayed folded epoch still no-ops at the (sealed) marker
+    assert(histFiles(dir) == 1,
+      s"store must be folded at the boundary: ${histFiles(dir)} files")
+    // a replayed folded epoch still no-ops at the applied epoch
     val replayed = gradeRow(StreamMetrics.processEpoch(
       epochs(1).toDF("score", "y"), 1L, col("score"), col("y"), dir,
       compactEvery = 2))
     assert(replayed == batchGrade(epochs.flatten), s"$replayed")
   }
 
+  private def histFiles(dir: String): Int =
+    StoreFiles.parquetFiles(Store.latest(spark, dir).dirs("hist"))
+
+  /** Epoch `epoch` of `rows` crashed after its histogram artifact landed
+    * and before its manifest published. */
+  private def crashedEpoch(rows: Seq[(Double, Long)], epoch: Long,
+                           dir: String): Unit =
+    intercept[java.io.IOException] {
+      FaultyFs.run(Some(FaultyFs.ManifestRename -> 1))(
+        StreamMetrics.processEpoch(rows.toDF("score", "y"), epoch,
+          col("score"), col("y"), dir))
+    }
+
   test("crash between hist append and marker + replay never double-counts; " +
     "compact folds shards to O(1) files with the grade unchanged") {
-    val dir = tmp("compact")
+    FaultyFs.register(spark)
+    val dir = FaultyFs.path(tmp("compact"))
     val e1 = Seq((0.9, 1L), (0.2, 0L), (0.7, 1L))
     val e2 = Seq((0.4, 0L), (0.95, 1L), (0.7, 0L))
     StreamMetrics.processEpoch(e1.toDF("score", "y"), 0L,
       col("score"), col("y"), dir)
-    // simulate the crash window: epoch 1's hist append commits but the
-    // applied_epochs marker never lands
-    Metrics.scoreHistogram(e2.toDF("score", "y"), col("score"), col("y"))
-      .withColumn("epoch", lit(1L))
-      .write.mode("append").parquet(s"$dir/hist")
-    // the foreachBatch replay re-runs epoch 1: the guard sees no marker
-    // and appends AGAIN — the epoch stamp must make that a read-time no-op
+    // the crash window: epoch 1's hist artifact lands, the manifest that
+    // would publish it and its applied epoch does not
+    crashedEpoch(e2, 1L, dir)
+    assert(gradeRow(StreamMetrics.grade(spark, dir)) == batchGrade(e1))
+    // the foreachBatch replay re-runs epoch 1: it applies exactly once
     val g = gradeRow(StreamMetrics.processEpoch(
       e2.toDF("score", "y"), 1L, col("score"), col("y"), dir))
     assert(g == batchGrade(e1 ++ e2), s"$g")
     // compact: grade unchanged, shard fan-out collapses to one file
     StreamMetrics.compact(spark, dir)
     assert(gradeRow(StreamMetrics.grade(spark, dir)) == batchGrade(e1 ++ e2))
-    val files = new java.io.File(s"$dir/hist").listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    assert(files == 1, s"$files parquet files after compact")
-    // a replayed epoch AFTER compaction still no-ops at the marker guard
+    assert(histFiles(dir) == 1, s"${histFiles(dir)} parquet files after compact")
+    // a replayed epoch AFTER compaction still no-ops at the applied epoch
     val replayed = gradeRow(StreamMetrics.processEpoch(
       e2.toDF("score", "y"), 1L, col("score"), col("y"), dir))
     assert(replayed == batchGrade(e1 ++ e2), s"$replayed")
   }
 
-  test("compact inside the crash window SEALS the pending epoch: the later " +
-    "replay no-ops instead of double-counting under a fresh stamp") {
-    val dir = tmp("seal")
+  test("compact after a crashed epoch keeps the epoch unapplied: the " +
+    "later replay applies it exactly once") {
+    FaultyFs.register(spark)
+    val dir = FaultyFs.path(tmp("seal"))
     val e1 = Seq((0.9, 1L), (0.2, 0L))
     val e2 = Seq((0.4, 0L), (0.95, 1L))
     StreamMetrics.processEpoch(e1.toDF("score", "y"), 0L,
       col("score"), col("y"), dir)
-    // crash window: epoch 1's hist rows land, the marker does NOT
-    Metrics.scoreHistogram(e2.toDF("score", "y"), col("score"), col("y"))
-      .withColumn("epoch", lit(1L))
-      .write.mode("append").parquet(s"$dir/hist")
-    // compact runs BEFORE the replay (the round-11 hole: folding epoch
-    // 1's stamp away would let the replay re-append as a non-duplicate)
+    crashedEpoch(e2, 1L, dir)
+    // compact runs BEFORE the replay: it folds only what was published
     StreamMetrics.compact(spark, dir)
-    assert(gradeRow(StreamMetrics.grade(spark, dir)) == batchGrade(e1 ++ e2))
-    // the foreachBatch replay of epoch 1 must now no-op at the sealed
-    // marker — NOT re-append under its real stamp
+    assert(gradeRow(StreamMetrics.grade(spark, dir)) == batchGrade(e1))
     val replayed = gradeRow(StreamMetrics.processEpoch(
       e2.toDF("score", "y"), 1L, col("score"), col("y"), dir))
     assert(replayed == batchGrade(e1 ++ e2),
       s"post-compact replay double-counted: $replayed")
     assert(gradeRow(StreamMetrics.grade(spark, dir)) == batchGrade(e1 ++ e2))
-  }
-
-  test("pre-stamp store (no epoch column) reads, grades and compacts: " +
-    "every legacy row kept, including same-score rows from two epochs") {
-    val dir = tmp("legacy")
-    val e1 = Seq((0.7, 1L), (0.2, 0L))
-    val e2 = Seq((0.7, 1L), (0.2, 0L)) // identical shape: the collapse trap
-    // simulate a store written before the epoch stamp existed: two
-    // separate appends, no epoch column anywhere
-    Metrics.scoreHistogram(e1.toDF("score", "y"), col("score"), col("y"))
-      .write.mode("append").parquet(s"$dir/hist")
-    Metrics.scoreHistogram(e2.toDF("score", "y"), col("score"), col("y"))
-      .write.mode("append").parquet(s"$dir/hist")
-    // a constant backfill would collapse the two identical epochs; the
-    // unique placeholder must keep both (old merge-everything behavior)
-    assert(gradeRow(StreamMetrics.grade(spark, dir)) == batchGrade(e1 ++ e2))
-    StreamMetrics.compact(spark, dir)
-    assert(gradeRow(StreamMetrics.grade(spark, dir)) == batchGrade(e1 ++ e2))
-    // and the store keeps working with stamped appends after migration
-    val e3 = Seq((0.5, 1L))
-    val g = gradeRow(StreamMetrics.processEpoch(e3.toDF("score", "y"), 9L,
-      col("score"), col("y"), dir))
-    assert(g == batchGrade(e1 ++ e2 ++ e3), s"$g")
   }
 }

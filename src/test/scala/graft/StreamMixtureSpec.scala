@@ -44,7 +44,7 @@ class StreamMixtureSpec extends AnyFunSuite with SparkSpec {
     // domain C entered at epoch 2 and must be in the final trajectory
     assert(rowsOf(StreamMixture.weights(spark, path, rounds = 4))
       .exists(_(1) == "C"))
-    // crash-replay of an old epoch: exact-duplicate rows, trajectory fixed
+    // replay of an applied epoch: a no-op, trajectory fixed
     val before = rowsOf(StreamMixture.weights(spark, path, rounds = 4))
     StreamMixture.processEpoch(mk(epochs(1)), 1L, "dom", "id", col("x"),
       rounds = 4, path = path)
@@ -52,8 +52,7 @@ class StreamMixtureSpec extends AnyFunSuite with SparkSpec {
       "replayed epoch must no-op")
     // compact folds the shards and changes nothing
     StreamMixture.compact(spark, path)
-    val files = new java.io.File(s"$path/stats")
-      .listFiles().count(_.getName.endsWith(".parquet"))
+    val files = StoreFiles.parquetFiles(Store.latest(spark, path).dirs("stats"))
     assert(files == 1, s"compact must fold to one shard: $files")
     assert(rowsOf(StreamMixture.weights(spark, path, rounds = 4)) == before,
       "compact must not move the trajectory")
