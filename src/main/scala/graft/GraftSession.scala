@@ -33,8 +33,17 @@ object GraftSession {
     *   - the codegen settings of [[codegenReuse]]. A caller that adds
     *     per-session artifacts (jars, files, classes) should not apply
     *     this builder as is: it turns artifact isolation off.
+    *   - the physical plan rules of [[graft.plans.GraftPlans.extensions]],
+    *     kept by every `newSession()`: [[graft.plans.SmallSortExchange]]
+    *     sorts an input estimated at or below the advisory partition size
+    *     in one partition, skipping the range exchange's sampling job and
+    *     its second evaluation of the sort's input. The threshold is the
+    *     advisory size because `parallelismFirst=false` coalesces such a
+    *     shuffle into one partition anyway, so the result's partitioning
+    *     does not change.
     */
   def recommended(b: SparkSession.Builder): SparkSession.Builder = codegenReuse(b)
+    .withExtensions(graft.plans.GraftPlans.extensions)
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
@@ -86,13 +95,16 @@ object GraftSession {
     * production caller would own instead — `local[cpus]` master with
     * `shuffle.partitions = cpus` (the driver's scaling contract:
     * $SPARK_GRAFT_CPUS governs both), the legacy nanos flag for the
-    * older testdata generation's TIMESTAMP(NANOS) parquet, and no UI. */
-  def local(cpus: String): SparkSession = {
+    * older testdata generation's TIMESTAMP(NANOS) parquet, and no UI.
+    * `extra` settings go on top (the test session adds its warehouse
+    * dir). */
+  def local(cpus: String, extra: (String, String)*): SparkSession = {
     val spark = recommended(SparkSession.builder()
         .master(s"local[$cpus]")
         .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false"))
+        .config("spark.ui.enabled", "false")
+        .config(extra.toMap))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.plans.GraftPlans.install(spark)

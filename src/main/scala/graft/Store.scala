@@ -6,6 +6,7 @@ import java.util.UUID
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.json4s.{DefaultFormats, Formats}
 import org.json4s.jackson.Serialization
 
@@ -21,7 +22,7 @@ import org.json4s.jackson.Serialization
   * `path/_manifest/<n>` (n = the previous version + 1). The manifest
   * holds the commit id, the highest stream epoch applied (if any), a few
   * scalar meta values, and for each table its artifact directories, each
-  * tagged with the stream epoch that wrote it. A crash anywhere before
+  * tagged with the stream epoch that wrote it, and the table's schema. A crash anywhere before
   * the rename leaves the previous manifest in force, so a reader sees the
   * old version or the new one, never a mix. After the rename the writer
   * deletes the older manifests and every attempt directory the new
@@ -29,7 +30,9 @@ import org.json4s.jackson.Serialization
   * replaced, and those of crashed attempts.
   *
   * Readers resolve the latest manifest with one listing and one small
-  * file read, never a Spark job. Memos of a store's artifacts are keyed
+  * file read, never a Spark job, and read each table with the schema the
+  * manifest records, so no read infers one from the parquet footers (a
+  * Spark job per read). Memos of a store's artifacts are keyed
   * by the artifact's directory, which embeds the commit id that wrote it
   * ([[Memo]]), so a store rewritten by another process, deleted and
   * rebuilt, or replaced by a file copy cannot serve a stale memo.
@@ -49,10 +52,14 @@ private[graft] object Store {
     * the stream epoch that wrote it (None: a batch write). */
   final case class Artifact(dir: String, epoch: Option[Long])
 
-  /** One published version of the store at `root`. */
+  /** One published version of the store at `root`. `schemas` holds each
+    * table's schema as JSON, as a read of its artifacts yields it, and
+    * `partitionBy` the partition columns of a partitioned table. */
   final case class Manifest(root: String, version: Long, commitId: String,
                             epoch: Option[Long], meta: Map[String, String],
-                            tables: Map[String, Seq[Artifact]]) {
+                            tables: Map[String, Seq[Artifact]],
+                            schemas: Map[String, String] = Map.empty,
+                            partitionBy: Map[String, Seq[String]] = Map.empty) {
 
     /** The absolute directories of `table`, minus those `excludeEpoch`
       * wrote. */
@@ -61,11 +68,22 @@ private[graft] object Store {
         .filter(a => excludeEpoch.isEmpty || a.epoch != excludeEpoch)
         .map(a => s"$root/${a.dir}")
 
-    /** `table` as one frame; None when it has no artifact. */
+    /** The recorded schema of `table`; a manifest written before schemas
+      * were recorded has none, and its reads infer one. */
+    def schema(table: String): Option[StructType] =
+      schemas.get(table).map(DataType.fromJson(_).asInstanceOf[StructType])
+
+    /** `table` as one frame; None when it has no artifact. A partitioned
+      * table is read one scan per artifact, since Spark infers partitions
+      * under one base directory per scan; a filter on a partition column
+      * prunes every scan of the union. */
     def readIfAny(spark: SparkSession, table: String,
                   excludeEpoch: Option[Long] = None): Option[DataFrame] = {
       val ds = dirs(table, excludeEpoch)
-      Option.when(ds.nonEmpty)(spark.read.parquet(ds: _*))
+      val reader = schema(table).fold(spark.read)(spark.read.schema)
+      Option.when(ds.nonEmpty)(
+        if (partitionBy.contains(table)) ds.map(reader.parquet(_)).reduce(_ union _)
+        else reader.parquet(ds: _*))
     }
 
     def read(spark: SparkSession, table: String,
@@ -93,25 +111,39 @@ private[graft] object Store {
       * just wrote. */
     def state: Manifest = synchronized(next)
 
-    private def fresh(table: String, keep: Boolean, epoch: Option[Long]): String =
-      synchronized {
+    /** Writes `rows` as parquet into a fresh artifact directory of
+      * `table` and records the schema a read of it yields: partition
+      * columns last. */
+    private def write(table: String, rows: DataFrame, keep: Boolean,
+                      epoch: Option[Long], partitionBy: Seq[String]): Unit = {
+      val schema = StructType(rows.schema.filterNot(f => partitionBy.contains(f.name)) ++
+        partitionBy.map(rows.schema(_)))
+      val dir = synchronized {
         val a = Artifact(s"$Data/${start.commitId}/$table", epoch)
-        next = next.copy(tables = next.tables.updated(table,
-          (if (keep) next.tables.getOrElse(table, Nil) else Nil) :+ a))
+        next = next.copy(
+          tables = next.tables.updated(table,
+            (if (keep) next.tables.getOrElse(table, Nil) else Nil) :+ a),
+          schemas = next.schemas.updated(table, schema.json),
+          partitionBy = if (partitionBy.isEmpty) next.partitionBy - table
+            else next.partitionBy.updated(table, partitionBy))
         s"${start.root}/${a.dir}"
       }
+      rows.write.partitionBy(partitionBy: _*).parquet(dir)
+    }
 
-    /** A new artifact joining `table`'s, tagged `epoch`; returns the
-      * directory to write it to. */
-    def add(table: String, epoch: Option[Long] = None): String =
-      fresh(table, keep = true, epoch)
+    /** Write `rows` as a new artifact joining `table`'s, tagged `epoch`. */
+    def add(table: String, rows: DataFrame, epoch: Option[Long] = None,
+            partitionBy: Seq[String] = Nil): Unit =
+      write(table, rows, keep = true, epoch, partitionBy)
 
-    /** A new artifact replacing all of `table`'s; returns the directory
-      * to write it to. */
-    def replace(table: String): String = fresh(table, keep = false, None)
+    /** Write `rows` as a new artifact replacing all of `table`'s. */
+    def replace(table: String, rows: DataFrame,
+                partitionBy: Seq[String] = Nil): Unit =
+      write(table, rows, keep = false, None, partitionBy)
 
     def drop(table: String): Unit = synchronized {
-      next = next.copy(tables = next.tables - table)
+      next = next.copy(tables = next.tables - table,
+        schemas = next.schemas - table, partitionBy = next.partitionBy - table)
     }
 
     def setMeta(key: String, value: Any): Unit = synchronized {
@@ -183,7 +215,8 @@ private[graft] object Store {
     val empty = Manifest(root.toString, base.fold(0L)(_.version + 1),
       UUID.randomUUID().toString, None, Map.empty, Map.empty)
     val c = new Commit(base, (if (fresh) None else base).fold(empty)(b =>
-      empty.copy(epoch = b.epoch, meta = b.meta, tables = b.tables)))
+      empty.copy(epoch = b.epoch, meta = b.meta, tables = b.tables,
+        schemas = b.schemas, partitionBy = b.partitionBy)))
     write(c)
     val m = c.state
     val manifests = new Path(root, Manifests)
@@ -207,7 +240,7 @@ private[graft] object Store {
   def add(path: String, table: String)(rows: DataFrame): Unit =
     commit(rows.sparkSession, path) { c =>
       c.existing // fails when there is no store to add to
-      rows.write.parquet(c.add(table))
+      c.add(table, rows)
     }
 
   /** Commit stream epoch `epoch` (`write` plus the applied mark, in one
@@ -230,8 +263,7 @@ private[graft] object Store {
                       epoch: Long, compactEvery: Int)(rows: => DataFrame)
                      (merge: DataFrame => DataFrame): Unit = {
     require(compactEvery >= 0, s"compactEvery must be >= 0: $compactEvery")
-    if (appendEpoch(spark, path, epoch)(c =>
-          rows.write.parquet(c.add(table, Some(epoch)))) &&
+    if (appendEpoch(spark, path, epoch)(c => c.add(table, rows, Some(epoch))) &&
         compactEvery > 0 && (epoch + 1) % compactEvery == 0)
       compact(spark, path, table)(merge)
   }
@@ -242,6 +274,6 @@ private[graft] object Store {
   def compact(spark: SparkSession, path: String, table: String)
              (merge: DataFrame => DataFrame): Unit =
     commit(spark, path) { c =>
-      merge(c.existing.read(spark, table)).coalesce(1).write.parquet(c.replace(table))
+      c.replace(table, merge(c.existing.read(spark, table)).coalesce(1))
     }
 }

@@ -1,16 +1,20 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnBridge
+import org.apache.spark.sql.types.{BooleanType, DataType}
 import org.apache.spark.sql.{Column, DataFrame, Encoder}
 
 /** Bloom filter over md5-double-hashed keys — the semi-join reducer for
   * incremental batch-vs-corpus dedup at 100 TB: build one filter over
   * the corpus fingerprints (a single pass, element-wise-OR partial
   * aggregation — one numBits/8-byte buffer per partition crosses the
-  * exchange), broadcast it by literal, and drop the batch rows that
-  * cannot match BEFORE the dedup shuffle join. No false negatives ever
+  * exchange), hand it to the probe expression by reference, and drop the
+  * batch rows that cannot match BEFORE the dedup shuffle join. No false negatives ever
   * (a set bit is never cleared), so correctness of the downstream join
   * is untouched; false positives only cost wasted join work, bounded by
   * the classic (1 − e^(−kn/m))^k rate.
@@ -87,20 +91,58 @@ object Bloom {
   }
 
   /** Membership test column: true iff ALL of the filter's hash bits are
-    * set; false for a null key (a null was never inserted). Pure
-    * codegen'd builtins over the literal word array — map-side, no UDF,
-    * no shuffle. */
-  def mightContain(key: Column, bloom: Filter): Column = {
-    val words = typedlit(bloom.words.toSeq)
-    val k1 = h1(key); val k2 = h2(key)
-    val all = (0 until bloom.numHashes).map { d =>
-      val bucket = (k1 + lit(d.toLong) * k2) % bloom.numBits
-      // word index via shiftright (Column./ is double division); the
-      // variable shift amount needs the SQL builtin via call_function
-      call_function("shiftrightunsigned",
-        element_at(words, shiftright(bucket, 6).cast("int") + 1),
-        (bucket % 64).cast("int")).bitwiseAND(lit(1L)) === lit(1L)
-    }.reduce(_ && _)
-    coalesce(all, lit(false))
+    * set; false for a null key (a null was never inserted). One
+    * codegen'd expression that references the filter words from
+    * generated code ([[BloomProbe]]): map-side, no UDF, no shuffle, and a
+    * plan of the same size at any filter width. */
+  def mightContain(key: Column, bloom: Filter): Column =
+    coalesce(ColumnBridge.column(BloomProbe(ColumnBridge.expression(h1(key)),
+      ColumnBridge.expression(h2(key)), bloom)), lit(false))
+
+  /** Per-row kernel (also the generated code's callee): whether bits
+    * (h1 + d·h2) mod numBits, d < numHashes, are all set in `words`. */
+  def probe(h1: Long, h2: Long, words: Array[Long], numHashes: Int): Boolean = {
+    val numBits = words.length * 64L
+    var d = 0
+    var all = true
+    while (all && d < numHashes) {
+      val bucket = (h1 + d * h2) % numBits
+      all = ((words((bucket >> 6).toInt) >>> (bucket & 63)) & 1L) == 1L
+      d += 1
+    }
+    all
   }
+}
+
+/** The probe of [[Bloom.mightContain]] over the key's (h1, h2) hashes;
+  * null when either is null. Holds the filter words the way [[BpeEncode]]
+  * holds its rank table: generated code references them
+  * (`addReferenceObj`), so neither the plan nor the generated code grows
+  * with the filter, and filters of one hash count share one compiled
+  * class. `eval` serves the interpreted paths (an `exists` lambda). */
+case class BloomProbe(h1: Expression, h2: Expression, bloom: Bloom.Filter)
+    extends BinaryExpression {
+
+  override def left: Expression = h1
+  override def right: Expression = h2
+  override def dataType: DataType = BooleanType
+
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    Bloom.probe(a.asInstanceOf[Long], b.asInstanceOf[Long], bloom.words,
+      bloom.numHashes)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val words = ctx.addReferenceObj("bloomWords", bloom.words, "long[]")
+    defineCodeGen(ctx, ev, (a, b) =>
+      s"graft.functions.Bloom.probe($a, $b, $words, ${bloom.numHashes})")
+  }
+
+  override protected def withNewChildrenInternal(newLeft: Expression,
+                                                 newRight: Expression): BloomProbe =
+    copy(h1 = newLeft, h2 = newRight)
+
+  override def prettyName: String = "bloom_might_contain"
+
+  override def toString: String =
+    s"$prettyName($h1, $h2, ${bloom.numBits} bits, ${bloom.numHashes} hashes)"
 }

@@ -100,19 +100,16 @@ object DedupIndex {
       // a full corpus build still fans out (26 M rows → 25 files)
       val files = math.max(1L,
         (rows.count() + RowsPerFile - 1L) / RowsPerFile).toInt
-      val Seq(shingles, counts, fps) =
-        Seq("shingles", "counts", "fps").map(c.add(_, epoch))
       // the three artifact writes land in DISJOINT directories from
       // independent inputs — overlap them (guide §2.6): the serialized
       // form paid three full job round-trips back to back per
       // build/append/epoch
       ParallelJobs.run(Seq[() => Unit](
-        () => rows.coalesce(files).write.parquet(shingles),
-        () => rows.groupBy("id").agg(count(lit(1)).as("n_sh"))
-          .coalesce(files).write.parquet(counts),
-        () => docs.select(col(idCol).as("id"),
-          TextStats.fingerprint(col(textCol)).as("fp"))
-          .coalesce(files).write.parquet(fps)
+        () => c.add("shingles", rows.coalesce(files), epoch),
+        () => c.add("counts", rows.groupBy("id").agg(count(lit(1)).as("n_sh"))
+          .coalesce(files), epoch),
+        () => c.add("fps", docs.select(col(idCol).as("id"),
+          TextStats.fingerprint(col(textCol)).as("fp")).coalesce(files), epoch)
       ) ++ extraJobs)
     } finally { rows.unpersist(); () }
   }
@@ -129,8 +126,7 @@ object DedupIndex {
   private def writeBloom(spark: SparkSession, c: Store.Commit,
                          f: Bloom.Filter): Unit = {
     import spark.implicits._
-    Seq((f.words.toSeq, f.numHashes)).toDF("words", "num_hashes")
-      .write.parquet(c.replace("bloom"))
+    c.replace("bloom", Seq((f.words.toSeq, f.numHashes)).toDF("words", "num_hashes"))
     c.prime("bloom", f)
   }
 
@@ -283,15 +279,14 @@ object DedupIndex {
       try {
         val files = math.max(1L,
           (deduped.count() + RowsPerFile - 1L) / RowsPerFile).toInt
-        deduped.repartition(files).write.parquet(c.replace("shingles"))
+        c.replace("shingles", deduped.repartition(files))
         // counts derive from the JUST-COMPACTED shingles — one aggregate
         // over the deduplicated table, so a duplicated or tombstoned count
         // row cannot survive
-        c.state.read(spark, "shingles").groupBy("id")
-          .agg(count(lit(1)).as("n_sh")).coalesce(files)
-          .write.parquet(c.replace("counts"))
-        live(old.read(spark, "fps").select("id", "fp")).distinct()
-          .coalesce(files).write.parquet(c.replace("fps"))
+        c.replace("counts", c.state.read(spark, "shingles").groupBy("id")
+          .agg(count(lit(1)).as("n_sh")).coalesce(files))
+        c.replace("fps",
+          live(old.read(spark, "fps").select("id", "fp")).distinct().coalesce(files))
       } finally { deduped.unpersist(); () }
       val stored = readBloom(spark, old)
       writeBloom(spark, c, Bloom.build(c.state.read(spark, "fps"), "fp",

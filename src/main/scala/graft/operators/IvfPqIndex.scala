@@ -42,11 +42,11 @@ object IvfPqIndex {
                                     residual: Boolean)
 
   // Every [[search]]/[[append]] would re-run a `head()` job over the
-  // one-row codebook and re-list the centroids and codes tables, so the
-  // codebook and codes schema sit in graft.Memo's path scope and the
-  // centroids plan in its session scope, each under the directory of the
-  // artifact it mirrors: an append (new codes artifacts only) keeps all
-  // three, a rebuild or compaction moves them on.
+  // one-row codebook and re-list the centroids table, so the codebook
+  // sits in graft.Memo's path scope and the centroids plan in its session
+  // scope, each under the directory of the artifact it mirrors: an append
+  // (new codes artifacts only) keeps both, a rebuild or compaction moves
+  // them on.
   private def readCodebook(spark: SparkSession, ix: Store.Manifest): Codebook =
     Memo.path(ix.root, "codebook", ix.versionOf("codebook")) {
       val r = ix.read(spark, "codebook").head()
@@ -58,20 +58,6 @@ object IvfPqIndex {
   private def readCents(spark: SparkSession, ix: Store.Manifest): DataFrame =
     Memo.session(spark, ix.root, "centroids", ix.versionOf("centroids"))(
       ix.read(spark, "centroids"))
-
-  /** The codes table with `centroid_id` pinned to the centroids table's
-    * type (see [[search]]), one scan per artifact since Spark infers
-    * partitions under ONE base directory per scan; a filter on
-    * `centroid_id` prunes every scan of the union. The column set is
-    * fixed at build, so the first artifact's schema serves them all. */
-  private def readCodes(spark: SparkSession, ix: Store.Manifest): DataFrame = {
-    val centType = readCents(spark, ix).schema("centroid_id").dataType
-    val cs = Memo.path(ix.root, "codes.schema", ix.versionOf("codes"))(
-      org.apache.spark.sql.types.StructType(
-        spark.read.parquet(ix.dirs("codes").head).schema.map(f =>
-          if (f.name == "centroid_id") f.copy(dataType = centType) else f)))
-    ix.dirs("codes").map(spark.read.schema(cs).parquet(_)).reduce(_ union _)
-  }
 
   /** (neighbor_id, cv, cn): the rows' vectors as doubles with their
     * norms; zero vectors have no direction and are skipped. */
@@ -112,9 +98,12 @@ object IvfPqIndex {
     * shuffle moves only the codes, a ~16× reduction of the corpus; a
     * hot list becomes one large file, which the parquet reader splits
     * by maxPartitionBytes anyway. */
-  private def writeCodes(codes: DataFrame, dir: String): Unit =
-    codes.repartition(col("centroid_id"))
-      .write.partitionBy("centroid_id").parquet(dir)
+  private def writeCodes(c: Store.Commit, codes: DataFrame,
+                         replace: Boolean): Unit = {
+    val byList = codes.repartition(col("centroid_id"))
+    if (replace) c.replace("codes", byList, Seq("centroid_id"))
+    else c.add("codes", byList, partitionBy = Seq("centroid_id"))
+  }
 
   /** Train + encode + write the index under `path`. One pass over the
     * corpus (assignment + encode are map-side behind one broadcast of
@@ -151,19 +140,17 @@ object IvfPqIndex {
     val cb = Codebook(m, codebookSize, dim, cbFlat, halfFlat, residual)
     import spark.implicits._
     Store.commit(spark, path, fresh = true) { c =>
-      val Seq(codes, centroids, codebook) =
-        Seq("codes", "centroids", "codebook").map(c.replace)
       // the codes write, the centroids table and the codebook table are
       // independent jobs over materialized/driver-local inputs — overlap
       // them on a driver pool (round-15, guide §2.6); the s-family
       // lifecycles were many such writes back to back
       ParallelJobs.run(Seq(
-        () => writeCodes(encode(corpus, idCol, vecCol, cents, cb,
-          hierarchicalAssign), codes),
-        () => cents.write.parquet(centroids),
-        () => Seq((m, codebookSize, dim, cbFlat.toSeq, halfFlat.toSeq, residual))
-          .toDF("m", "k", "dim", "cb_flat", "half_flat", "residual")
-          .write.parquet(codebook)))
+        () => writeCodes(c, encode(corpus, idCol, vecCol, cents, cb,
+          hierarchicalAssign), replace = true),
+        () => c.replace("centroids", cents),
+        () => c.replace("codebook",
+          Seq((m, codebookSize, dim, cbFlat.toSeq, halfFlat.toSeq, residual))
+            .toDF("m", "k", "dim", "cb_flat", "half_flat", "residual"))))
       c.prime("codebook", cb)
     }
   }
@@ -190,8 +177,8 @@ object IvfPqIndex {
              path: String): Unit =
     Store.commit(batch.sparkSession, path) { c =>
       val spark = batch.sparkSession
-      writeCodes(encode(batch, idCol, vecCol, readCents(spark, c.existing),
-        readCodebook(spark, c.existing)), c.add("codes"))
+      writeCodes(c, encode(batch, idCol, vecCol, readCents(spark, c.existing),
+        readCodebook(spark, c.existing)), replace = false)
     }
 
   /** Mark index entries deleted (takedowns, re-curation — the daily
@@ -219,8 +206,8 @@ object IvfPqIndex {
     * the codes rows are the same rows — only the file layout changes. */
   def compact(spark: SparkSession, path: String): Unit =
     Store.commit(spark, path) { c =>
-      writeCodes(live(spark, c.existing, readCodes(spark, c.existing)),
-        c.replace("codes"))
+      writeCodes(c, live(spark, c.existing, c.existing.read(spark, "codes")),
+        replace = true)
       c.drop("tombstones")
     }
 
@@ -274,11 +261,10 @@ object IvfPqIndex {
     // centroid_id comes back from partition DIRECTORY NAMES, and Spark's
     // partition type inference doesn't round-trip every id type (a
     // zero-padded string "0012" infers as int 12) — which would silently
-    // break both the isin filter and the adcScored join. The centroids
-    // table holds the authoritative type, so readCodes pins the partition
-    // column to it with an explicit read schema (the first read is a
-    // footer-metadata peek for the data columns, no data scan).
-    val pruned = readCodes(spark, index)
+    // break both the isin filter and the adcScored join. The codes table
+    // is read with the schema its write recorded, where centroid_id keeps
+    // the centroids table's type.
+    val pruned = index.read(spark, "codes")
       .where(col("centroid_id").isin(probedLists: _*))
     // tombstoned entries drop BEFORE scoring/top-k, so a delete can
     // never occupy a result slot

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -85,15 +84,5 @@ object NanosTimestampPushdown extends Rule[LogicalPlan] {
         lo <- nsOf(usLit(l).get, 0); hi <- nsOf(usLit(l).get, 999)
       } yield And(GreaterThanOrEqual(ns, lit(lo)),
         LessThanOrEqual(ns, lit(hi))): Expression).getOrElse(e)
-  }
-}
-
-/** Session wiring for graft's custom optimizer rules. */
-object GraftPlans {
-  def install(spark: SparkSession): Unit = {
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    if (!classic.experimental.extraOptimizations.contains(NanosTimestampPushdown))
-      classic.experimental.extraOptimizations =
-        classic.experimental.extraOptimizations :+ NanosTimestampPushdown
   }
 }

@@ -509,7 +509,7 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSpec {
       m = 16, dim = 64, codebookSize = 16)
     // storage-level equality: the whole codes table matches row for row
     // (implies every possible search over the two indexes matches)
-    def codes(dir: String) = StoreFiles.rows(spark, Store.latest(spark, dir), "codes")
+    def codes(dir: String) = Store.latest(spark, dir).read(spark, "codes")
       .collect().map(r => (r.getAs[Long]("neighbor_id"),
         r.getAs[Long]("centroid_id"), r.getSeq[Int](r.fieldIndex("codes"))))
       .toSet
@@ -585,7 +585,7 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSpec {
     // the freed slots refill: still k rows per query (tombstones drop
     // BEFORE top-k, not after)
     assert(after.groupBy(_._1).forall(_._2.size == 5))
-    def codes() = StoreFiles.rows(spark, Store.latest(spark, dir), "codes")
+    def codes() = Store.latest(spark, dir).read(spark, "codes")
     val codesBefore = codes().count()
     IvfPqIndex.compact(spark, dir)
     assert(codes().count() == codesBefore - 2,
@@ -680,7 +680,7 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSpec {
       k = 5, nProbe = 16, rerank = None)
     assert(after.groupBy("query_id").count().collect()
       .forall(_.getLong(1) == 5L))
-    val codeIds = StoreFiles.rows(spark, Store.latest(spark, incDir), "codes")
+    val codeIds = Store.latest(spark, incDir).read(spark, "codes")
       .select("neighbor_id").collect().map(_.getLong(0)).toSet
     assert(batchIds.subsetOf(codeIds), "appended rows missing from residual index")
   }

@@ -7,10 +7,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import scala.jdk.CollectionConverters._
 
-/** Shared local SparkSession for specs (one per suite via lazy val). It
-  * takes the library's codegen settings ([[GraftSession.codegenReuse]]):
-  * the forked test JVM holds one SparkContext, and Spark fixes the codegen
-  * cache size the first time it compiles, so this builder decides it. */
+/** Shared local SparkSession for specs (one per test JVM via lazy val):
+  * [[GraftSession.local]] at 4 cores, so specs run under the settings,
+  * plan rules and codegen cache the harnesses measure. The forked test
+  * JVM holds one SparkContext, and Spark fixes the codegen cache size the
+  * first time it compiles, so this builder decides it. */
 trait SparkSpec { self: AnyFunSuite =>
   lazy val spark: SparkSession = SparkSpec.session
 
@@ -43,19 +44,7 @@ trait SparkSpec { self: AnyFunSuite =>
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = GraftSession.codegenReuse(SparkSession.builder())
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftPlans.install(s)
-    s
-  }
+  lazy val session: SparkSession = GraftSession.local("4",
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft-wh").toString)
 }

@@ -36,7 +36,7 @@ class StoreSpec extends AnyFunSuite with SparkSpec {
   private def snapshot(path: String) =
     Store.current(spark, path).map { m =>
       (m.epoch, m.meta, m.tables.keySet.map(t =>
-        t -> StoreFiles.rows(spark, m, t).collect().map(_.toString).sorted.toSeq
+        t -> m.read(spark, t).collect().map(_.toString).sorted.toSeq
       ).toMap)
     }
 
@@ -161,6 +161,35 @@ class StoreSpec extends AnyFunSuite with SparkSpec {
     assert(search(a) == fromB)
   }
 
+  test("every table of a DedupIndex, IvfPqIndex and StreamMetrics store " +
+    "reads with its recorded schema: no Spark job, the inferred schema") {
+    val dedup = tmp("schema_dedup")
+    DedupIndex.build(docs(1, 2, 3), "doc_id", "text", dedup, n = 3, bloomBits = 1024)
+    DedupIndex.appendEpoch(docs(4), "doc_id", "text", dedup, 0L)
+    DedupIndex.delete(Seq(3L).toDF("doc_id"), "doc_id", dedup)
+    val ivf = tmp("schema_ivf")
+    ivfBuild(ivf, emb.where(col("vec_id") < 200))
+    IvfPqIndex.append(emb.where(col("vec_id").between(200, 219)), "vec_id", "embedding", ivf)
+    IvfPqIndex.delete(emb.where(col("vec_id") < 5), "vec_id", ivf)
+    val metrics = tmp("schema_metrics")
+    feed(metrics, 0); feed(metrics, 1)
+    val tables = for {
+      p <- Seq(dedup, ivf, metrics); m = Store.latest(spark, p); t <- m.tables.keySet.toSeq
+    } yield {
+      var read: DataFrame = null
+      assert(jobsSubmitted { read = m.read(spark, t) } == 0, s"$p: $t")
+      // the codes' partition column is read at the centroids table's type
+      val inferred = m.dirs(t).map(spark.read.parquet(_)).reduce(_ union _).schema.map(f =>
+        if (t == "codes" && f.name == "centroid_id")
+          f.copy(dataType = m.read(spark, "centroids").schema("centroid_id").dataType)
+        else f)
+      assert(read.schema.fields.toSeq == inferred, s"$p: $t")
+      t
+    }
+    assert(tables.toSet == Set("shingles", "counts", "fps", "bloom", "tombstones",
+      "codes", "centroids", "codebook", "hist"))
+  }
+
   test("a path holding files but no manifest is an error naming the path; " +
     "an unpublished attempt reads as no store") {
     val legacy = tmp("legacy")
@@ -180,14 +209,6 @@ class StoreSpec extends AnyFunSuite with SparkSpec {
 
 /** Reads and layout probes over a store's files on the local filesystem. */
 object StoreFiles {
-
-  /** Table `t` of manifest `m`. The IVF-PQ codes artifacts are
-    * partitioned and do not share a base directory, so they are read one
-    * scan per artifact. */
-  def rows(spark: org.apache.spark.sql.SparkSession, m: Store.Manifest,
-           t: String): DataFrame =
-    if (t == "codes") m.dirs(t).map(spark.read.parquet(_)).reduce(_ union _)
-    else m.read(spark, t)
 
   /** The parquet data files under `dirs`. */
   def parquetFiles(dirs: Seq[String]): Int = {
