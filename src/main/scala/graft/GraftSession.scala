@@ -95,16 +95,13 @@ object GraftSession {
     * production caller would own instead — `local[cpus]` master with
     * `shuffle.partitions = cpus` (the driver's scaling contract:
     * $SPARK_GRAFT_CPUS governs both), the legacy nanos flag for the
-    * older testdata generation's TIMESTAMP(NANOS) parquet, and no UI.
-    * `extra` settings go on top (the test session adds its warehouse
-    * dir). */
-  def local(cpus: String, extra: (String, String)*): SparkSession = {
+    * older testdata generation's TIMESTAMP(NANOS) parquet, and no UI. */
+  def local(cpus: String): SparkSession = {
     val spark = recommended(SparkSession.builder()
         .master(s"local[$cpus]")
         .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .config(extra.toMap))
+        .config("spark.ui.enabled", "false"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.plans.GraftPlans.install(spark)

@@ -7,8 +7,8 @@ import java.util.UUID
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
-import org.json4s.{DefaultFormats, Formats}
-import org.json4s.jackson.Serialization
+import org.json4s.{DefaultFormats, Extraction, Formats, JNothing}
+import org.json4s.jackson.{JsonMethods, Serialization}
 
 /** The one commit protocol of every persisted store: [[operators.DedupIndex]],
   * [[operators.IvfPqIndex]] and the StreamMetrics, StreamGate and
@@ -58,8 +58,8 @@ private[graft] object Store {
   final case class Manifest(root: String, version: Long, commitId: String,
                             epoch: Option[Long], meta: Map[String, String],
                             tables: Map[String, Seq[Artifact]],
-                            schemas: Map[String, String] = Map.empty,
-                            partitionBy: Map[String, Seq[String]] = Map.empty) {
+                            schemas: Map[String, String],
+                            partitionBy: Map[String, Seq[String]]) {
 
     /** The absolute directories of `table`, minus those `excludeEpoch`
       * wrote. */
@@ -68,10 +68,9 @@ private[graft] object Store {
         .filter(a => excludeEpoch.isEmpty || a.epoch != excludeEpoch)
         .map(a => s"$root/${a.dir}")
 
-    /** The recorded schema of `table`; a manifest written before schemas
-      * were recorded has none, and its reads infer one. */
-    def schema(table: String): Option[StructType] =
-      schemas.get(table).map(DataType.fromJson(_).asInstanceOf[StructType])
+    /** The schema `table`'s write recorded. */
+    def schema(table: String): StructType =
+      DataType.fromJson(schemas(table)).asInstanceOf[StructType]
 
     /** `table` as one frame; None when it has no artifact. A partitioned
       * table is read one scan per artifact, since Spark infers partitions
@@ -80,7 +79,7 @@ private[graft] object Store {
     def readIfAny(spark: SparkSession, table: String,
                   excludeEpoch: Option[Long] = None): Option[DataFrame] = {
       val ds = dirs(table, excludeEpoch)
-      val reader = schema(table).fold(spark.read)(spark.read.schema)
+      lazy val reader = spark.read.schema(schema(table))
       Option.when(ds.nonEmpty)(
         if (partitionBy.contains(table)) ds.map(reader.parquet(_)).reduce(_ union _)
         else reader.parquet(ds: _*))
@@ -172,7 +171,9 @@ private[graft] object Store {
 
   /** The latest manifest of the store at `path`; None when nothing was
     * ever committed there. A path that holds other files but no manifest
-    * is an error: it is not a store, or one written in an older layout. */
+    * is an error: it is not a store, or one written in an older layout.
+    * So is a manifest that records no table schemas, written before reads
+    * took their schema from the manifest. */
   def current(spark: SparkSession, path: String): Option[Manifest] = {
     val root = new Path(path)
     val f = fs(spark, root)
@@ -182,8 +183,11 @@ private[graft] object Store {
         try {
           val in = f.open(new Path(root, s"$Manifests/$n"))
           val text = try new String(in.readAllBytes(), UTF_8) finally in.close()
-          Some(Serialization.read[Manifest](text).copy(root = root.toString,
-            version = n))
+          val json = JsonMethods.parse(text)
+          if (json \ "schemas" == JNothing) throw new IllegalStateException(
+            s"store $path was written by an older version, which recorded " +
+              "no table schemas: remove it and build it again")
+          Some(Extraction.extract[Manifest](json).copy(root = root.toString, version = n))
         } catch {
           // a newer commit replaced it between the listing and the read
           case _: FileNotFoundException => current(spark, path)
@@ -213,7 +217,7 @@ private[graft] object Store {
     val f = fs(spark, root)
     val base = current(spark, path)
     val empty = Manifest(root.toString, base.fold(0L)(_.version + 1),
-      UUID.randomUUID().toString, None, Map.empty, Map.empty)
+      UUID.randomUUID().toString, None, Map.empty, Map.empty, Map.empty, Map.empty)
     val c = new Commit(base, (if (fresh) None else base).fold(empty)(b =>
       empty.copy(epoch = b.epoch, meta = b.meta, tables = b.tables,
         schemas = b.schemas, partitionBy = b.partitionBy)))

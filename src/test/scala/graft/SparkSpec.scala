@@ -44,7 +44,11 @@ trait SparkSpec { self: AnyFunSuite =>
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = GraftSession.local("4",
-    "spark.sql.warehouse.dir" ->
+  /** Spark reads `spark.*` JVM system properties into every new context's
+    * conf, so the specs' warehouse goes to a temp dir this way. */
+  lazy val session: SparkSession = {
+    System.setProperty("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft-wh").toString)
+    GraftSession.local("4")
+  }
 }

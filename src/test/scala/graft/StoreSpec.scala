@@ -205,6 +205,24 @@ class StoreSpec extends AnyFunSuite with SparkSpec {
     assert(StoreFiles.unreferenced(spark, crashed).isEmpty,
       "the next commit removes the crashed attempt")
   }
+
+  test("a manifest that records no table schemas is an error naming the " +
+    "path, also for a rebuild") {
+    val old = tmp("no_schemas")
+    feed(old, 0)
+    val manifest = new File(FaultyFs.local(old), "_manifest").listFiles()
+      .filter(_.getName.forall(_.isDigit)).head
+    val json = org.json4s.jackson.JsonMethods.parse(
+      FileUtils.readFileToString(manifest, "UTF-8"))
+    FileUtils.writeStringToFile(manifest, org.json4s.jackson.JsonMethods.compact(
+      json.removeField { case (k, _) => k == "schemas" || k == "partitionBy" }), "UTF-8")
+    new File(manifest.getParent, s".${manifest.getName}.crc").delete()
+    for (op <- Seq[() => Any](() => StreamMetrics.grade(spark, old), () => feed(old, 1))) {
+      val e = intercept[IllegalStateException](op())
+      assert(e.getMessage.contains(FaultyFs.local(old)) &&
+        e.getMessage.contains("no table schemas"), e.getMessage)
+    }
+  }
 }
 
 /** Reads and layout probes over a store's files on the local filesystem. */
