@@ -17,7 +17,8 @@ import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.graftshim.BroadcastKeys
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.{ArrayType, MapType, ObjectType}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, ByteType, DataType, DateType,
+  FloatType, IntegerType, MapType, ObjectType, ShortType, StructType, YearMonthIntervalType}
 
 /** Query-stage preparation rule: a global sort whose input is small sorts
   * in one partition.
@@ -46,13 +47,22 @@ import org.apache.spark.sql.types.{ArrayType, MapType, ObjectType}
   *     finished broadcast whose hash relation found each key once (a
   *     dimension table joined on its primary key);
   *   - an `explode` or `inline` of an array its input rows hold (or that
-  *     `split`, `from_json` or `transform` makes of them) emits at most one
-  *     row per input row and byte. Any other node that may emit more rows than it
-  *     reads (a `sequence` exploded, a `flatMap`, a grouped map) has no
-  *     bound, and its sort keeps the range exchange;
+  *     `split`, `from_json`, `transform` or `array` makes of them): n rows
+  *     of b bytes emit at most `n + b / floor` rows, one a row for an
+  *     empty array and one an element, where each element takes at least
+  *     `floor` bytes of the rows. An element of a stored array takes its
+  *     width if that is fixed and under 8 bytes (1, 2 or 4), else 8 (a
+  *     long, a double or an `UnsafeArrayData` offset slot); JSON text the
+  *     rows store, 2 bytes (`1,`); the text `split` cuts, 1. `transform`
+  *     keeps its array's floor, and `from_json` of `to_json` the least
+  *     floor of the arrays it serialized. An `array(...)` of k values
+  *     makes the bound `k·n + b / floor`. Any other node that may emit
+  *     more rows than it reads (a `sequence` exploded, a `flatMap`, a
+  *     grouped map) has no bound, and its sort keeps the range exchange;
   *   - every other node keeps Spark's ratio of its size to its inputs'.
   * Like all of Spark's statistics, the estimate counts a string, array or
-  * map value computed inside the stage at its type's default width.
+  * map value computed inside the stage at its type's default width, and a
+  * file at its size on disk.
   * Row counts are the runtime counts of finished stages where known; a
   * stage still running, or a cached frame not yet filled, is estimated
   * from the plan that computes it. Adaptive execution applies the rule
@@ -89,8 +99,9 @@ object SmallSortExchange extends Rule[SparkPlan] {
         for (l <- rows(j.left); r <- rows(j.right))
           yield (if (oneMatch(j)) l + r else l * r) * (width(j.left) + width(j.right))
     }
-    case g: Generate if stored(g) =>
-      for (b <- size(g.child); n <- rows(g.child)) yield (n + b) * width(g)
+    case g: Generate =>
+      for (e <- elements(g); b <- size(g.child); n <- rows(g.child))
+        yield (n * e.perRow.max(1) + b / e.floor) * width(g)
     case _ if bounded(p) =>
       val ours = p.children.map(size)
       Option.when(ours.forall(_.isDefined)) {
@@ -112,44 +123,86 @@ object SmallSortExchange extends Rule[SparkPlan] {
     case _ => false
   }
 
-  /** Whether `g` explodes an array of at most one element per byte of
-    * its input rows: then it emits at most one row per input row (for an
-    * empty or null array) and byte. Other arrays (a `sequence`, say) are
-    * not bounded by their input. */
-  private def stored(g: Generate): Boolean = g.generator match {
-    case e: ExplodeBase => fromInput(e.child, g.child)
-    case i: Inline => fromInput(i.child, g.child)
-    case _ => false
+  /** A bound on the elements of the arrays in a value, summed over rows:
+    * at most `perRow` elements a row plus one per `floor` bytes the rows
+    * hold. Of two arrays, either may be the one exploded. */
+  private case class Elements(perRow: Int, floor: Int) {
+    def max(o: Elements): Elements = Elements(perRow max o.perRow, floor min o.floor)
   }
 
-  /** Whether every array in `e`, over the rows of `p`, has at most one
-    * element per byte those rows hold: data of the rows, parts of it,
-    * `split` or `from_json` of it, `transform`s of it, and structs and
-    * JSON (`to_json`, as the optimizer rewrites it) built of such values
-    * and scalar literals. An attribute is followed through the
-    * projections and filters that define it; one that another node
-    * outputs is data of the rows. */
-  private def fromInput(e: Expression, p: LogicalPlan): Boolean = (e, p) match {
-    case (a: Attribute, Project(list, child)) =>
-      list.collectFirst { case d: Alias if d.exprId == a.exprId => d.child }
-        .fold(fromInput(a, child))(fromInput(_, child))
-    case (a: Attribute, Filter(_, child)) => fromInput(a, child)
-    case (_: Attribute, _) => true
-    case (l: Literal, _) => l.dataType match {
-      case _: ArrayType | _: MapType => false
-      case _ => true
-    }
-    case (_: ExtractValue | _: Cast, _) => fromInput(e.children.head, p)
-    case (j: JsonToStructs, _) => !j.child.foldable && fromInput(j.child, p)
-    case (StringSplit(str, _, _), _) => !str.foldable && fromInput(str, p)
-    case (t: ArrayTransform, _) => fromInput(t.argument, p)
-    case (_: CreateArray, _) => e.children.forall(c => !c.foldable && fromInput(c, p))
-    case (s: CreateNamedStruct, _) => s.valExprs.forall(fromInput(_, p))
-    case (i: Invoke, _) if i.targetObject.dataType == ToJson => i.arguments.forall(fromInput(_, p))
-    case _ => false
+  /** A value that holds no array. */
+  private val NoArray = Elements(0, Int.MaxValue)
+
+  /** The elements `g` explodes, when its input rows bound them. Other
+    * arrays (a `sequence`, say) have no bound. */
+  private def elements(g: Generate): Option[Elements] = g.generator match {
+    case e: ExplodeBase => elements(e.child, g.child)
+    case i: Inline => elements(i.child, g.child)
+    case _ => None
   }
+
+  /** The elements of the arrays in `e` over the rows of `p`: data of the
+    * rows, parts of it, `split` or `from_json` of it, `transform`s of it,
+    * and arrays and structs built of such values and scalar literals.
+    * None for any other expression. */
+  private def elements(e: Expression, p: LogicalPlan): Option[Elements] = defining(e, p) match {
+    case (a: Attribute, _) => Some(stored(a.dataType))
+    case (l: Literal, _) => Option.when(stored(l.dataType) == NoArray)(NoArray)
+    case (d @ (_: ExtractValue | _: Cast), q) => elements(d.children.head, q)
+    case (j: JsonToStructs, q) => defining(j.child, q) match {
+      case (i: Invoke, r) if i.targetObject.dataType == ToJson => all(i.arguments, r)
+      case (c, r) => text(c, r, floor = 2)
+    }
+    case (StringSplit(str, _, _), q) => text(str, q, floor = 1)
+    case (t: ArrayTransform, q) => elements(t.argument, q)
+    case (a: CreateArray, q) => all(a.children, q).map(_ max Elements(a.children.size, Int.MaxValue))
+    case (s: CreateNamedStruct, q) => all(s.valExprs, q)
+    case _ => None
+  }
+
+  private def all(es: Seq[Expression], p: LogicalPlan): Option[Elements] =
+    es.foldLeft(Option(NoArray))((acc, e) => for (a <- acc; b <- elements(e, p)) yield a max b)
+
+  /** The elements that `split` or `from_json` makes of the text `e`, at
+    * least `floor` bytes of text each; JSON that `to_json` wrote holds
+    * the arrays it serialized, and only those. A literal text has no
+    * bound. */
+  private def text(e: Expression, p: LogicalPlan, floor: Int): Option[Elements] =
+    defining(e, p) match {
+      case (d, _) if d.foldable => None
+      case (d, q) => elements(d, q).map(_ max Elements(0, floor))
+    }
 
   private val ToJson = ObjectType(classOf[StructsToJsonEvaluator])
+
+  /** `e`, or the expression that defines the attribute `e` over the rows
+    * of a plan below `p`, followed through projections and filters; an
+    * attribute that another node outputs is data of its rows. */
+  private def defining(e: Expression, p: LogicalPlan): (Expression, LogicalPlan) = (e, p) match {
+    case (a: Attribute, Project(list, child)) =>
+      defining(list.collectFirst { case d: Alias if d.exprId == a.exprId => d.child }
+        .getOrElse(a), child)
+    case (a: Attribute, Filter(_, child)) => defining(a, child)
+    case _ => (e, p)
+  }
+
+  /** The arrays a stored value of type `dt` holds (a map holds two). */
+  private def stored(dt: DataType): Elements = dt match {
+    case ArrayType(et, _) => Elements(0, elementBytes(et)) max stored(et)
+    case MapType(k, v, _) =>
+      Elements(0, elementBytes(k) min elementBytes(v)) max stored(k) max stored(v)
+    case s: StructType => s.fields.foldLeft(NoArray)((a, f) => a max stored(f.dataType))
+    case _ => NoArray
+  }
+
+  /** The fewest bytes one element of type `et` takes in an
+    * `UnsafeArrayData`: a value narrower than 8 bytes its width, any other
+    * 8 (a long or double, or the offset slot of a variable-width value). */
+  private def elementBytes(et: DataType): Int = et match {
+    case BooleanType | ByteType | ShortType | IntegerType | FloatType | DateType |
+         _: YearMonthIntervalType => et.defaultSize
+    case _ => 8
+  }
 
   /** Whether one side of `j` holds at most one row per join key. */
   private def oneMatch(j: Join): Boolean = j match {

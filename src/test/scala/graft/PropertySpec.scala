@@ -23,11 +23,12 @@ class PropertySpec extends AnyFunSuite with SparkSpec {
 
   test("property: RoundHalfDown == BigDecimal HALF_DOWN on random doubles") {
     val xs = sample(Gen.chooseNum(-1e6, 1e6), 500, seed = 7L)
-    val scales = Seq(0, 1, 2, 3, 6)
+    val scales = Seq(0, 1, 2, 3, 6, 15, 16, 20)
     for (s <- scales; x <- xs) {
       val expect = new java.math.BigDecimal(x)
         .setScale(s, java.math.RoundingMode.HALF_DOWN).doubleValue()
-      assert(Rounding.halfDown(x, s) == expect, s"x=$x scale=$s")
+      assert(java.lang.Double.doubleToRawLongBits(Rounding.halfDown(x, s)) ==
+        java.lang.Double.doubleToRawLongBits(expect), s"x=$x scale=$s")
     }
   }
 

@@ -1,6 +1,11 @@
 package graft
 
+import java.lang.Double.{doubleToRawLongBits, longBitsToDouble}
+
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.BoundReference
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.{RoundHalfDown, Rounding}
@@ -33,6 +38,56 @@ class RoundingSpec extends AnyFunSuite with SparkSpec {
     val got = df.collect().map(_.getDouble(0)).toSeq
     val want = Seq(1.235, Rounding.halfDown(-7.7775, 3), Rounding.halfDown(39.1025, 3))
     assert(got == want)
+  }
+
+  private val scales = Seq(0, 1, 2, 3, 6, 15, 16, 20)
+
+  /** Seeded inputs at every edge of `halfDown`'s fast path: decimal ties
+    * at each scale and their neighbours 1 and 2 ulp away, exact binary
+    * ties, zeros and tiny values, NaN and infinities, products at and
+    * above 2^52, and random bit patterns; each with both signs. */
+  private val hard: Seq[Double] = {
+    val rnd = new scala.util.Random(20261019L)
+    def around(t: Double): Seq[Double] =
+      Seq(t, Math.nextUp(t), Math.nextDown(t), Math.nextUp(Math.nextUp(t)),
+        Math.nextDown(Math.nextDown(t)))
+    val ties = for (s <- scales; p = math.pow(10, s); _ <- 0 until 120;
+                    k <- Seq(rnd.nextInt(1000).toDouble,
+                      rnd.nextInt(1000000).toDouble * 1000 + rnd.nextInt(1000));
+                    x <- around((k + 0.5) / p)) yield x
+    val binary = 0.0625 +: (for (m <- 1 to 12; k <- 0 to 16) yield (2 * k + 1) / math.pow(2, m))
+    val large = for (s <- scales; p = math.pow(10, s); x <- around(4503599627370496.0 / p) ++
+                  around(4503599627370495.5 / p) ++ around(1e17 / p)) yield x
+    val special = Seq(0.0, Double.MinPositiveValue, java.lang.Double.MIN_NORMAL, 1e-20,
+      4e-4, 5e-4, 0.4, 0.5, Double.NaN, Double.PositiveInfinity, 1e300, Double.MaxValue)
+    val bits = Seq.fill(400)(longBitsToDouble(rnd.nextLong()))
+    (ties ++ binary ++ large ++ special ++ bits).flatMap(x => Seq(x, -x))
+  }
+
+  private def sameBits(got: Double, x: Double, s: Int): Unit = {
+    val want = Rounding.withMode(x, s, java.math.RoundingMode.HALF_DOWN)
+    assert(doubleToRawLongBits(got) == doubleToRawLongBits(want),
+      s"x=$x (bits ${doubleToRawLongBits(x)}) scale=$s: got $got, want $want")
+  }
+
+  test("halfDown is bit-identical to BigDecimal HALF_DOWN, interpreted and in codegen") {
+    // a tie rounds toward zero, and a negative that rounds to zero gives +0.0
+    assert(doubleToRawLongBits(Rounding.halfDown(-0.0, 3)) == 0L)
+    assert(doubleToRawLongBits(Rounding.halfDown(-4e-4, 3)) == 0L)
+    assert(Rounding.halfDown(4503599627370495.5, 0) == 4503599627370495.0)
+    // interpreted: `nullSafeEval`, the path ObjectHashAggregate's
+    // collect_list(struct(...)) evaluates
+    for (s <- scales; x <- hard)
+      sameBits(RoundHalfDown(BoundReference(0, DoubleType, nullable = true), s)
+        .eval(InternalRow(x)).asInstanceOf[Double], x, s)
+    // generated code: repartition keeps ConvertToLocalRelation from
+    // evaluating the projection while optimizing
+    val df = hard.toDF("x").repartition(1)
+      .select(col("x") +: scales.map(s => RoundHalfDown(col("x"), s).as(s"r$s")): _*)
+    val rows = df.collect()
+    assert(df.queryExecution.executedPlan.toString.contains("*(1) Project [x"),
+      df.queryExecution.executedPlan.toString)
+    for (r <- rows; (s, i) <- scales.zipWithIndex) sameBits(r.getDouble(i + 1), r.getDouble(0), s)
   }
 
   test("SQL registration works") {
