@@ -2545,7 +2545,7 @@ object TextSimQueries {
   /** One closure per (session, dir): q_d6 rolls the labels up into
     * clusters and q_x7 splits on them — a real pipeline labels once, so
     * the bench session does too. No persist: componentLabels returns an
-    * eagerly localCheckpointed frame (re-scanning it never re-runs the
+    * eagerly checkpointed frame (re-scanning it never re-runs the
     * passes); the registry entry is what stops a second build. */
   private def sharedLabels(s: SparkSession, d: String): DataFrame =
     cachedPerDir(s, d, "labels", persist = false) {

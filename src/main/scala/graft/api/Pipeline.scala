@@ -171,6 +171,10 @@ object Pipeline {
                     textCol: String): DataFrame =
     Dedup.contamination(eval, benchmark, idCol, textCol, n = 3)
 
+  /** Near-dup clusters of `docs` by 3-gram Jaccard. `idCol` may be
+    * `tinyint`, `smallint`, `int`, `bigint` or `string`
+    * ([[Dedup.componentLabels]]); any other type is an
+    * `IllegalArgumentException`. */
   def nearDupClusters(docs: DataFrame, idCol: String, textCol: String,
                       minJaccard: Double = 0.5): DataFrame =
     Dedup.nearDupClusters(

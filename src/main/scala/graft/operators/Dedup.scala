@@ -1,6 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.reflect.ClassTag
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for training-data pipelines: exact,
@@ -876,8 +879,8 @@ object Dedup {
       // so the MEMORY_AND_DISK assignment cache can be released
       // immediately instead of lingering until ContextCleaner GC in
       // long-lived sessions. Executor-local blocks, like componentLabels'
-      // per-pass checkpoints — on dynamic-allocation clusters wrap with a
-      // reliable checkpoint dir.
+      // default (non-`reliable`) output: on dynamic-allocation clusters
+      // checkpoint the result reliably before executors can go away.
       val result = out.localCheckpoint(true)
       assigned.unpersist(false)
       result
@@ -964,243 +967,107 @@ object Dedup {
     * propagation: every vertex starts labeled with its own id; each pass
     * lowers a vertex's label to the minimum among itself and its
     * neighbors; converged labels identify components (label = component's
-    * minimum id = the canonical keeper).
+    * minimum id = the canonical keeper). Output: (id, label) for every id
+    * in a pair, both in the type of `pairs.id_a`.
     *
-    * Scale shape: one symmetric edge table reused across passes; each
-    * pass is a neighbor-min equi-join + map-side-combinable min-aggregate
-    * and a label-merge join — the classic iterate-until-fixpoint on
-    * DataFrames. Labels are EAGERLY `localCheckpoint`ed every pass:
-    * iterative self-referencing lineage otherwise regrows from the source
-    * each pass (each pass references labels twice → measured exponential
-    * per-pass cost, 43 s by pass 5 on 590 pairs; with the checkpoint every
-    * pass is a constant ~2 tiny stages). Superseded checkpoint blocks are
-    * small (two longs per vertex, ≤ maxIters copies) and reclaimed by the
-    * ContextCleaner as references drop; on clusters with dynamic
-    * allocation pass `reliable = true` for HDFS-backed checkpoints —
-    * executor-local blocks do not survive executor loss. Convergence
-    * takes O(component diameter) passes; near-dup clusters are shallow,
-    * so the default cap is generous. The per-pass driver step is one
-    * `count` on changed labels — bounded work, and the loop FAILS LOUDLY
-    * if the cap is hit rather than returning half-propagated labels.
-    * `onPass` (it, changed, seconds) observes each pass (profiling).
+    * Id types: `tinyint`, `smallint`, `int` and `bigint` travel as `Long`
+    * (whose order is the engine's); `string` travels as `UTF8String`, so
+    * `min` is the engine's UTF-8 binary collation. Any other type is an
+    * `IllegalArgumentException` naming it, thrown before any Spark job.
     *
-    * `reliable = true` switches every eager checkpoint to the
-    * HDFS-backed `checkpoint()` (requires
-    * `spark.sparkContext.setCheckpointDir`): executor-local blocks die
-    * with their executor, so clusters running dynamic allocation (or any
-    * long job that must survive executor loss) should pay the
-    * distributed-FS write. Default stays `localCheckpoint` — cheaper,
-    * and fine on static allocations. */
+    * Scale shape: the symmetric edge set is hash-partitioned once and
+    * cached ([[Graph.symmetricEdges]]); labels stay co-partitioned with
+    * it, so a pass is one narrow join, one map-side-combinable min
+    * shuffle and one narrow label merge. The labels' lineage is cut every
+    * pass: a pass reads the labels twice, so uncut lineage regrows from
+    * the source each pass (measured exponential per-pass cost, 43 s by
+    * pass 5 on 590 pairs). The changed-label count rides the cut's job.
+    * Convergence takes O(component diameter) passes; near-dup clusters
+    * are shallow, so the default cap is generous, and the loop FAILS
+    * LOUDLY at the cap rather than returning half-propagated labels.
+    *
+    * `reliable = true` makes every cut AND the returned frame reliable
+    * checkpoints (requires `spark.sparkContext.setCheckpointDir`):
+    * executor-local blocks die with their executor, so clusters running
+    * dynamic allocation (or any long job that must survive executor loss)
+    * should pay the distributed-FS write. Default stays `localCheckpoint`
+    * — cheaper, and fine on static allocations. */
   def componentLabels(pairs: DataFrame, maxIters: Int = 20,
-                      onPass: (Int, Long, Double) => Unit = (_, _, _) => (),
                       reliable: Boolean = false): DataFrame = {
+    import org.apache.spark.sql.types._
+    import org.apache.spark.unsafe.types.UTF8String
+    val idType = pairs.schema("id_a").dataType
+    def frame(rows: RDD[Row], t: DataType): DataFrame =
+      pairs.sparkSession.createDataFrame(rows,
+        StructType(Seq(StructField("id", t), StructField("label", t))))
+    idType match {
+      case ByteType | ShortType | IntegerType | LongType =>
+        val longs = pairs.select(col("id_a").cast(LongType).as("id_a"),
+          col("id_b").cast(LongType).as("id_b"))
+        minLabels(longs, _.getLong(_), Ordering.Long, maxIters, reliable) { l =>
+          frame(l.map { case (id, lab) => Row(id, lab) }, LongType)
+            .select(col("id").cast(idType), col("label").cast(idType))
+        }
+      case StringType =>
+        // UTF8String's compareTo is over the UTF-8 bytes; Java String's
+        // UTF-16 compareTo orders supplementary-plane code points below
+        // U+E000..U+FFFF, the opposite of UTF-8 (pinned by spec)
+        val utf8 = Ordering.fromLessThan[UTF8String](_.compareTo(_) < 0)
+        minLabels(pairs, (r, i) => UTF8String.fromString(r.getString(i)),
+            utf8, maxIters, reliable) { l =>
+          frame(l.map { case (id, lab) => Row(id.toString, lab.toString) },
+            StringType)
+        }
+      case t => throw new IllegalArgumentException(
+        s"componentLabels: unsupported id type ${t.simpleString}; ids must " +
+          "be tinyint, smallint, int, bigint or string")
+    }
+  }
+
+  /** [[componentLabels]]' loop over keys `K` read by `key` and ordered by
+    * `ord`; `out` turns the converged (id, label) pairs into the result
+    * frame. */
+  private def minLabels[K: ClassTag](pairs: DataFrame, key: (Row, Int) => K,
+      ord: Ordering[K], maxIters: Int, reliable: Boolean)(
+      out: RDD[(K, K)] => DataFrame): DataFrame = {
     if (reliable)
       require(pairs.sparkSession.sparkContext.getCheckpointDir.isDefined,
         "reliable componentLabels needs spark.sparkContext.setCheckpointDir")
-    // Round-14: integral ids take the co-partitioned RDD loop (one
-    // narrow join + one shuffle per pass, no per-pass Catalyst planning
-    // — the Graph.pageRankRun rewrite, same measured disease). Gated to
-    // integral types because min-label propagation needs an ordering,
-    // and Long's natural order is exactly Spark's. Round-15 (VERDICT
-    // r14 #8) extends the fast path to STRING ids with a
-    // COLLATION-EXACT ordering: keys travel as UTF8String (Spark's own
-    // string representation — byte-wise equality/hash/compare), so min
-    // over them IS the engine's UTF-8 binary collation, including the
-    // supplementary-plane code points where Java's UTF-16 compareTo
-    // diverges (spec-pinned on such a fixture). Other id types keep the
-    // DataFrame loop whose `min` is the engine's own.
-    pairs.schema("id_a").dataType match {
-      case org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.IntegerType =>
-        return componentLabelsRddLong(pairs, maxIters, onPass, reliable)
-      case org.apache.spark.sql.types.StringType =>
-        return componentLabelsRddUtf8(pairs, maxIters, onPass, reliable)
-      case _ => ()
-    }
-    def ckpt(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(true) else df.localCheckpoint(true)
-    val edges = ckpt(pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .distinct())
-    var labels = ckpt(edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id")))
-    var changed = 1L
-    var it = 0
-    while (changed > 0 && it < maxIters) {
-      val t0 = System.nanoTime()
-      val nbrMin = edges
-        .join(labels.withColumnRenamed("id", "src"), "src")
-        .groupBy(col("dst").as("id")).agg(min("label").as("nlabel"))
-      // the changed-count rides the eager checkpoint job as an observed
-      // metric — one job per pass, not a checkpoint job plus a count job
-      val obs = new org.apache.spark.sql.Observation(s"cc_pass_$it")
-      labels = ckpt(labels
-        .join(nbrMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("label"), col("nlabel")).as("label"), // least skips nulls
-          (col("nlabel").isNotNull && col("nlabel") < col("label")).as("_chg"))
-        .observe(obs,
-          coalesce(sum(when(col("_chg"), 1L).otherwise(0L)), lit(0L)).as("changed")))
-        .drop("_chg")
-      changed = obs.get("changed").asInstanceOf[Long]
-      it += 1
-      onPass(it, changed, (System.nanoTime() - t0) / 1e9)
-    }
-    require(changed == 0,
-      s"componentLabels did not converge within $maxIters passes")
-    labels
-  }
-
-  /** The integral-id fast path of [[componentLabels]]: identical
-    * min-label propagation (labels are ids, min over Long == the
-    * engine's ordering, so the fixed point — and every intermediate
-    * pass — is value-identical to the DataFrame loop), run as a
-    * co-partitioned RDD loop: edges partitioned once and cached, labels
-    * co-partitioned, each pass = narrow join + reduceByKey(min) + left
-    * join, lineage cut by localCheckpoint (or reliable checkpoint), the
-    * changed-count folded in the same materializing action. */
-  private def componentLabelsRddLong(pairs: DataFrame, maxIters: Int,
-                                     onPass: (Int, Long, Double) => Unit,
-                                     reliable: Boolean): DataFrame = {
-    import org.apache.spark.rdd.RDD
-    val spark = pairs.sparkSession
-    val idType = pairs.schema("id_a").dataType
-    val isInt = idType == org.apache.spark.sql.types.IntegerType
-    val edgesDf = pairs
-      .select(col("id_a").cast("long").as("src"), col("id_b").cast("long").as("dst"))
-      .union(pairs
-        .select(col("id_b").cast("long").as("src"), col("id_a").cast("long").as("dst")))
-      .distinct()
-    val edgesRdd0 = edgesDf.rdd.map(r => (r.getLong(0), r.getLong(1)))
-    val part = new org.apache.spark.HashPartitioner(
-      math.max(edgesRdd0.getNumPartitions, 1))
-    val edges = edgesRdd0.partitionBy(part)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def cut[T](rdd: RDD[T]): RDD[T] =
-      if (reliable) { rdd.persist(); rdd.checkpoint(); rdd }
-      else rdd.localCheckpoint()
-    var labels: RDD[(Long, Long)] =
-      cut(edges.keys.distinct(part.numPartitions).map(id => (id, id))
-        .partitionBy(part))
-    labels.count() // materialize the seed so every pass starts cached
-    // every RDD the loop pins (edges, each pass's cut) is released in
-    // the finally below, AFTER the output frame is eagerly materialized —
-    // a long-lived session labeling repeatedly must not accumulate
-    // pinned blocks (round-15, VERDICT r14 #5); superseded iterates are
-    // additionally released per pass instead of waiting for the cleaner
-    var prevCut: RDD[_] = labels
-    try {
+    Graph.loop(reliable) { blocks =>
+      val edges = blocks.pin(Graph.symmetricEdges(pairs, key))
+      val part = edges.partitioner.get
+      // the edges are symmetric and partitioned by src, so a partition's
+      // distinct srcs are exactly its vertices
+      var labels = edges.mapPartitions(_.map(_._1).distinct.map(id => (id, id)),
+        preservesPartitioning = true)
       var changed = 1L
       var it = 0
       while (changed > 0 && it < maxIters) {
-        val t0 = System.nanoTime()
         val nbrMin = edges.join(labels, part)
           .map { case (_, (dst, lab)) => (dst, lab) }
-          .reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
-        val staged = cut(labels.leftOuterJoin(nbrMin, part).mapValues {
-          case (l, Some(n)) => (math.min(l, n), n < l)
+          .reduceByKey(part, ord.min(_, _))
+        val staged = labels.leftOuterJoin(nbrMin, part).mapValues {
+          case (l, Some(n)) => (ord.min(l, n), ord.lt(n, l))
           case (l, None) => (l, false)
-        })
-        changed = staged.aggregate(0L)(
-          (acc, kv) => acc + (if (kv._2._2) 1L else 0L), _ + _)
-        prevCut.unpersist(false)
-        prevCut = staged
+        }
+        changed = blocks.cut(staged)(
+          _.aggregate(0L)((acc, kv) => acc + (if (kv._2._2) 1L else 0L), _ + _))
         labels = staged.mapValues(_._1)
         it += 1
-        onPass(it, changed, (System.nanoTime() - t0) / 1e9)
       }
       require(changed == 0,
         s"componentLabels did not converge within $maxIters passes")
-      import org.apache.spark.sql.Row
-      import org.apache.spark.sql.types.{StructField, StructType}
-      val rows = labels.map { case (id, lab) =>
-        if (isInt) Row(id.toInt, lab.toInt) else Row(id, lab)
-      }
-      spark.createDataFrame(rows, StructType(Seq(
-        StructField("id", idType), StructField("label", idType))))
-        .localCheckpoint(true)
-    } finally {
-      edges.unpersist(false)
-      prevCut.unpersist(false)
-    }
-  }
-
-  /** The string-id fast path of [[componentLabels]] (round-15): the
-    * componentLabelsRddLong loop with UTF8String keys. UTF8String is
-    * Spark's own string representation — hashCode/equals/compareTo are
-    * all over the UTF-8 BYTES — so hash-partitioning, joins, and the
-    * min-label fold reproduce the engine's binary collation exactly
-    * (including the unpaired-surrogate normalization of
-    * UTF8String.fromString, which the DataFrame loop's own scan applies
-    * to every string anyway). Java String keys would NOT be safe:
-    * UTF-16 compareTo orders supplementary-plane code points below
-    * U+E000..U+FFFF, the opposite of UTF-8 — pinned by spec. */
-  private def componentLabelsRddUtf8(pairs: DataFrame, maxIters: Int,
-                                     onPass: (Int, Long, Double) => Unit,
-                                     reliable: Boolean): DataFrame = {
-    import org.apache.spark.rdd.RDD
-    import org.apache.spark.unsafe.types.UTF8String
-    val spark = pairs.sparkSession
-    val edgesDf = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .distinct()
-    val edgesRdd0 = edgesDf.rdd.map(r =>
-      (UTF8String.fromString(r.getString(0)),
-        UTF8String.fromString(r.getString(1))))
-    val part = new org.apache.spark.HashPartitioner(
-      math.max(edgesRdd0.getNumPartitions, 1))
-    val edges = edgesRdd0.partitionBy(part)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def cut[T](rdd: RDD[T]): RDD[T] =
-      if (reliable) { rdd.persist(); rdd.checkpoint(); rdd }
-      else rdd.localCheckpoint()
-    def minU(a: UTF8String, b: UTF8String): UTF8String =
-      if (a.compareTo(b) <= 0) a else b
-    var labels: RDD[(UTF8String, UTF8String)] =
-      cut(edges.keys.distinct(part.numPartitions).map(id => (id, id))
-        .partitionBy(part))
-    labels.count() // materialize the seed so every pass starts cached
-    var prevCut: RDD[_] = labels
-    try {
-      var changed = 1L
-      var it = 0
-      while (changed > 0 && it < maxIters) {
-        val t0 = System.nanoTime()
-        val nbrMin = edges.join(labels, part)
-          .map { case (_, (dst, lab)) => (dst, lab) }
-          .reduceByKey(part, minU(_, _))
-        val staged = cut(labels.leftOuterJoin(nbrMin, part).mapValues {
-          case (l, Some(n)) => (minU(l, n), n.compareTo(l) < 0)
-          case (l, None) => (l, false)
-        })
-        changed = staged.aggregate(0L)(
-          (acc, kv) => acc + (if (kv._2._2) 1L else 0L), _ + _)
-        prevCut.unpersist(false)
-        prevCut = staged
-        labels = staged.mapValues(_._1)
-        it += 1
-        onPass(it, changed, (System.nanoTime() - t0) / 1e9)
-      }
-      require(changed == 0,
-        s"componentLabels did not converge within $maxIters passes")
-      import org.apache.spark.sql.Row
-      import org.apache.spark.sql.types.{StringType, StructField, StructType}
-      val rows = labels.map { case (id, lab) =>
-        Row(id.toString, lab.toString)
-      }
-      spark.createDataFrame(rows, StructType(Seq(
-        StructField("id", StringType), StructField("label", StringType))))
-        .localCheckpoint(true)
-    } finally {
-      edges.unpersist(false)
-      prevCut.unpersist(false)
+      blocks.output(out(labels))
     }
   }
 
   /** Near-dup CLUSTERS from candidate pairs: transitive closure, one row
     * per component with the keeper (= min id), size, and members. The
     * end-to-end dedup step: pairs from any generator (Jaccard, SimHash,
-    * embedding LSH) in, drop-list out (every member except the keeper). */
+    * embedding LSH) in, drop-list out (every member except the keeper).
+    * Ids may be `tinyint`, `smallint`, `int`, `bigint` or `string`, as
+    * for [[componentLabels]]; any other type is an
+    * `IllegalArgumentException`. */
   def nearDupClusters(pairs: DataFrame, maxIters: Int = 20,
                       reliable: Boolean = false): DataFrame =
     clustersFromLabels(componentLabels(pairs, maxIters, reliable = reliable))

@@ -1321,28 +1321,85 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSpec {
     import graft.operators.Graph
     val sc = spark.sparkContext
     def persistedNow(): Set[Int] = sc.getPersistentRDDs.keySet.toSet
+    def leftBy(what: String, bound: Int)(run: => Long, rows: Long): Unit = {
+      val before = persistedNow()
+      assert(run == rows, what)
+      val left = persistedNow() -- before
+      assert(left.size <= bound,
+        s"$what left ${left.size} persisted RDDs beyond its output: " +
+          left.map(id => sc.getPersistentRDDs(id).toString).mkString("; "))
+    }
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L))
       .toDF("id_a", "id_b")
-    // pageRankRun: the loop pins edgesPart + degRdd + boundary
-    // checkpoints; after the call only the eagerly-materialized ranks
-    // output (ONE localCheckpoint) may remain
-    val before1 = persistedNow()
-    val ranks = Graph.pageRankRun(pairs, iters = 8).ranks
-    assert(ranks.count() == 6)
-    val left1 = persistedNow() -- before1
-    assert(left1.size <= 1,
-      s"pageRankRun left ${left1.size} persisted RDDs beyond its output: " +
-        left1.map(id => sc.getPersistentRDDs(id).toString).mkString("; "))
-    // componentLabelsRddLong: edges + per-pass cuts released, only the
-    // materialized labels output may remain
-    val before2 = persistedNow()
-    val labels = Dedup.componentLabels(pairs)
-    assert(labels.count() == 6)
-    val left2 = persistedNow() -- before2
-    assert(left2.size <= 1,
-      s"componentLabels left ${left2.size} persisted RDDs beyond its " +
-        s"output: " +
-        left2.map(id => sc.getPersistentRDDs(id).toString).mkString("; "))
+    // pageRankRun pins the edges with degrees, the degrees and a boundary
+    // cut; only the eagerly-materialized ranks output (ONE
+    // localCheckpoint) may remain
+    leftBy("pageRankRun", 1)(Graph.pageRankRun(pairs, iters = 8).ranks.count(), 6)
+    // componentLabels pins the edges and cuts every pass (four passes on
+    // the 1-2-3-4 chain); only the labels output may remain, on either
+    // key type
+    leftBy("componentLabels", 1)(Dedup.componentLabels(pairs).count(), 6)
+    val strings = pairs.select(col("id_a").cast("string").as("id_a"),
+      col("id_b").cast("string").as("id_b"))
+    leftBy("componentLabels on strings", 1)(
+      Dedup.componentLabels(strings).count(), 6)
+    // reliable: the cuts are persisted too, and the output is a reliable
+    // checkpoint, which persists nothing
+    val ckptDir = java.nio.file.Files.createTempDirectory("graft_ckpt")
+    sc.setCheckpointDir(ckptDir.toString)
+    try leftBy("reliable componentLabels", 0)(
+      Dedup.componentLabels(strings, reliable = true).count(), 6)
+    finally org.apache.commons.io.FileUtils.deleteQuietly(ckptDir.toFile)
+    // getPersistentRDDs holds RDDs weakly, so a leaked cut the GC already
+    // collected is invisible above; on RDDs the test holds, the check is
+    // exact: a cut releases the cut it supersedes, release the rest
+    import org.apache.spark.storage.StorageLevel.NONE
+    val blocks = new Graph.LoopBlocks(reliable = false)
+    val pinned = blocks.pin(sc.parallelize(1 to 4))
+    val cut1 = pinned.map(_ + 1)
+    blocks.cut(cut1)(_.count())
+    val cut2 = cut1.map(_ + 1)
+    blocks.cut(cut2)(_.count())
+    assert(cut1.getStorageLevel == NONE && cut2.getStorageLevel != NONE)
+    blocks.release()
+    assert(pinned.getStorageLevel == NONE && cut2.getStorageLevel == NONE)
+  }
+
+  test("componentLabels(reliable = true) returns a reliable checkpoint: " +
+    "its labels survive the release of every block the call left") {
+    val sc = spark.sparkContext
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L))
+      .toDF("id_a", "id_b")
+    val ckptDir = java.nio.file.Files.createTempDirectory("graft_ckpt")
+    sc.setCheckpointDir(ckptDir.toString)
+    try {
+      val before = sc.getPersistentRDDs.keySet.toSet
+      val labels = Dedup.componentLabels(pairs, reliable = true)
+      // what an executor loss would take: every block the call left
+      (sc.getPersistentRDDs.keySet.toSet -- before)
+        .foreach(id => sc.getPersistentRDDs(id).unpersist(true))
+      assert(labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+        Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L))
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(ckptDir.toFile)
+  }
+
+  test("componentLabels id types: smallint ids give the bigint fixture's " +
+    "labels in smallint; a decimal id is rejected by name before any job") {
+    import org.apache.spark.sql.types.{DecimalType, ShortType}
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L))
+      .toDF("id_a", "id_b")
+    def as(t: org.apache.spark.sql.types.DataType) =
+      pairs.select(col("id_a").cast(t).as("id_a"), col("id_b").cast(t).as("id_b"))
+    val shorts = Dedup.componentLabels(as(ShortType))
+    assert(shorts.schema.map(_.dataType) == Seq(ShortType, ShortType))
+    assert(shorts.collect().map(r => r.getShort(0).toLong -> r.getShort(1).toLong).toMap ==
+      Dedup.componentLabels(pairs).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    val decimals = as(DecimalType(10, 0))
+    var err: IllegalArgumentException = null
+    assert(jobsSubmitted {
+      err = intercept[IllegalArgumentException](Dedup.componentLabels(decimals))
+    } == 0)
+    assert(err.getMessage.contains("decimal(10,0)"), err.getMessage)
   }
 
   test("exactDedupKeepBest: argmax-score keeper, min-id tiebreak, scopes") {

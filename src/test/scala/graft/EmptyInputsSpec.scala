@@ -30,6 +30,9 @@ class EmptyInputsSpec extends AnyFunSuite with SparkSpec {
     val noPairs = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
     assert(Dedup.componentLabels(noPairs).isEmpty)
     assert(Dedup.nearDupClusters(noPairs).isEmpty)
+    assert(Dedup.componentLabels(
+      Seq.empty[(String, String)].toDF("id_a", "id_b")).isEmpty)
+    assert(Graph.pageRank(noPairs).isEmpty)
     assert(Dedup.exactSubstringDedup(noDocs, "doc_id", "text", 10).isEmpty)
     assert(TextStats.gopherQualityFlags(noDocs, "doc_id", "text").isEmpty)
     assert(Fuzzy.blockedEditJoin(noDocs, "doc_id", col("text"),
