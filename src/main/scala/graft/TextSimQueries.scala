@@ -4668,10 +4668,14 @@ object TextSimQueries {
       "features ARRAY<STRUCT<type: STRING, geometry: STRUCT<type: STRING, " +
       "coordinates: ARRAY<DOUBLE>>, properties: STRUCT<ts: STRING>>>"
     def milli(c: Column): Column = round(c * 1000).cast("long")
+    // posexplode_outer, not posexplode: every track holds at least one
+    // feature (one per event of its group), so the rows are the same, but
+    // Spark infers a `size(features) > 0` filter below an inner explode,
+    // and that filter serializes and parses each track a second time
     fc.select(col("event_type"),
         from_json(col("geojson"), schema, Map.empty[String, String]).as("g"))
       .select(col("event_type"), col("g"),
-        posexplode(col("g.features")).as(Seq("pos", "f")))
+        posexplode_outer(col("g.features")).as(Seq("pos", "f")))
       .select(col("event_type"),
         (col("pos") + 1).cast("long").as("pt"),
         milli(element_at(col("f.geometry.coordinates"), 1)).as("lon_milli"),

@@ -31,9 +31,7 @@ object Bloom {
     * h1 IS `Sampling.hash60` (60-bit md5 prefix); h2 is its 56-bit
     * salted sibling. */
   def h1(key: Column): Column = graft.operators.Sampling.hash60(key)
-  def h2(key: Column): Column =
-    conv(substring(md5(concat(key.cast("string"), lit("|b2"))), 1, 14), 16, 10)
-      .cast("long")
+  def h2(key: Column): Column = Md5Prefix(concat(key.cast("string"), lit("|b2")), 14)
 
   /** A built filter: the packed words AND the hash count that set them.
     * Carrying numHashes with the bits makes a build/probe mismatch — the

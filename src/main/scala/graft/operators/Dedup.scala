@@ -6,6 +6,8 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
+import graft.functions.{Md5Prefix, NGrams}
+
 /** Deduplication operators for training-data pipelines: exact,
   * n-gram-Jaccard, MinHash+LSH, SimHash, embedding-cosine near-dup.
   *
@@ -52,28 +54,21 @@ object Dedup {
 
   /** Append a MATERIALIZED words-array column behind a Generate boundary
     * (explode of a one-element array): CollapseProject cannot inline the
-    * tokenizer past a Generate, so downstream per-shingle / per-segment
-    * lambdas consume a computed array instead of re-running the
-    * tokenizer once per element — the cheap, shuffle-free form of the
-    * materialization [[shinglesFromWords]] requires. */
+    * tokenizer past a Generate, so downstream per-segment lambdas, and
+    * several consumers of the same words, read a computed array instead
+    * of re-running the tokenizer once per element or per consumer. */
   def withWords(df: DataFrame, textCol: String, out: String = "_ws"): DataFrame = {
     require(!df.columns.contains(out),
       s"input column '$out' collides with the words output — pass another name")
     df.select(col("*"), explode(array(words(col(textCol)))).as(out))
   }
 
-  /** n-word shingle strings from an ALREADY-MATERIALIZED words-array
-    * column (see [[withWords]]): if `w` is still the raw split/regexp
-    * expression, CollapseProject inlines it into these lambdas and the
-    * tokenization re-executes once per shingle (measured ~25× slowdown
-    * on the inverted-index build). */
+  /** The distinct n-word shingle strings of a words array, in first-
+    * occurrence order: [[graft.functions.NGrams]] then `array_distinct`.
+    * The kernel reads `w` once per row, so `w` may be the raw
+    * [[words]] expression; a null `w` gives an empty array. */
   def shinglesFromWords(w: Column, n: Int): Column =
-    array_distinct(transform(
-      filter(
-        transform(sequence(lit(0), greatest(size(w) - lit(n), lit(0))),
-          i => slice(w, i + lit(1), lit(n))),
-        a => size(a) === lit(n)),
-      a => array_join(a, " ")))
+    coalesce(array_distinct(NGrams(w, n)), typedLit(Seq.empty[String]))
 
   /** Long-form DISTINCT (id, shingle-string) rows (consumed by
     * `TextStats.heavyShingles` and other string-facing passes). Pipelines
@@ -81,13 +76,10 @@ object Dedup {
     * over the same corpus) should tokenize once with `shingleHashRows`,
     * persist, and feed `jaccardPairsFromHashes` / `minhashFromHashes`.
     *
-    * Built entirely from codegen'd operators: posexplode words, window
-    * `lead` to stitch n-word shingles, groupBy-distinct. The array-lambda
-    * formulation (`transform`/`slice`/`array_join`) computes the same set
-    * but higher-order functions evaluate interpreted (CodegenFallback) —
-    * measured ~13s for 5k docs vs ~1s for this path. The window's
-    * partition is the doc id, so per-doc state is tiny and the sort is
-    * within-partition only. */
+    * Built entirely from codegen'd operators: explode the
+    * [[graft.functions.NGrams]] of each doc's words, then groupBy-
+    * distinct. No window and no sort: each row's shingles come from its
+    * own words array. */
   def shingleRows(df: DataFrame, idCol: String, textCol: String,
                   n: Int): DataFrame =
     distinctShingleRows(df, idCol, textCol, n)
@@ -112,32 +104,22 @@ object Dedup {
         (if (portable) Sampling.hash60(col("s")) else xxhash64(col("s"))).as("h"))
       .distinct()
 
-  /** Shared tokenization: NON-distinct (id, shingle-string) rows — the
-    * single source of truth for the posexplode + window-lead stitching
-    * that both the string and hashed shingle forms derive from. A narrow
-    * source is widened BY DOC ID before the explode ([[Widen.widen]]):
-    * the word regex runs parallel and the per-doc window reuses the id
-    * partitioning. */
+  /** Shared tokenization: NON-distinct (id, shingle-string) rows, the
+    * one source both the string and hashed shingle forms derive from. A
+    * narrow source is widened BY DOC ID before the explode
+    * ([[Widen.widen]]), so the word regex runs parallel and the
+    * distinct that follows reuses the id partitioning. */
   private def rawShingleRows(df: DataFrame, idCol: String, textCol: String,
-                             n: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Widen.widen(df, col(idCol)).select(col(idCol).as("id"),
-      posexplode(words(col(textCol))).as(Seq("pos", "w0")))
-    val byDoc = Window.partitionBy("id").orderBy("pos")
-    val parts = (0 until n).map(j =>
-      if (j == 0) col("w0") else lead(col("w0"), j).over(byDoc))
-    w.select(col("id"), concat_ws(" ", parts: _*).as("s"),
-        parts.last.isNotNull.as("_complete"))
-      .where(col("_complete"))
-      .select("id", "s")
-  }
+                             n: Int): DataFrame =
+    Widen.widen(df, col(idCol)).select(col(idCol).as("id"),
+      explode(NGrams(words(col(textCol)), n)).as("s"))
 
   private[operators] def distinctShingleRows(df: DataFrame, idCol: String,
                                              textCol: String, n: Int): DataFrame =
     rawShingleRows(df, idCol, textCol, n).distinct()
 
-  /** Shingles joined to strings (join/hash friendly) straight from text —
-    * convenience for small inputs; prefer `tokenized` in pipelines. */
+  /** The distinct n-word shingle strings of a text column (see
+    * [[shinglesFromWords]]). */
   def shingleStrings(c: Column, n: Int): Column =
     shinglesFromWords(words(c), n)
 
@@ -392,13 +374,9 @@ object Dedup {
     import org.apache.spark.sql.expressions.Window
     require(gramLen > 0, s"gramLen must be positive: $gramLen")
     val ws = filter(words(col(textCol)), w => w =!= lit(""))
-    val grams = docs.select(col(idCol).as("id"), ws.as("ws"))
-      .select(col("id"), posexplode(
-        when(size(col("ws")) >= gramLen,
-          transform(sequence(lit(0), size(col("ws")) - gramLen),
-            i => Sampling.hash60(array_join(
-              slice(col("ws"), i + 1, lit(gramLen)), " "))))
-          .otherwise(typedLit(Seq.empty[Long]))).as(Seq("pos", "gh")))
+    val grams = docs
+      .select(col(idCol).as("id"), posexplode(NGrams(ws, gramLen)).as(Seq("pos", "g")))
+      .select(col("id"), col("pos"), Sampling.hash60(col("g")).as("gh"))
       // ONE shared exchange on gh: the tokenize + per-position hashing
       // subtree above feeds both the first-occurrence aggregate and the
       // join back, and without this Catalyst would run it twice —
@@ -516,8 +494,7 @@ object Dedup {
     * plus a distinct salt. */
   private[operators] def permSeeds(h: Column): (Column, Column) = (
     Sampling.hash60(concat(h.cast("string"), lit("|p1"))),
-    conv(substring(md5(concat(h.cast("string"), lit("|p2"))), 1, 14), 16, 10)
-      .cast("long"))
+    Md5Prefix(concat(h.cast("string"), lit("|p2")), 14))
 
   /** MinHash signatures from precomputed `shingleHashRows` output (match
     * the `portable` flag the rows were built with).

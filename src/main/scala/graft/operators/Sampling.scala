@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.{Md5Prefix, NGrams}
+
 /** Deterministic sampling / splitting for training-data pipelines.
   *
   * Everything here is a PURE FUNCTION of the row's id (via md5), never of
@@ -16,21 +18,22 @@ import org.apache.spark.sql.functions._
   */
 object Sampling {
 
-  /** 24-bit uniform hash in [0, 2^24) from md5(id + "|" + salt). 24 bits
-    * keep the value exactly representable everywhere (no sign/overflow
-    * edge) while giving ~6e-8 fraction granularity. */
+  /** 24-bit uniform hash in [0, 2^24) from md5(id + "|" + salt): the
+    * top 24 bits of the digest ([[graft.functions.Md5Prefix]] at k = 6,
+    * the oracle's `substr(md5(...), 1, 6)`). 24 bits keep the value
+    * exactly representable everywhere (no sign/overflow edge) while
+    * giving ~6e-8 fraction granularity. */
   def hash24(id: Column, salt: String): Column =
-    conv(substring(md5(concat(id.cast("string"), lit("|" + salt))), 1, 6),
-      16, 10).cast("long")
+    Md5Prefix(concat(id.cast("string"), lit("|" + salt)), 6)
 
-  /** 60-bit uniform hash in [0, 2^60) from the first 15 hex chars of
-    * md5 — the engine-portable stand-in for xxhash64 wherever a hash
-    * VALUE must replay bit-for-bit in the DuckDB oracle (MinHash
-    * permutations, SimHash bit sources). 60 bits stay positive in an
-    * int64 on every engine; collision odds at 2^60 are below every
-    * other nondeterminism in the pipeline. */
-  def hash60(c: Column): Column =
-    conv(substring(md5(c.cast("string")), 1, 15), 16, 10).cast("long")
+  /** 60-bit uniform hash in [0, 2^60): the top 60 bits of md5
+    * ([[graft.functions.Md5Prefix]] at k = 15, the oracle's
+    * `substr(md5(...), 1, 15)`) — the engine-portable stand-in for
+    * xxhash64 wherever a hash VALUE must replay bit-for-bit in the
+    * DuckDB oracle (MinHash permutations, SimHash bit sources). 60 bits
+    * stay positive in an int64 on every engine; collision odds at 2^60
+    * are below every other nondeterminism in the pipeline. */
+  def hash60(c: Column): Column = Md5Prefix(c, 15)
 
   private def threshold(fraction: Double): Long = {
     require(fraction >= 0.0 && fraction <= 1.0, "fraction must be in [0,1]")
@@ -590,22 +593,17 @@ object Sampling {
     * feature OCCURRENCE, bucketed by the portable md5 hash so the DuckDB
     * oracle replays the exact assignment. The words array sits behind a
     * Generate boundary (the Dedup.withWords trick) so the regexp
-    * tokenizer runs once per doc, not once per lambda consumer. */
+    * tokenizer runs once per doc, not once for the unigrams and again
+    * for the [[graft.functions.NGrams]] bigrams. */
   private def dsirFeatureRows(df: DataFrame, idCol: String, textCol: String,
                               numBuckets: Int): DataFrame = {
     val base = df.select(col(idCol).as("id"),
       explode(array(filter(Dedup.words(col(textCol)),
         w => w =!= lit("")))).as("_ws"))
-    val bigrams = when(size(col("_ws")) >= 2,
-      transform(sequence(lit(1), size(col("_ws")) - 1),
-        i => concat(element_at(col("_ws"), i), lit(" "),
-          element_at(col("_ws"), i + 1))))
-      .otherwise(array().cast("array<string>"))
     base.select(col("id"),
-        explode(concat(col("_ws"), bigrams)).as("_f"))
+        explode(concat(col("_ws"), NGrams(col("_ws"), 2))).as("_f"))
       .select(col("id"),
-        (conv(substring(md5(concat(col("_f"), lit("|dsir"))), 1, 6), 16, 10)
-          .cast("long") % numBuckets).as("bk"))
+        (Md5Prefix(concat(col("_f"), lit("|dsir")), 6) % numBuckets).as("bk"))
   }
 
   /** DSIR — Data Selection via Importance Resampling (Xie et al.,

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.NGrams
+
 /** Text-analysis operators for large-scale training-data pipelines:
   * token counting, quality scoring, language-ID heuristic, document
   * fingerprinting. All are pure narrow transformations built from
@@ -443,22 +445,18 @@ object TextStats {
     * quality scores. Output: (id, n_words, n_uniq_words, dup_word_frac,
     * top_word_frac, top_bigram_frac).
     *
-    * Scale shape: one posexplode + a within-doc window `lead` for the
-    * bigram stitch (same codegen'd pattern as the shingle pipeline), then
-    * two hash aggregates (word counts, bigram counts) — all map-side
-    * combinable, shuffle ∝ distinct (doc, gram) rows, no pairing. */
+    * Scale shape: one explode of the words and one of their
+    * [[graft.functions.NGrams]] bigrams (the shingle pipeline's codegen'd
+    * kernel, no window), then two hash aggregates (word counts, bigram
+    * counts) — all map-side combinable, shuffle ∝ distinct (doc, gram)
+    * rows, no pairing. */
   def repetitionStats(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val tok = df.select(col(idCol).as("id"),
-      posexplode(Dedup.words(col(textCol))).as(Seq("pos", "w")))
-    val byDoc = Window.partitionBy("id").orderBy("pos")
+    val tok = df.select(col(idCol).as("id"), explode(Dedup.words(col(textCol))).as("w"))
     val wordAgg = tok.groupBy("id", "w").agg(count(lit(1)).as("c"))
       .groupBy("id").agg(sum("c").as("n_words"),
         count(lit(1)).as("n_uniq_words"), max("c").as("top_word_n"))
-    val bigrams = tok
-      .select(col("id"), col("w"), lead(col("w"), 1).over(byDoc).as("w2"))
-      .where(col("w2").isNotNull)
-      .select(col("id"), concat_ws(" ", col("w"), col("w2")).as("bg"))
+    val bigrams = df.select(col(idCol).as("id"),
+      explode(NGrams(Dedup.words(col(textCol)), 2)).as("bg"))
     val bgAgg = bigrams.groupBy("id", "bg").agg(count(lit(1)).as("c"))
       .groupBy("id").agg(sum("c").as("n_bigrams"), max("c").as("top_bigram_n"))
     wordAgg.join(bgAgg, Seq("id"), "left")
@@ -481,9 +479,10 @@ object TextStats {
     * frequent). `minCount` drops the unstable low-support tail before
     * ranking; output is the k strongest by (pmi desc, bigram asc).
     *
-    * Scale shape: one tokenize pass → within-doc `lead` window (the
-    * repetitionStats bigram stitch — per-doc partitions, bounded by doc
-    * length) → ONE (w1, w2) hash aggregate; the marginals are two
+    * Scale shape: one tokenize pass → within-doc `lead` window (per-doc
+    * partitions, bounded by doc length; a window, not
+    * [[graft.functions.NGrams]], because w1 and w2 stay apart) → ONE
+    * (w1, w2) hash aggregate; the marginals are two
     * re-aggregations of that bigram-count frame (rows ∝ distinct
     * bigrams, not occurrences) joined back on the word key. The PMI
     * arithmetic runs in doubles with one fixed operation order
@@ -894,8 +893,8 @@ object TextStats {
   /** (words-array rows, bigram-occurrence rows) behind a Generate
     * boundary (the Dedup.withWords trick): a plain projection would let
     * CollapseProject re-inline the regexp tokenizer into every
-    * element_at/size lambda across the consumers — the measured ~25×
-    * trap Dedup.shinglesFromWords documents. */
+    * element_at/size lambda across the consumers, re-running it once
+    * per bigram. */
   private def lmBigramRows(docs: DataFrame, idCol: String,
                            textCol: String): (DataFrame, DataFrame) = {
     val base = docs.select(col(idCol).as("_lm_id"),

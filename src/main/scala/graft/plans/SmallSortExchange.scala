@@ -20,6 +20,8 @@ import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, BooleanType, ByteType, DataType, DateType,
   FloatType, IntegerType, MapType, ObjectType, ShortType, StructType, YearMonthIntervalType}
 
+import graft.functions.NGrams
+
 /** Query-stage preparation rule: a global sort whose input is small sorts
   * in one partition.
   *
@@ -47,14 +49,15 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, ByteType, DataType, D
   *     finished broadcast whose hash relation found each key once (a
   *     dimension table joined on its primary key);
   *   - an `explode` or `inline` of an array its input rows hold (or that
-  *     `split`, `from_json`, `transform` or `array` makes of them): n rows
-  *     of b bytes emit at most `n + b / floor` rows, one a row for an
-  *     empty array and one an element, where each element takes at least
-  *     `floor` bytes of the rows. An element of a stored array takes its
+  *     `split`, `from_json`, `transform`, `NGrams` or `array` makes of
+  *     them): n rows of b bytes emit at most `n + b / floor` rows, one a
+  *     row for an empty array and one an element, where each element
+  *     takes at least `floor` bytes of the rows. An element of a stored array takes its
   *     width if that is fixed and under 8 bytes (1, 2 or 4), else 8 (a
   *     long, a double or an `UnsafeArrayData` offset slot); JSON text the
   *     rows store, 2 bytes (`1,`); the text `split` cuts, 1. `transform`
-  *     keeps its array's floor, and `from_json` of `to_json` the least
+  *     and `NGrams` keep their array's floor (n-word windows are no more
+  *     than the words), and `from_json` of `to_json` the least
   *     floor of the arrays it serialized. An `array(...)` of k values
   *     makes the bound `k·n + b / floor`. Any other node that may emit
   *     more rows than it reads (a `sequence` exploded, a `flatMap`, a
@@ -143,8 +146,8 @@ object SmallSortExchange extends Rule[SparkPlan] {
 
   /** The elements of the arrays in `e` over the rows of `p`: data of the
     * rows, parts of it, `split` or `from_json` of it, `transform`s of it,
-    * and arrays and structs built of such values and scalar literals.
-    * None for any other expression. */
+    * the n-grams of it (at most one a word), and arrays and structs built
+    * of such values and scalar literals. None for any other expression. */
   private def elements(e: Expression, p: LogicalPlan): Option[Elements] = defining(e, p) match {
     case (a: Attribute, _) => Some(stored(a.dataType))
     case (l: Literal, _) => Option.when(stored(l.dataType) == NoArray)(NoArray)
@@ -155,6 +158,7 @@ object SmallSortExchange extends Rule[SparkPlan] {
     }
     case (StringSplit(str, _, _), q) => text(str, q, floor = 1)
     case (t: ArrayTransform, q) => elements(t.argument, q)
+    case (g: NGrams, q) => elements(g.child, q)
     case (a: CreateArray, q) => all(a.children, q).map(_ max Elements(a.children.size, Int.MaxValue))
     case (s: CreateNamedStruct, q) => all(s.valExprs, q)
     case _ => None

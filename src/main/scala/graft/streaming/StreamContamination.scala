@@ -29,8 +29,7 @@ object StreamContamination {
     * keys first would only add a shuffle. */
   def benchmarkFilter(benchmark: DataFrame, textCol: String, n: Int = 3,
                       numBits: Int = 1 << 20, numHashes: Int = 5): Bloom.Filter = {
-    val sh = Dedup.withWords(benchmark, textCol)
-      .select(explode(Dedup.shinglesFromWords(col("_ws"), n)).as("s"))
+    val sh = benchmark.select(explode(Dedup.shingleStrings(col(textCol), n)).as("s"))
     Bloom.build(sh, "s", numBits, numHashes)
   }
 
@@ -41,11 +40,8 @@ object StreamContamination {
            n: Int = 3): DataFrame = {
     require(!df.columns.contains("contaminated"),
       "input column 'contaminated' collides with the output flag — alias it")
-    Dedup.withWords(df, textCol) // tokenize once per doc, not per shingle
-      .withColumn("contaminated",
-        exists(Dedup.shinglesFromWords(col("_ws"), n),
-          s => Bloom.mightContain(s, filter)))
-      .drop("_ws")
+    df.withColumn("contaminated",
+      exists(Dedup.shingleStrings(col(textCol), n), s => Bloom.mightContain(s, filter)))
   }
 
   /** Compile the benchmark EMBEDDINGS into a driver-side unit-row matrix

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.Store
+import graft.functions.Md5Prefix
 import graft.operators.Sampling
 
 /** Streaming twin of DoReMi-lite domain reweighting
@@ -51,9 +52,8 @@ object StreamMixture {
     val gated = base
       .select(col("domain"), col("_em"),
         explode(sequence(lit(1), lit(rounds))).as("round"))
-      .where(conv(substring(md5(concat(col("_id"), lit("|" + salt),
-          col("round").cast("string"))), 1, 6), 16, 10).cast("long")
-        < thresh)
+      .where(Md5Prefix(concat(col("_id"), lit("|" + salt),
+          col("round").cast("string")), 6) < thresh)
       .groupBy("round", "domain")
       .agg(sum(col("_em")).as("sm"), count(lit(1)).as("n"))
     val universe = base.groupBy("domain")

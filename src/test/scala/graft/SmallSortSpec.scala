@@ -3,13 +3,19 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Expression, JsonToStructs}
+import org.apache.spark.sql.catalyst.expressions.json.StructsToJsonEvaluator
+import org.apache.spark.sql.catalyst.expressions.objects.Invoke
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
-import org.apache.spark.sql.execution.{SparkPlan, TakeOrderedAndProjectExec}
+import org.apache.spark.sql.execution.{FilterExec, SparkPlan, TakeOrderedAndProjectExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, ShuffleExchangeExec,
   ShuffleExchangeLike}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.ObjectType
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.functions.NGrams
 
 /** Pins [[graft.plans.SmallSortExchange]]: a global sort of a small input
   * sorts in one partition, a large one keeps its range exchange, and the
@@ -152,6 +158,44 @@ class SmallSortSpec extends AnyFunSuite with SparkSpec with AdaptiveSparkPlanHel
       assert(sortExchanges(plan).size == kept, s"at $m b:\n$plan")
       assert(rows.map(r => (r.getByte(1), r.getLong(0))) == want)
     }
+  }
+
+  test("an explode of the n-grams of a split text counts one element a " +
+    "word and sorts in one partition") {
+    val dir = Files.createTempDirectory("graft_small_sort_ngrams").toString
+    spark.range(0, 2000).select(col("id"),
+        concat_ws(" ", (0 until 8).map(i => (col("id") * (i + 7) % 97).cast("string")): _*)
+          .as("text"))
+      .write.mode("overwrite").parquet(dir)
+    def grams = spark.read.parquet(dir)
+      .select(col("id"), explode(NGrams(split(col("text"), " "), 3)).as("g"))
+    val (rows, plan) = run(grams.orderBy("g", "id"))
+    assert(sortExchanges(plan).isEmpty, plan.toString)
+    assert(rows.size == 2000 * 6)
+    assert(rows.map(r => (r.getString(1), r.getLong(0))) ==
+      grams.collect().map(r => (r.getString(1), r.getLong(0))).sorted.toSeq)
+  }
+
+  test("q_g1 parses each track once, under no filter, and sorts in one " +
+    "partition at sf0.01") {
+    val sf001 = new java.io.File(new java.io.File(Sf0001).getParentFile, "sf0.01").getPath
+    val df = SparkEntry.queries("q_g1_geojson_tracks")(spark, sf001)
+    val (rows, plan) = run(df)
+    assert(rows.nonEmpty)
+    val nodes = collectWithSubqueries(plan) { case p => p }
+    def count(p: Expression => Boolean) =
+      nodes.flatMap(_.expressions).map(_.collect { case e if p(e) => e }.size).sum
+    assert(count(_.isInstanceOf[JsonToStructs]) == 1, plan.toString)
+    // to_json stays: the query parses the GeoJSON text the sink emits
+    assert(count {
+      case i: Invoke => i.targetObject.dataType == ObjectType(classOf[StructsToJsonEvaluator])
+      case _ => false
+    } == 1, plan.toString)
+    assert(!nodes.exists {
+      case f: FilterExec => f.condition.exists(_.isInstanceOf[JsonToStructs])
+      case _ => false
+    }, plan.toString)
+    assert(sortExchanges(plan).isEmpty, plan.toString)
   }
 
   /** The queries whose sort keeps its range exchange at sf0.001, since

@@ -3,7 +3,7 @@
 
     jfr print --json --events jdk.ExecutionSample,jdk.JVMInformation \\
         --stack-depth 96 rec.jfr \\
-      | python3 tools/jfr_window.py result.json [frame ...]
+      | python3 tools/jfr_window.py [--top N] result.json [frame ...]
 
 `result.json` is the run's record (`.bench_build/perfbench/run/<workload>/`).
 The timed window starts `setup_wall_s` after the JVM started and lasts the
@@ -14,10 +14,19 @@ window and, for each `frame` argument, how many of them hold a frame whose
 matches the Scala object's `SparkPlanInfo$`). In an argument, `a|b` matches
 either name and `a&b` a stack that holds both. The JSON is read as a
 stream: at 96 frames a sample it runs to about 100 KB a sample.
+
+`--top N` also prints, for each thread group, the N frames found in the
+most of its timed-window samples (inclusive counts: a frame counts once
+per sample that holds it anywhere in its stack, as a `frame` argument
+would count it), each with its count and share of the group's samples.
+Frames beyond `--stack-depth` are cut off by `jfr print`, so read deep
+enough for the frames of interest.
 """
+import argparse
 import json
 import re
 import sys
+from collections import Counter
 from datetime import datetime
 
 KEY = re.compile(r'"(\w+)": (.*?),?$')
@@ -74,12 +83,17 @@ def group(thread):
 
 
 def main(argv):
-    if len(argv) < 2:
-        print(__doc__, file=sys.stderr)
-        return 2
-    res = json.load(open(argv[1]))
-    patterns = argv[2:]
+    ap = argparse.ArgumentParser(description=__doc__,
+                                 formatter_class=argparse.RawDescriptionHelpFormatter)
+    ap.add_argument("result", help="the run's result.json")
+    ap.add_argument("frame", nargs="*", help="a frame name to count samples by")
+    ap.add_argument("--top", type=int, default=0, metavar="N",
+                    help="print the N frames in the most samples of each thread group")
+    args = ap.parse_args(argv[1:])
+    res = json.load(open(args.result))
+    patterns = args.frame
     counts = {g: [0] * (1 + len(patterns)) for g in ("executor", "main", "other")}
+    tops = {g: Counter() for g in counts}
     jvm, pending = None, []
     for kind, t, thread, frames in samples(sys.stdin):
         if kind == "jvm":
@@ -94,6 +108,8 @@ def main(argv):
             if lo <= t <= hi:
                 c = counts[group(thread)]
                 c[0] += 1
+                if args.top:
+                    tops[group(thread)].update(set(frames))
                 for i, p in enumerate(patterns):
                     c[i + 1] += all(any(a in f for a in term.split("|") for f in frames)
                                     for term in p.split("&"))
@@ -105,6 +121,8 @@ def main(argv):
         hits = " ".join(f"{p}={n} ({n / c[0]:.0%})" if c[0] else f"{p}=0"
                         for p, n in zip(patterns, c[1:]))
         print(f"{g}: {c[0]} samples in the timed window; {hits}")
+        for f, n in tops[g].most_common(args.top):
+            print(f"  {n:6d} {n / c[0]:4.0%}  {f}")
     return 0
 
 
